@@ -2,17 +2,22 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedInlineTable, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, LateralSubquery, Literal, NamedArgumentExpression, NamedExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Offset, Project, SetOperation, Sort, SubqueryAlias, Union, UnresolvedHint, UnresolvedWith, WithWindowDefinition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The sqlrs-compatible engine surface: an embedded SQL session over Spark.
   *
   * Mirrors the reference's two entry points — v1 `Database::run`
-  * (/root/reference/src/db.rs:107) and v2 `ClientContext::query`
-  * (/root/reference/src/main_entry/client_context.rs:76) — as one `run(sql)`
-  * on top of `spark.sql`, plus the statement surface Spark temp views don't
-  * give us directly:
+  * (src/db.rs:107) and v2 `ClientContext::query`
+  * (src/main_entry/client_context.rs:76) — as one `run(sql)` over Spark's
+  * own parser and analyzer, plus the statement surface Spark temp views
+  * don't give us directly:
   *
   *  - CREATE TABLE (explicit columns, incl. UNSIGNED widening per SURVEY
   *    §1.2) and CTAS (bind_create.rs:13-51)
@@ -29,11 +34,14 @@ import org.apache.spark.sql.types._
   *  - SHOW TABLES / DESCRIBE / EXPLAIN pragmas and the sqlrs_tables() /
   *    sqlrs_columns() introspection TVFs (sqlrs_tables.rs, sqlrs_columns.rs)
   *  - select-list aliases usable in WHERE (bind_select_node.rs:98-131) via
-  *    an analysis-failure-driven rewrite
+  *    an analysis-failure-driven repair of the parsed tree
   *
-  * Every SELECT still goes through Catalyst untouched — the engine adds
-  * statement routing, never its own execution path, so plans stay fully
-  * optimizable and distributed.
+  * Like the reference's binder, table functions bind from the parsed
+  * statement: a SELECT is parsed once by Spark's parser, each table-function
+  * call in the tree (read_*, sqlrs_*, graft_*) is replaced by the analyzed
+  * plan of the DataFrame its body builds, and the expanded tree goes
+  * through Catalyst untouched — the engine adds statement routing, never
+  * its own execution path, so plans stay fully optimizable and distributed.
   */
 class GraftEngine(val spark: SparkSession) {
 
@@ -274,20 +282,8 @@ class GraftEngine(val spark: SparkSession) {
   private val GraftReleaseRe = """(?is)\s*graft_release\s*(?:\(\s*\))?\s*""".r
   private val DescribeRe = """(?is)\s*describe\s+(\w+)\s*""".r
   private val ExplainRe = """(?is)\s*explain\s+(.*)""".r
-  private val ReadCsvCallRe =
-    """(?i)read_csv\s*\(\s*'([^']+)'\s*(?:,\s*([^)]*))?\)""".r
-  private val BareCsvFromRe = """(?i)(from\s+)'([^']+\.csv)'""".r
-  private val ReadParquetCallRe =
-    """(?i)read_parquet\s*\(\s*'([^']+)'\s*\)""".r
-  private val BareParquetFromRe = """(?i)(from\s+)'([^']+\.parquet)'""".r
-  private val ReadJsonCallRe =
-    """(?i)read_json\s*\(\s*'([^']+)'\s*\)""".r
-  private val BareJsonFromRe = """(?i)(from\s+)'([^']+\.jsonl?)'""".r
-  private val GraftTvfRe =
-    """(?i)\bgraft_(topk|dedup_pairs|decontaminate|pagerank|hits|bpe_merges|radius|louvain_levels|louvain|incremental_dedup|incremental_minhash|knn_label|semantic_decon|asof|unigram_lm|unigram_encode|ivf_append|components_index|components|license_propagation|split_leakage|span_excise|index_delete|index_merge|components_delete|byte_bpe_merges|byte_encode|secret_scrub_incremental|secret_scrub|secret_frequencies|retention_expiry|unigram_em|hyperball|harmonic|takedown_audit|curriculum_delete_buffered)\s*\(([^()]*)\)""".r
+  private val BareFileFromRe = """(?i)(from\s+)'([^']+\.(csv|parquet|jsonl?))'""".r
   private val OffsetLimitRe = """(?is)\boffset\s+(\d+)\s+limit\s+(\d+)""".r
-  private val SqlrsTablesCallRe = """(?i)sqlrs_tables\s*\(\s*\)""".r
-  private val SqlrsColumnsCallRe = """(?i)sqlrs_columns\s*\(\s*\)""".r
 
   /** Execute one or more `;`-separated statements; returns the LAST
     * statement's DataFrame (DDL/DML return an empty result, like the
@@ -304,25 +300,15 @@ class GraftEngine(val spark: SparkSession) {
 
   /** Per-character "active code" mask: false inside single-quoted string
     * literals (backslash and doubled-quote escapes), backtick-quoted
-    * identifiers, `--` line comments, and block comments. Every
-    * statement-text scanner below consults this ONE automaton instead of
-    * tracking literal state itself, so escape rules cannot drift between
-    * scanners (a `;` in a comment must not split a statement exactly like
-    * a `;` in a string must not).
+    * identifiers, `--` line comments, and block comments. The few scanners
+    * that still read statement text before Spark's parser does (statement
+    * split, COPY TO, the OFFSET/LIMIT swap, bare `FROM 'file'`, column
+    * lists) consult this ONE automaton instead of tracking literal state
+    * themselves, so escape rules cannot drift between scanners (a `;` in a
+    * comment must not split a statement exactly like a `;` in a string
+    * must not).
     */
-  /** One-entry memo: statement routing calls the scanners up to ~12 times
-    * on the SAME string reference (clause seeks in the alias rewrite), so
-    * reference-equality caching removes the redundant rescans. The engine
-    * is single-threaded per instance (like the mutable catalog map).
-    */
-  private var maskMemo: (String, Array[Boolean]) = ("", Array.empty)
-
   private def codeMask(s: String): Array[Boolean] = {
-    if (maskMemo._1 eq s) maskMemo._2
-    else { val m = computeCodeMask(s); maskMemo = (s, m); m }
-  }
-
-  private def computeCodeMask(s: String): Array[Boolean] = {
     val n = s.length
     val mask = new Array[Boolean](n) // default false
     var i = 0
@@ -430,139 +416,71 @@ class GraftEngine(val spark: SparkSession) {
     case _ => runSelect(sql)
   }
 
-  /** SELECT path: TVF/bare-CSV rewrites, catalog refresh for the
-    * introspection views, then Catalyst; alias-in-WHERE repair on
-    * unresolved-column failures.
+  /** SELECT path. Two text rewrites run first, mask-aware so a phrase
+    * inside a string literal or comment is never touched: the
+    * OFFSET/LIMIT swap, and bare `FROM 'file.{csv,parquet,json[l]}'`
+    * (Spark's parser rejects a string literal as a relation). Then the
+    * statement is parsed ONCE, inside the planning tracker's parsing
+    * phase; the FROM-subquery alias rule is checked on that tree; every
+    * table-function call expands in place ([[expandTableFunctions]]); and
+    * the expanded tree is analyzed under the same tracker. An
+    * unresolved-column failure retries once on the same expanded tree
+    * with select-list aliases substituted into WHERE, so no table-function
+    * body runs twice.
     */
   private def runSelect(sql0: String): DataFrame = {
-    var sql = sql0
-    requireFromSubqueryAlias(sql)
     // sqlparser-rs accepts OFFSET before LIMIT (tests/slt/order.slt:2);
     // Spark's parser requires LIMIT first — swap the clause order
-    // (mask-aware like every other rewrite: the phrase inside a string
-    // literal must not be reordered)
-    sql = maskedReplace(sql, OffsetLimitRe) { m =>
+    val swapped = maskedReplace(sql0, OffsetLimitRe) { m =>
       s"limit ${m.group(2)} offset ${m.group(1)}"
     }
-    if (sql.toLowerCase.contains("sqlrs_tables") ||
-      sql.toLowerCase.contains("sqlrs_columns")) {
-      sqlrsTables().createOrReplaceTempView("sqlrs_tables")
-      sqlrsColumns().createOrReplaceTempView("sqlrs_columns")
-      sql = maskedReplace(sql, SqlrsTablesCallRe)(_ => "sqlrs_tables")
-      sql = maskedReplace(sql, SqlrsColumnsCallRe)(_ => "sqlrs_columns")
+    val sql = maskedReplace(swapped, BareFileFromRe) { m =>
+      m.group(1) + bareFileView(m.group(2), m.group(3))
     }
-    // read_csv('p', named=>args) table function → materialized temp view
-    var idx = 0
-    // per-call scratch views (__read_*/__graft_*): tracked and dropped
-    // once the statement's DataFrame is analyzed — spark.sql resolves
-    // and INLINES temp views at analysis time, so the result does not
-    // reference them afterwards, and a long-lived serving session must
-    // not accumulate one stale view (pinning its eagerly-resolved
-    // DataFrame) per TVF call. The bare-FROM stem views stay: their
-    // names are user-facing (qualified references bind to them).
-    val scratchViews = Seq.newBuilder[String]
-    sql = maskedReplace(sql, ReadCsvCallRe) { m =>
-      val path = m.group(1)
-      val opts = Option(m.group(2)).getOrElse("")
-      val header = """(?i)header\s*=>\s*true""".r.findFirstIn(opts).isDefined ||
-        !opts.toLowerCase.contains("header")
-      val delim = """(?i)delim\s*=>\s*'([^']+)'""".r
-        .findFirstMatchIn(opts).map(_.group(1)).getOrElse(",")
-      idx += 1
-      val view = s"__read_csv_$idx"
-      readCsv(path, header, delim).createOrReplaceTempView(view)
-      scratchViews += view
-      view
+    val tracker = new QueryPlanningTracker
+    val parsed = tracker.measurePhase(QueryPlanningTracker.PARSING) {
+      spark.sessionState.sqlParser.parsePlan(sql)
     }
-    // bare `FROM 'file.csv'` auto-binds to read_csv (defaults: header on).
-    // The relation is named after the file stem so qualified references
-    // work — `select t1.a from 'tests/csv/t1.csv'` binds t1 to the file
-    // (bind_base_table_ref.rs:98-118 does the same).
-    sql = maskedReplace(sql, BareCsvFromRe) { m =>
-      val stem = m.group(2).split("/").last.stripSuffix(".csv")
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
-        else s"csv_$stem"
-      readCsv(m.group(2), header = true, delim = ",").createOrReplaceTempView(view)
-      m.group(1) + view
-    }
-    // read_parquet('p') TVF and bare `FROM 'file.parquet'` — the columnar
-    // twin of the CSV surface above (extension; the reference is CSV-only)
-    sql = maskedReplace(sql, ReadParquetCallRe) { m =>
-      idx += 1
-      val view = s"__read_parquet_$idx"
-      readParquet(m.group(1)).createOrReplaceTempView(view)
-      scratchViews += view
-      view
-    }
-    sql = maskedReplace(sql, BareParquetFromRe) { m =>
-      val stem = m.group(2).split("/").last.stripSuffix(".parquet")
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
-        else s"parquet_$stem"
-      readParquet(m.group(2)).createOrReplaceTempView(view)
-      m.group(1) + view
-    }
-    // read_json('p') TVF and bare `FROM 'file.json[l]'` — the log/event
-    // ingest surface (extension; same rewrite shape as csv/parquet)
-    sql = maskedReplace(sql, ReadJsonCallRe) { m =>
-      idx += 1
-      val view = s"__read_json_$idx"
-      readJson(m.group(1)).createOrReplaceTempView(view)
-      scratchViews += view
-      view
-    }
-    sql = maskedReplace(sql, BareJsonFromRe) { m =>
-      val stem = m.group(2).split("/").last
-        .stripSuffix(".jsonl").stripSuffix(".json")
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
-        else s"json_$stem"
-      readJson(m.group(2)).createOrReplaceTempView(view)
-      m.group(1) + view
-    }
-    // graft_* serving TVFs — the top extension operators surfaced through
-    // the SQL front door the way read_csv/read_parquet are (the reference
-    // is a SQL engine, client_context.rs:76 — a serving operator you can't
-    // reach from SQL isn't part of its user surface). Same rewrite shape:
-    // the call materializes as a temp view over the operator's DataFrame.
-    // ACTIVE-CODE ONLY: graftTvf eagerly resolves tables/paths, so a TVF
-    // mention inside a string literal or comment must pass through
-    // untouched instead of erroring on (or corrupting into) a view name.
-    // FIXPOINT: TVF calls COMPOSE — graft_license_propagation(
-    // graft_components(docs), docs, rank => r) — and the argument regex
-    // is paren-free, so an outer call only becomes matchable after the
-    // pass that rewrites its inner call into a view name; loop until no
-    // call rewrites (bounded: every pass consumes ≥ 1 call or stops).
-    var tvfPrev: String = null
-    while (tvfPrev != sql) {
-      tvfPrev = sql
-      sql = maskedReplace(sql, GraftTvfRe) { m =>
-        idx += 1
-        val view = s"__graft_${m.group(1).toLowerCase}_$idx"
-        graftTvf(m.group(1), m.group(2)).createOrReplaceTempView(view)
-        scratchViews += view
-        view
-      }
-    }
+    requireFromSubqueryAlias(parsed)
+    val expanded = expandTableFunctions(parsed)
     val df =
-      try spark.sql(sql)
+      try GraftSqlBridge.ofRows(spark, expanded, tracker)
       catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNRESOLVED_COLUMN") =>
-          rewriteAliasInWhere(sql).map(spark.sql).getOrElse(throw e)
+        case e: AnalysisException if e.getMessage.contains("UNRESOLVED_COLUMN") =>
+          val repaired = aliasesIntoWhere(expanded)
+          if (repaired fastEquals expanded) throw e
+          GraftSqlBridge.ofRows(spark, repaired, tracker)
       }
-      finally scratchViews.result().foreach(spark.catalog.dropTempView)
     rejectVarcharNumericComparison(df)
     df
   }
 
+  /** Bare `FROM 'file.ext'` auto-binds to the matching reader (CSV with
+    * the read_csv defaults, header on). The relation is a temp view named
+    * after the file stem so qualified references work — `select t1.a from
+    * 'tests/csv/t1.csv'` binds t1 to the file (bind_base_table_ref.rs:98-118
+    * does the same); the stem view is user-facing and stays registered.
+    */
+  private def bareFileView(path: String, ext: String): String = {
+    val kind = if (ext.toLowerCase.startsWith("json")) "json" else ext.toLowerCase
+    val stem = path.split("/").last.dropRight(ext.length + 1)
+      .replaceAll("[^A-Za-z0-9_]", "_")
+    val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
+      else s"${kind}_$stem"
+    val df = kind match {
+      case "csv" => readCsv(path, header = true, delim = ",")
+      case "parquet" => readParquet(path)
+      case _ => readJson(path)
+    }
+    df.createOrReplaceTempView(view)
+    view
+  }
+
   /** Literal/comment-safe regex rewrite: the replacement applies only to
-    * matches STARTING in active code (per [[codeMask]]) — a TVF call or
-    * file path mentioned inside a string literal or a comment passes
-    * through verbatim instead of being eagerly resolved or corrupted
-    * into a view name. Every source rewrite in [[runSelect]] goes
-    * through this one helper so literal-safety cannot drift per rewrite.
+    * matches STARTING in active code (per [[codeMask]]) — a file path
+    * mentioned inside a string literal or a comment passes through
+    * verbatim instead of being eagerly read. Both text rewrites in
+    * [[runSelect]] go through this one helper.
     */
   private def maskedReplace(sql: String, re: scala.util.matching.Regex)(
       f: scala.util.matching.Regex.Match => String): String = {
@@ -572,11 +490,99 @@ class GraftEngine(val spark: SparkSession) {
         if (m.start < mask.length && !mask(m.start)) m.matched else f(m)))
   }
 
+  // ---- table functions ---------------------------------------------------
+
+  /** The source readers and the catalog introspection pair, each with its
+    * body over (positional arguments, `name => value` options); the
+    * graft_* serving TVFs are the keys of [[GraftTvfs]].
+    */
+  private val SourceFunctions
+      : Map[String, (Seq[Expression], Seq[(String, String)]) => DataFrame] = Map(
+    "read_csv" -> { (pos, named) =>
+      val opts = named.toMap
+      readCsv(pathArg("read_csv", pos),
+        header = opts.get("header").forall(_.equalsIgnoreCase("true")),
+        delim = opts.getOrElse("delim", ","))
+    },
+    "read_parquet" -> ((pos, _) => readParquet(pathArg("read_parquet", pos))),
+    "read_json" -> ((pos, _) => readJson(pathArg("read_json", pos))),
+    "sqlrs_tables" -> ((_, _) => sqlrsTables()),
+    "sqlrs_columns" -> ((_, _) => sqlrsColumns()))
+
+  private def isTableFunction(name: Seq[String]): Boolean = name match {
+    case Seq(n) =>
+      val f = n.toLowerCase
+      SourceFunctions.contains(f) ||
+        (f.startsWith("graft_") && GraftTvfs.contains(f.stripPrefix("graft_")))
+    case _ => false
+  }
+
+  /** Replace every table-function call in the parsed tree — FROM items,
+    * subquery expressions and CTE definitions alike — by the analyzed plan
+    * of the DataFrame its body builds. Expansion runs before analysis, so a
+    * body's argument error surfaces as the IllegalArgumentException it
+    * raised, and no temp view is registered for a call. A call inside a
+    * string literal or comment is no node of the tree, so it never runs.
+    */
+  private def expandTableFunctions(plan: LogicalPlan): LogicalPlan =
+    plan.transformUpWithSubqueries {
+      case UnresolvedTableValuedFunction(name, args, _) if isTableFunction(name) =>
+        tableFunction(name.head.toLowerCase, args).queryExecution.analyzed
+      case w: UnresolvedWith =>
+        w.copy(cteRelations = w.cteRelations.map { case (n, q, depth) =>
+          (n, expandTableFunctions(q).asInstanceOf[SubqueryAlias], depth)
+        })
+    }
+
+  /** One table-function call → its DataFrame. Arguments decode once from
+    * the parse tree: each `name => value` becomes option text (a literal's
+    * or foldable expression's value, or a bare name's text), the form the
+    * option readers parse and validate; positional arguments stay
+    * expressions until a body resolves them ([[relationArg]]).
+    */
+  private def tableFunction(fn: String, args: Seq[Expression]): DataFrame = {
+    val (named, pos) = args.partitionMap {
+      case NamedArgumentExpression(k, v) => Left(k.toLowerCase -> optionText(fn, k, v))
+      case e => Right(e)
+    }
+    SourceFunctions.get(fn) match {
+      case Some(body) => body(pos, named)
+      case None => graftTvf(fn.stripPrefix("graft_"), pos, named)
+    }
+  }
+
+  private def optionText(fn: String, key: String, v: Expression): String = v match {
+    case u: UnresolvedAttribute => u.name
+    case e if e.foldable => String.valueOf(e.eval())
+    case other => throw new IllegalArgumentException(
+      s"$fn: option $key needs a literal or a name, got ${other.sql}")
+  }
+
+  private def pathArg(fn: String, pos: Seq[Expression]): String = pos match {
+    case Seq(Literal(p: UTF8String, _)) => p.toString
+    case _ => throw new IllegalArgumentException(
+      s"$fn needs exactly one quoted path argument")
+  }
+
+  /** A relation argument: a quoted parquet path, a catalog table name, or
+    * a nested table-function call, expanded recursively — calls compose:
+    * `graft_license_propagation(graft_components(docs), docs, rank => r)`.
+    */
+  private def relationArg(fn: String, e: Expression): DataFrame = e match {
+    case Literal(p: UTF8String, _) => readParquet(p.toString)
+    case u: UnresolvedAttribute => spark.table(u.name.toLowerCase)
+    case f: UnresolvedFunction if isTableFunction(f.nameParts) =>
+      tableFunction(f.nameParts.head.toLowerCase, f.arguments)
+    case other => throw new IllegalArgumentException(
+      s"$fn: a relation argument is a quoted parquet path, a table name or " +
+        s"a table-function call, got ${other.sql}")
+  }
+
   /** One graft_* serving-TVF call → the operator's DataFrame.
-    * Relation arguments are either a single-quoted parquet path
-    * (`'/data/docs.parquet'`) or a bare table/view name from this
-    * engine's catalog; scalar options use the `name => value` TVF
-    * convention read_csv already follows.
+    * Relation arguments are a single-quoted parquet path
+    * (`'/data/docs.parquet'`), a bare table/view name from this engine's
+    * catalog, or a nested table-function call; scalar options use the
+    * `name => value` TVF convention read_csv already follows.
     *
     *  - `graft_topk(corpus, queries, k => 10)` — exact cosine top-k
     *    over (vec_id, embedding) relations → (query_id, neighbor_id,
@@ -719,8 +725,8 @@ class GraftEngine(val spark: SparkSession) {
     *    the persisted (tok, nd) candidate index, and
     *    `graft_secret_scrub_incremental(drop, index, k => 3, run => 4)`
     *    scrubs an arriving drop against it, combining base and
-    *    within-drop evidence against k — the calls compose through the
-    *    TVF fixpoint.
+    *    within-drop evidence against k — the calls compose as nested
+    *    calls.
     *  - `graft_retention_expiry(docs, policy, as_of => 359)` — the
     *    scheduled delete's input (the x23 retention family): rows of
     *    docs (which must carry `source` and `ingest_day`) whose age at
@@ -763,47 +769,6 @@ class GraftEngine(val spark: SparkSession) {
     * batches to release them (Spark recomputes if a released plan is
     * re-executed, so it is always safe).
     */
-  /** Option keys each graft_* TVF accepts — an unknown key is a caller
-    * typo (`treshold => 0.9`) and must error, not silently default.
-    */
-  private val GraftTvfOptions: Map[String, Set[String]] = Map(
-    "topk" -> Set("k"),
-    "dedup_pairs" -> Set("threshold"),
-    "decontaminate" -> Set("n"),
-    "pagerank" -> Set("iters", "damping", "dangling"),
-    "hits" -> Set("iters"),
-    "bpe_merges" -> Set("rounds"),
-    "radius" -> Set("tau"),
-    "louvain" -> Set.empty,
-    "louvain_levels" -> Set("levels", "moves"),
-    "incremental_dedup" -> Set("num", "den"),
-    "incremental_minhash" -> Set("num", "den"),
-    "knn_label" -> Set("k"),
-    "semantic_decon" -> Set("tau"),
-    "asof" -> Set("key", "ord", "payload", "forward"),
-    "unigram_lm" -> Set("vocab"),
-    "unigram_encode" -> Set("char_cost"),
-    "ivf_append" -> Set.empty,
-    "components" -> Set("n", "threshold"),
-    "components_index" -> Set("n", "threshold"),
-    "license_propagation" -> Set("rank"),
-    "split_leakage" -> Set.empty,
-    "span_excise" -> Set("n", "keep_one"),
-    "index_delete" -> Set("kind", "n", "run"),
-    "index_merge" -> Set("kind", "n", "run", "threshold", "k"),
-    "components_delete" -> Set("n", "threshold"),
-    "byte_bpe_merges" -> Set("rounds"),
-    "byte_encode" -> Set.empty,
-    "secret_scrub" -> Set("k", "run"),
-    "secret_frequencies" -> Set("run"),
-    "secret_scrub_incremental" -> Set("k", "run"),
-    "retention_expiry" -> Set("as_of"),
-    "unigram_em" -> Set("char_cost"),
-    "hyperball" -> Set("dist", "m"),
-    "harmonic" -> Set("dist"),
-    "takedown_audit" -> Set("n", "run"),
-    "curriculum_delete_buffered" -> Set("k"))
-
   /** Per-KIND option subsets for the kind-dispatched lifecycle TVFs
     * (graft_index_delete / graft_index_merge): the TVF-level option set
     * is the union over kinds, so a kind-mismatched option (`n => 8`
@@ -843,101 +808,77 @@ class GraftEngine(val spark: SparkSession) {
     }
   }
 
-  /** Positional (relation) arguments each TVF requires, by name — checked
-    * BEFORE any relation resolves, so a missing argument errors as an
-    * argument-count problem, not as a failed path/table lookup.
+  /** Every graft_* TVF, declared once: name (without the prefix) →
+    * (the relation arguments it requires, the option keys it accepts).
+    * Arity is checked BEFORE any relation resolves, so a missing argument
+    * errors as an argument-count problem, not as a failed path/table
+    * lookup; an unknown option key is a caller typo (`treshold => 0.9`)
+    * and must error, not silently default.
     */
-  private val GraftTvfRelations: Map[String, Seq[String]] = Map(
-    "topk" -> Seq("corpus", "queries"),
-    "dedup_pairs" -> Seq("docs"),
-    "decontaminate" -> Seq("corpus", "eval"),
-    "pagerank" -> Seq("pairs"),
-    "hits" -> Seq("pairs"),
-    "bpe_merges" -> Seq("docs"),
-    "radius" -> Seq("corpus", "queries"),
-    "louvain" -> Seq("pairs"),
-    "louvain_levels" -> Seq("pairs"),
-    "incremental_dedup" -> Seq("base", "probe"),
-    "incremental_minhash" -> Seq("base", "probe"),
-    "knn_label" -> Seq("corpus", "queries"),
-    "semantic_decon" -> Seq("corpus", "eval"),
-    "asof" -> Seq("left", "right"),
-    "unigram_lm" -> Seq("docs"),
-    "unigram_encode" -> Seq("docs", "pieces"),
-    "ivf_append" -> Seq("index", "drop"),
-    "components" -> Seq("docs"),
-    "components_index" -> Seq("docs"),
-    "license_propagation" -> Seq("comp", "docs"),
-    "split_leakage" -> Seq("comp", "split"),
-    "span_excise" -> Seq("docs"),
-    "index_delete" -> Seq("index", "revoked"),
-    "index_merge" -> Seq("index", "drop"),
-    "components_delete" -> Seq("components", "docs", "revoked"),
-    "byte_bpe_merges" -> Seq("docs"),
-    "byte_encode" -> Seq("docs", "merges"),
-    "secret_scrub" -> Seq("docs"),
-    "secret_frequencies" -> Seq("docs"),
-    "secret_scrub_incremental" -> Seq("drop", "index"),
-    "retention_expiry" -> Seq("docs", "policy"),
-    "unigram_em" -> Seq("docs", "pieces"),
-    "hyperball" -> Seq("pairs"),
-    "harmonic" -> Seq("pairs"),
-    "takedown_audit" -> Seq("docs", "revoked", "members", "revoked_vecs"),
-    "curriculum_delete_buffered" -> Seq("index", "revoked", "overflow"))
+  private val GraftTvfs: Map[String, (Seq[String], Set[String])] = Map(
+    "topk" -> (Seq("corpus", "queries"), Set("k")),
+    "dedup_pairs" -> (Seq("docs"), Set("threshold")),
+    "decontaminate" -> (Seq("corpus", "eval"), Set("n")),
+    "pagerank" -> (Seq("pairs"), Set("iters", "damping", "dangling")),
+    "hits" -> (Seq("pairs"), Set("iters")),
+    "bpe_merges" -> (Seq("docs"), Set("rounds")),
+    "radius" -> (Seq("corpus", "queries"), Set("tau")),
+    "louvain" -> (Seq("pairs"), Set.empty),
+    "louvain_levels" -> (Seq("pairs"), Set("levels", "moves")),
+    "incremental_dedup" -> (Seq("base", "probe"), Set("num", "den")),
+    "incremental_minhash" -> (Seq("base", "probe"), Set("num", "den")),
+    "knn_label" -> (Seq("corpus", "queries"), Set("k")),
+    "semantic_decon" -> (Seq("corpus", "eval"), Set("tau")),
+    "asof" -> (Seq("left", "right"), Set("key", "ord", "payload", "forward")),
+    "unigram_lm" -> (Seq("docs"), Set("vocab")),
+    "unigram_encode" -> (Seq("docs", "pieces"), Set("char_cost")),
+    "ivf_append" -> (Seq("index", "drop"), Set.empty),
+    "components" -> (Seq("docs"), Set("n", "threshold")),
+    "components_index" -> (Seq("docs"), Set("n", "threshold")),
+    "license_propagation" -> (Seq("comp", "docs"), Set("rank")),
+    "split_leakage" -> (Seq("comp", "split"), Set.empty),
+    "span_excise" -> (Seq("docs"), Set("n", "keep_one")),
+    "index_delete" -> (Seq("index", "revoked"), Set("kind", "n", "run")),
+    "index_merge" -> (Seq("index", "drop"), Set("kind", "n", "run", "threshold", "k")),
+    "components_delete" -> (Seq("components", "docs", "revoked"), Set("n", "threshold")),
+    "byte_bpe_merges" -> (Seq("docs"), Set("rounds")),
+    "byte_encode" -> (Seq("docs", "merges"), Set.empty),
+    "secret_scrub" -> (Seq("docs"), Set("k", "run")),
+    "secret_frequencies" -> (Seq("docs"), Set("run")),
+    "secret_scrub_incremental" -> (Seq("drop", "index"), Set("k", "run")),
+    "retention_expiry" -> (Seq("docs", "policy"), Set("as_of")),
+    "unigram_em" -> (Seq("docs", "pieces"), Set("char_cost")),
+    "hyperball" -> (Seq("pairs"), Set("dist", "m")),
+    "harmonic" -> (Seq("pairs"), Set("dist")),
+    "takedown_audit" -> (Seq("docs", "revoked", "members", "revoked_vecs"), Set("n", "run")),
+    "curriculum_delete_buffered" -> (Seq("index", "revoked", "overflow"), Set("k")))
 
-  /** Split a TVF argument list on top-level commas only — a comma inside
-    * a quoted path (`'a,b.parquet'`) is part of the argument.
-    */
-  private def splitTvfArgs(argStr: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    argStr.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case ',' if !inQuote => out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  private def graftTvf(fn: String, argStr: String): DataFrame = {
-    val args = splitTvfArgs(argStr)
-    val (pos, namedRaw) = args.partition(!_.contains("=>"))
-    val namedPairs = namedRaw.map { a =>
-      val Array(k, v) = a.split("=>", 2).map(_.trim)
-      k.toLowerCase -> v
-    }
+  private def graftTvf(
+      fn: String, pos: Seq[Expression], namedPairs: Seq[(String, String)]): DataFrame = {
     val named = namedPairs.toMap
     require(named.size == namedPairs.size,
-      s"graft_${fn.toLowerCase}: duplicate option(s) " +
+      s"graft_$fn: duplicate option(s) " +
         namedPairs.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
           .mkString(", "))
-    val allowed = GraftTvfOptions(fn.toLowerCase)
+    val (wantRels, allowed) = GraftTvfs(fn)
     val unknown = named.keySet -- allowed
     require(unknown.isEmpty,
-      s"graft_${fn.toLowerCase}: unknown option(s) ${unknown.mkString(", ")}; " +
+      s"graft_$fn: unknown option(s) ${unknown.mkString(", ")}; " +
         s"accepted: ${allowed.toSeq.sorted.mkString(", ")}")
-    val wantRels = GraftTvfRelations(fn.toLowerCase)
     require(pos.length == wantRels.length,
-      s"graft_${fn.toLowerCase} needs ${wantRels.length} relation argument(s) " +
-        s"(${wantRels.mkString(", ")} — each a quoted parquet path or a " +
-        s"table name), got ${pos.length}")
-    def rel(i: Int): DataFrame = {
-      val a = pos(i) // arity was checked against GraftTvfRelations above
-      if (a.length >= 2 && a.startsWith("'") && a.endsWith("'"))
-        readParquet(a.substring(1, a.length - 1))
-      else spark.table(a.toLowerCase)
-    }
+      s"graft_$fn needs ${wantRels.length} relation argument(s) " +
+        s"(${wantRels.mkString(", ")} — each a quoted parquet path, a " +
+        s"table name or a nested call), got ${pos.length}")
+    def rel(i: Int): DataFrame = relationArg(s"graft_$fn", pos(i))
     def badValue(key: String, v: String, want: String): Nothing =
       throw new IllegalArgumentException(
-        s"graft_${fn.toLowerCase}: option $key needs $want, got '$v'")
+        s"graft_$fn: option $key needs $want, got '$v'")
     def intOpt(key: String, default: Int): Int = {
       val v = named.get(key).map { raw =>
         try raw.toInt catch { case _: NumberFormatException =>
           badValue(key, raw, "an integer") }
       }.getOrElse(default)
-      require(v >= 1, s"graft_${fn.toLowerCase}: $key must be >= 1, got $v")
+      require(v >= 1, s"graft_$fn: $key must be >= 1, got $v")
       v
     }
     def doubleOpt(key: String, default: Double): Double =
@@ -951,17 +892,33 @@ class GraftEngine(val spark: SparkSession) {
           badValue(key, raw, "true or false") }
       }
     // column-name options (the asof posture): consumed through the
-    // DataFrame API (col(...)), never re-parsed as SQL text; quotes
-    // around single names are optional
+    // DataFrame API (col(...)), never re-parsed as SQL text; a bare name
+    // and a quoted one decode to the same text
     def strOpt(key: String): String = {
-      val raw = named.getOrElse(key, throw new IllegalArgumentException(
-        s"graft_${fn.toLowerCase}: option $key is required (a column name)"))
-      val v =
-        if (raw.length >= 2 && raw.startsWith("'") && raw.endsWith("'"))
-          raw.substring(1, raw.length - 1)
-        else raw
-      require(v.nonEmpty, s"graft_${fn.toLowerCase}: option $key is empty")
+      val v = named.getOrElse(key, throw new IllegalArgumentException(
+        s"graft_$fn: option $key is required (a column name)"))
+      require(v.nonEmpty, s"graft_$fn: option $key is empty")
       v
+    }
+    // the (piece, cost) model relation of unigram_encode / unigram_em
+    // ships as a codegen reference object (the u4/u7 fixed-model
+    // discipline) — cap the collect so a caller pointing a corpus-sized
+    // relation at the model slot fails fast instead of OOMing the driver.
+    // Duplicate piece rows with CONFLICTING costs would otherwise resolve
+    // in plan-dependent order (an unordered limit+collect) — take the min
+    // cost per piece and a canonical piece order so the shipped model is
+    // a deterministic function of the relation.
+    def pieceTable(pieces: DataFrame): Seq[(String, Long)] = {
+      val rows = pieces
+        .select(col("piece").cast("string"), col("cost").cast("long"))
+        .where(col("piece").isNotNull && col("cost").isNotNull)
+        .groupBy(col("piece")).agg(min(col("cost")).as("cost"))
+        .orderBy(col("piece"))
+        .limit(65537).collect()
+      require(rows.length <= 65536,
+        s"graft_$fn: pieces relation exceeds 65536 rows — " +
+          "a piece table is model state, not a corpus")
+      rows.map(r => (r.getString(0), r.getLong(1))).toSeq
     }
     // graph TVFs share one vertex convention: the pair table's distinct
     // endpoints (a TVF has one relation argument; isolated vertices are
@@ -972,7 +929,7 @@ class GraftEngine(val spark: SparkSession) {
     // options parse BEFORE relations resolve in every branch, so a bad
     // option value reads as an option error even when a relation is also
     // missing
-    fn.toLowerCase match {
+    fn match {
       case "topk" =>
         val k = intOpt("k", 10)
         graft.operators.Similarity.bruteForceTopK(rel(0), rel(1), k = k)
@@ -1019,7 +976,7 @@ class GraftEngine(val spark: SparkSession) {
         // argmax, HOF fold. Runs its per-round persisted jobs when
         // executed (the louvain_levels trainer posture). Output
         // (round, a, b, cnt, n_syms) — feed it straight into
-        // graft_byte_encode (the TVF fixpoint composes the calls).
+        // graft_byte_encode (nested calls compose).
         val rounds = intOpt("rounds", 2)
         graft.operators.Tokenizer.distributedByteMergeRounds(rel(0),
           rounds = rounds)
@@ -1141,24 +1098,7 @@ class GraftEngine(val spark: SparkSession) {
       case "unigram_encode" =>
         val charCost = intOpt("char_cost", 6145).toLong
         val docs = rel(0)
-        // the piece table ships as a codegen reference object (the
-        // u4/u7 fixed-model discipline) — cap the collect so a caller
-        // pointing a corpus-sized relation at the model slot fails
-        // fast instead of OOMing the driver
-        val pieceRows = rel(1)
-          .select(col("piece").cast("string"), col("cost").cast("long"))
-          .where(col("piece").isNotNull && col("cost").isNotNull)
-          // duplicate piece rows with CONFLICTING costs would otherwise
-          // resolve in plan-dependent order (an unordered limit+collect)
-          // — take the min cost per piece and a canonical piece order so
-          // the shipped model is a deterministic function of the relation
-          .groupBy(col("piece")).agg(min(col("cost")).as("cost"))
-          .orderBy(col("piece"))
-          .limit(65537).collect()
-        require(pieceRows.length <= 65536,
-          "graft_unigram_encode: pieces relation exceeds 65536 rows — " +
-            "a piece table is model state, not a corpus")
-        val pieces = pieceRows.map(r => (r.getString(0), r.getLong(1))).toSeq
+        val pieces = pieceTable(rel(1))
         docs.select(col("doc_id"),
             size(graft.functions.TextFunctions.tokens(col("text")))
               .cast("long").as("n_words"),
@@ -1175,22 +1115,7 @@ class GraftEngine(val spark: SparkSession) {
         // two EM rounds — and feeds graft_unigram_encode directly.
         val charCost = intOpt("char_cost", 6145).toLong
         val docs = rel(0)
-        val pieceRows = rel(1)
-          .select(col("piece").cast("string"), col("cost").cast("long"))
-          .where(col("piece").isNotNull && col("cost").isNotNull)
-          // duplicate piece rows with CONFLICTING costs would otherwise
-          // resolve in plan-dependent order (an unordered limit+collect)
-          // — take the min cost per piece and a canonical piece order so
-          // the shipped model is a deterministic function of the relation
-          .groupBy(col("piece")).agg(min(col("cost")).as("cost"))
-          .orderBy(col("piece"))
-          .limit(65537).collect()
-        require(pieceRows.length <= 65536,
-          "graft_unigram_em: pieces relation exceeds 65536 rows — " +
-            "a piece table is model state, not a corpus")
-        graft.operators.Tokenizer.unigramEmStep(docs,
-          pieceRows.map(r => (r.getString(0), r.getLong(1))).toSeq,
-          charCost)
+        graft.operators.Tokenizer.unigramEmStep(docs, pieceTable(rel(1)), charCost)
       case "hyperball" =>
         // g15's HyperBall estimator face: per endpoint vertex the
         // HLL-estimated harmonic centrality and ball size within
@@ -1267,11 +1192,7 @@ class GraftEngine(val spark: SparkSession) {
         // 'minhash' (uncapped band index — revoked is (doc_id)),
         // 'prefix' (streaming prefix index — revoked is (doc_id)),
         // 'ivf' (IVF member table — revoked is (vec_id)).
-        val kindRaw = named.getOrElse("kind", "'span'")
-        val kind =
-          if (kindRaw.length >= 2 && kindRaw.startsWith("'") && kindRaw.endsWith("'"))
-            kindRaw.substring(1, kindRaw.length - 1).toLowerCase
-          else kindRaw.toLowerCase
+        val kind = named.getOrElse("kind", "span").toLowerCase
         requireKindOptions("index_delete", kind, named.keySet)
         kind match {
           case "span" =>
@@ -1336,13 +1257,9 @@ class GraftEngine(val spark: SparkSession) {
         // 'postings' (unbanded tf-idf postings — drop carries doc_id +
         // text). Drop doc_ids must be disjoint from the base's (the
         // snapshot contract).
-        val kindRaw2 = named.getOrElse("kind", "'span'")
-        val kind2 =
-          if (kindRaw2.length >= 2 && kindRaw2.startsWith("'") && kindRaw2.endsWith("'"))
-            kindRaw2.substring(1, kindRaw2.length - 1).toLowerCase
-          else kindRaw2.toLowerCase
-        requireKindOptions("index_merge", kind2, named.keySet)
-        kind2 match {
+        val kind = named.getOrElse("kind", "span").toLowerCase
+        requireKindOptions("index_merge", kind, named.keySet)
+        kind match {
           case "span" =>
             val n = intOpt("n", 8)
             require(n >= 2, s"graft_index_merge: n must be >= 2, got $n")
@@ -1467,124 +1384,76 @@ class GraftEngine(val spark: SparkSession) {
   }
 
   /** Reference error semantics: a subquery in FROM must carry an alias
-    * (Postgres-compatible; asserted by tests/slt/subquery.slt:5). Scans the
-    * top-level FROM clause for `(select ...)` items introduced by FROM /
-    * `,` / JOIN and requires an identifier after the closing paren.
-    * Subqueries nested inside expressions (IN/EXISTS/scalar) sit at paren
-    * depth > 0 after their consuming keyword and are not FROM items.
+    * (Postgres-compatible; asserted by tests/slt/subquery.slt:5). Spark's
+    * parser names an unaliased FROM subquery
+    * `SubqueryAlias.generateSubqueryName()`, so the rule is that no such
+    * node wraps a SELECT block anywhere in the parsed statement — its
+    * subquery expressions and CTE definitions included. A parenthesized
+    * `(values …)`, `(with … select …)` or `(table t)` and a LATERAL
+    * subquery need no alias. IN/EXISTS/scalar subqueries and expression
+    * parens never carry the generated name.
     */
-  private def requireFromSubqueryAlias(sql: String): Unit = {
-    val fromPos = topLevelKeyword(sql, "from", 0).getOrElse(return)
-    val mask = codeMask(sql)
-    val n = sql.length
-    var i = fromPos
-    var depth = 0
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      if (mask(i)) {
-        val c = sql.charAt(i)
-        if (c == ')') depth -= 1
-        else if (c == '(') {
-          // token immediately before the paren decides whether this is a
-          // FROM item (from/,/join) or an expression paren (function call…)
-          var p = i - 1
-          while (p >= 0 && sql.charAt(p).isWhitespace) p -= 1
-          val before =
-            if (p >= 0 && sql.charAt(p) == ',') ","
-            else {
-              var q = p
-              while (q >= 0 && isWord(sql.charAt(q))) q -= 1
-              sql.substring(q + 1, p + 1).toLowerCase
-            }
-          val close = if (depth == 0 && Set("from", ",", "join").contains(before))
-            matchingParen(sql, i, mask) else -1
-          if (close > 0) {
-            val firstWord = sql.substring(i + 1, close).trim
-              .takeWhile(isWord).toLowerCase
-            if (firstWord == "select") {
-              var j = close + 1
-              while (j < n && sql.charAt(j).isWhitespace) j += 1
-              // a backtick-quoted identifier after the paren IS an alias
-              val aliased = j < n && sql.charAt(j) == '`'
-              val next =
-                if (j >= n) ""
-                else if (sql.charAt(j) == ',') ","
-                else sql.substring(j).takeWhile(isWord).toLowerCase
-              val clauseStarters = Set("", ",", "where", "group", "order", "limit",
-                "having", "union", "intersect", "except", "on", "join", "inner",
-                "left", "right", "full", "cross", "natural", "offset")
-              if (!aliased && clauseStarters.contains(next))
-                throw new IllegalArgumentException(
-                  "subquery in FROM must have an alias (reference v1 binder, tests/slt/subquery.slt:5)")
-            }
-            i = close // item consumed; nested FROMs are the subquery's own
-          } else depth += 1
-        }
-      }
-      i += 1
+  private def requireFromSubqueryAlias(plan: LogicalPlan): Unit = {
+    // the leftmost spine reaches a select list before a VALUES, WITH or TABLE
+    def selectBlock(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Aggregate => true
+      case _: LocalRelation | _: UnresolvedInlineTable | _: UnresolvedWith |
+          _: UnresolvedRelation => false
+      case _ => p.children.headOption.exists(selectBlock)
     }
-  }
-
-  /** Index of the `)` matching the `(` at `open` (active code only);
-    * -1 if unbalanced.
-    */
-  private def matchingParen(s: String, open: Int, mask: Array[Boolean]): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      if (mask(i)) {
-        val c = s.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i }
+    plan.foreach { node =>
+      node match {
+        case a: SubqueryAlias
+            if a.alias == SubqueryAlias.generateSubqueryName() && selectBlock(a.child) =>
+          throw new IllegalArgumentException(
+            "subquery in FROM must have an alias (reference v1 binder, tests/slt/subquery.slt:5)")
+        case w: UnresolvedWith => w.cteRelations.foreach(r => requireFromSubqueryAlias(r._2))
+        case _ => ()
       }
-      i += 1
+      node.expressions.foreach(_.foreach {
+        case _: LateralSubquery => ()
+        case s: SubqueryExpression => requireFromSubqueryAlias(s.plan)
+        case _ => ()
+      })
     }
-    -1
   }
 
   /** `select v1+1 as a from t where a >= 2` — the reference binds select
     * aliases inside WHERE (bind_select_node.rs:98-131); Spark does not.
-    * Substitute alias → its expression in the WHERE clause and retry.
-    *
-    * Clause boundaries come from a quote/paren-aware scan
-    * ([[topLevelKeyword]]), so a `where`/`from` inside a subquery or a
-    * string literal never splits the statement; the substitution itself
-    * ([[replaceIdentifier]]) skips string literals, so an alias that also
-    * appears inside quoted text is left alone.
+    * Substitute each select-list alias for its expression in the Filter
+    * directly under the statement's outermost select list (a Project or
+    * Aggregate) — the first branch of a set operation, below any ORDER
+    * BY, LIMIT, DISTINCT, HAVING or WITH. Nothing under a FROM item is
+    * visited: a subquery's own WHERE, another set-operation branch and the
+    * analyzed table-function expansions keep their meaning, and a string
+    * literal is no identifier.
     */
-  private def rewriteAliasInWhere(sql: String): Option[String] = {
-    for {
-      fromPos <- topLevelKeyword(sql, "from", 0)
-      selPos <- topLevelKeyword(sql, "select", 0)
-      if selPos < fromPos
-      wherePos <- topLevelKeyword(sql, "where", fromPos)
-      rewritten <- {
-        val whereStart = wherePos + "where".length
-        val tailStart =
-          Seq("group", "order", "limit", "having", "union", "intersect", "except")
-            .flatMap(k => topLevelKeyword(sql, k, whereStart)).minOption
-            .getOrElse(sql.length)
-        val selectList = sql.substring(selPos + "select".length, fromPos)
-        var where = sql.substring(whereStart, tailStart)
-        var changed = false
-        splitTopLevel(selectList).foreach { item =>
-          """(?is)^(.*\S)\s+as\s+(\w+)\s*$""".r.findFirstMatchIn(item.trim).foreach { am =>
-            val expr = am.group(1); val alias = am.group(2)
-            val replaced = replaceIdentifier(where, alias, s"($expr)")
-            if (replaced != where) { where = replaced; changed = true }
-          }
-        }
-        if (changed)
-          Some(sql.substring(0, whereStart) + where + sql.substring(tailStart))
-        else None
-      }
-    } yield rewritten
+  private def aliasesIntoWhere(plan: LogicalPlan): LogicalPlan = {
+    def substitute(selectList: Seq[NamedExpression], f: Filter): Filter = {
+      val aliases = selectList.collect { case a: Alias => a.name.toLowerCase -> a.child }.toMap
+      f.copy(condition = f.condition.transformUp {
+        case u: UnresolvedAttribute if u.nameParts.size == 1 &&
+            aliases.contains(u.nameParts.head.toLowerCase) =>
+          aliases(u.nameParts.head.toLowerCase)
+      })
+    }
+    plan match {
+      case p @ Project(list, f: Filter) => p.copy(child = substitute(list, f))
+      case a: Aggregate if a.child.isInstanceOf[Filter] =>
+        a.copy(child = substitute(a.aggregateExpressions, a.child.asInstanceOf[Filter]))
+      case w: UnresolvedWith => w.copy(child = aliasesIntoWhere(w.child))
+      case _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset | _: Distinct |
+          _: UnresolvedHaving | _: UnresolvedHint | _: WithWindowDefinition |
+          _: Union | _: SetOperation =>
+        plan.withNewChildren(aliasesIntoWhere(plan.children.head) +: plan.children.tail)
+      case other => other
+    }
   }
 
   /** Index of the first top-level (paren depth 0, outside string literals)
     * occurrence of keyword `kw` at or after position `from`, as a whole
-    * word. Statement routing and the alias rewrite both need clause
-    * boundaries that ignore subqueries and string literals.
+    * word — the COPY TO split needs clause boundaries that ignore
+    * subqueries and string literals.
     */
   private def topLevelKeyword(s: String, kw: String, from: Int): Option[Int] = {
     val mask = codeMask(s)
@@ -1608,29 +1477,8 @@ class GraftEngine(val spark: SparkSession) {
     None
   }
 
-  /** Replace whole-word, case-insensitive occurrences of `ident` in `text`
-    * with `repl`, skipping string literals (an alias that also appears
-    * inside '...' text must stay untouched).
-    */
-  private def replaceIdentifier(text: String, ident: String, repl: String): String = {
-    val mask = codeMask(text)
-    val out = new StringBuilder
-    var i = 0
-    val n = text.length
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      if (mask(i) && text.regionMatches(true, i, ident, 0, ident.length) &&
-        (i == 0 || !isWord(text.charAt(i - 1))) &&
-        (i + ident.length >= n || !isWord(text.charAt(i + ident.length)))) {
-        out ++= repl
-        i += ident.length
-      } else { out += text.charAt(i); i += 1 }
-    }
-    out.toString
-  }
-
-  /** Split a select list on top-level commas (ignores commas inside parens
-    * and quotes).
+  /** Split a CREATE TABLE column list on top-level commas (ignores commas
+    * inside parens and quotes, e.g. `decimal(10, 2)`).
     */
   private def splitTopLevel(s: String): Seq[String] = {
     val mask = codeMask(s)

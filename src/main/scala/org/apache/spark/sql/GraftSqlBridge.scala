@@ -1,19 +1,28 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal bridge into `private[sql]` surface that custom logical plans
-  * need: building a DataFrame from a hand-constructed LogicalPlan and
-  * extracting the Catalyst expression behind a public Column. Both are the
-  * classic (non-Connect) implementations this engine always runs on; the
-  * bridge is the entire private-API footprint of the project, kept in one
-  * file on purpose.
+  * need: building a DataFrame from a hand-constructed (or parsed and
+  * rewritten) LogicalPlan and extracting the Catalyst expression behind a
+  * public Column. Both are the classic (non-Connect) implementations this
+  * engine always runs on; the bridge is the entire private-API footprint
+  * of the project, kept in one file on purpose.
   */
 object GraftSqlBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** [[ofRows]] under a caller's planning tracker — the one `spark.sql`
+    * itself uses — so phases measured before analysis (a parse) land in
+    * the DataFrame's `queryExecution.tracker` beside the later ones.
+    */
+  def ofRows(spark: SparkSession, plan: LogicalPlan,
+      tracker: QueryPlanningTracker): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan, tracker)
 
   /** Eagerly convert a public Column to its Catalyst expression through the
     * session's converter (`ExpressionUtils.expression` would wrap it in a

@@ -41,6 +41,9 @@ class EngineSpec extends AnyFunSuite {
     // alias together with original column
     assert(rows("select b + c as s, a from t1 where s > 10 and a > 0")
       .map(_(1)).toSet == Set(1L, 2L))
+    // below ORDER BY / LIMIT the outer select block is still repaired
+    assert(rows("select a + 1 as x from t1 where x >= 2 order by x limit 1")
+      .map(_.head) == Seq(2L))
   }
 
   test("alias rewrite leaves string literals alone") {
@@ -60,6 +63,11 @@ class EngineSpec extends AnyFunSuite {
         |where x > (select min(a) from t1 where a > 1)""".stripMargin)
     // t1.a = 0,1,2,2 → x = 1,2,3,3; inner min(a where a>1) = 2 → x ∈ {3,3}
     assert(got.map(_.head) == Seq(3L, 3L))
+    // nor a FROM subquery's WHERE: the outer `w` triggers the repair, and
+    // the inner `a > 1` still means t1.a, not the inner `a * 10 as a`
+    assert(rows(
+      """select v as w, a from (select a * 10 as a, a as v from t1 where a > 1) s
+        |where w >= 0""".stripMargin) == Seq(Seq(2L, 20L), Seq(2L, 20L)))
   }
 
   test("CLI meta commands: \\dt, \\load csv, \\explain, select") {
@@ -81,6 +89,13 @@ class EngineSpec extends AnyFunSuite {
         |union all
         |select b + c as x from t1 where b + c > 10""".stripMargin)
     assert(got.map(_.head.toString.toLong).sorted == Seq(3L, 3L, 11L, 13L, 16L))
+    // only the first branch is repaired; the second keeps its own `a > 1`
+    // over t1.a (a rewrite there would also admit a = 1)
+    val shadow = rows(
+      """select a + 1 as x from t1 where x >= 3
+        |union all
+        |select a * 10 as a from t1 where a > 1""".stripMargin)
+    assert(shadow.map(_.head.toString.toLong).sorted == Seq(3L, 3L, 20L, 20L))
   }
 
   test("graft_* custom expressions are callable from engine SQL text") {
@@ -422,6 +437,15 @@ class EngineSpec extends AnyFunSuite {
     assert(rows("select s.a from (select a from t1 where a > 1) s").nonEmpty)
     assert(rows("select a from t1 where a in (select a from t1 where a > 1)").nonEmpty)
     assert(rows("select (a + 1) * 2 from t1").nonEmpty)
+    // an unaliased SELECT subquery nested inside an aliased one errors too
+    intercept[IllegalArgumentException] {
+      rows("select * from (select * from (select a from t1)) s")
+    }
+    // VALUES, WITH, TABLE and LATERAL forms need no alias
+    assert(rows("select * from (values (1, 2))") == Seq(Seq(1, 2)))
+    assert(rows("select a from (with c as (select 1 as a) select a from c)") == Seq(Seq(1)))
+    assert(rows("select count(*) from (table t1)") == Seq(Seq(4L)))
+    assert(rows("select count(*) from t1, lateral (select t1.a + 1 as b)") == Seq(Seq(4L)))
   }
 
   test("multi-statement run executes all and returns the last") {
@@ -1567,6 +1591,55 @@ class EngineSpec extends AnyFunSuite {
       engine.run("select * from graft_pagerank(no_such_t, iters => 3, iters => 9)")
     }
     assert(e5.getMessage.contains("duplicate") && e5.getMessage.contains("iters"))
+    // a negative option value is an expression (unary minus), decoded to
+    // its value: in range it passes validation (only the made-up relation
+    // fails), out of range it errors with the decoded number
+    val e6 = intercept[org.apache.spark.sql.AnalysisException] {
+      engine.run("select * from graft_radius(no_such_t, no_such_q, tau => -0.5)")
+    }
+    assert(e6.getMessage.contains("no_such_t"), e6.getMessage)
+    val e7 = intercept[IllegalArgumentException] {
+      engine.run("select * from graft_radius(no_such_t, no_such_q, tau => -1.5)")
+    }
+    assert(e7.getMessage.contains("[-1, 1]") && e7.getMessage.contains("-1.5"))
+  }
+
+  // the planted out-star of the graft_hits test, over its own table
+  private lazy val starEdges: String = {
+    engine.run("create table paren_edges_t(doc_a bigint, doc_b bigint)")
+    engine.run("insert into paren_edges_t values (0, 1), (0, 2), (0, 3)")
+    "paren_edges_t"
+  }
+  private val star = Seq((0L, 0L, 9L), (1L, 3L, 0L), (2L, 3L, 0L), (3L, 3L, 0L))
+  private def hits(from: String) = engine.run(
+    s"select doc_id, auth, hub from $from order by doc_id")
+    .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+
+  test("graft_* relation argument: a quoted parquet path may contain parens") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_paren").toString
+    val path = s"$dir/edges(1).parquet"
+    engine.run(s"copy $starEdges to '$path' (format parquet)")
+    assert(hits(s"graft_hits('$path', iters => 2)") == star)
+    // a call inside a CTE definition expands like one in FROM
+    assert(hits(s"(with h as (select * from graft_hits('$path', iters => 2)) " +
+      "select * from h) hs") == star)
+  }
+
+  test("graft_* arguments: a block comment in the list is no part of any argument") {
+    assert(hits(s"graft_hits(/* edges */ $starEdges, iters => 2)") == star)
+    // a comma inside the comment splits nothing; a comment before an
+    // option name is no part of the name
+    assert(hits(s"graft_hits(/* edges, directed */ $starEdges, /* rounds */ iters => 2)")
+      == star)
+  }
+
+  test("read_csv: a ')' delimiter is an option value, not the call's end") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_delim").toString
+    val f = new java.io.PrintWriter(s"$dir/paren.csv")
+    f.print("a)b\n1)x\n2)y\n")
+    f.close()
+    assert(rows(s"select b from read_csv('$dir/paren.csv', delim => ')', header => true) " +
+      "order by a").map(_.head) == Seq("x", "y"))
   }
 
   test("TVF mentions inside string literals pass through untouched") {

@@ -25,13 +25,14 @@ class PlannerCasesSpec extends AnyFunSuite {
   import TestSpark._
 
   /** Engine over the reference's five CSV fixtures — the same tables the
-    * sqlplannertest corpus binds against (reference tests/csv directory).
+    * sqlplannertest corpus binds against (reference tests/csv directory),
+    * loaded from the test resources' copies the way EngineSpec does.
     */
   private lazy val engine: GraftEngine = {
     val e = new GraftEngine(spark)
     e.resetCatalog()
     Seq("t1", "t2", "employee", "department", "state").foreach { n =>
-      e.createCsvTable(n, s"/root/reference/tests/csv/$n.csv")
+      e.createCsvTable(n, getClass.getResource(s"/csv/$n.csv").getPath)
     }
     e
   }
