@@ -230,16 +230,13 @@ object Bench {
     //   - a PER-QUERY System.gc() reads strictly WORSE (406.5 s vs
     //     314.1 s total; in-window gc_sec 6.0 → 22.0, probes noisier):
     //     269 full collections churn code-cache/class state for nothing.
-    //     It stays available as SPARK_GRAFT_BENCH_PURGE=gc for
-    //     memory-pressure forensics on a box that shows eviction churn.
-    // Default: clearCache + unpersistAll only — O(entries) bookkeeping,
-    // no collection, keeps the "caches die with the query" contract
-    // airtight even against an untracked persist. PURGE=0 disables.
-    val purgeMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_PURGE", "1")
-    def purgeAccumulatedState(): Unit = if (purgeMode != "0") {
+    // So: clearCache + unpersistAll only — O(entries) bookkeeping, no
+    // collection, keeps the "caches die with the query" contract airtight
+    // even against an untracked persist. PURGE=0 disables.
+    val purge = sys.env.getOrElse("SPARK_GRAFT_BENCH_PURGE", "1") != "0"
+    def purgeAccumulatedState(): Unit = if (purge) {
       spark.catalog.clearCache()
       graft.operators.Dedup.unpersistAll()
-      if (purgeMode == "gc") System.gc()
     }
 
     // Pre-build the persisted models/indexes (IVF centroids, PQ
@@ -345,23 +342,19 @@ object Bench {
     // rejected: it reads WORSE on scan-heavy queries (k5/t13 steady
     // landed 0.5-0.8 s ABOVE wall with it, at/below wall without —
     // the full collection evicts soft JVM state the scan path then
-    // rebuilds inside the window); it stays available as the
-    // SPARK_GRAFT_BENCH_STEADY_GC=1 opt-in for memory-pressure
-    // forensics. Residual noise floor ~0.1-0.3 s (README).
+    // rebuilds inside the window). Residual noise floor ~0.1-0.3 s
+    // (README).
     spark.catalog.clearCache()
     graft.operators.Dedup.unpersistAll()
     System.gc()
-    val steadyGc = sys.env.getOrElse("SPARK_GRAFT_BENCH_STEADY_GC", "0") == "1"
     // the steady lap carries CPU and GC too (r18 verdict: the x26
     // steady-inversion anomaly was unadjudicable because the steady
     // channel recorded wall alone — contention vs recompute needs the
     // same three-signal read as the first pass). Reported values are
     // the min-WALL rep's, consistent with the first-pass convention.
     val steady: Map[String, Pass] = steadyTargets.map { n =>
-      val laps = (1 to steadyReps).map { _ =>
-        if (steadyGc) System.gc()
-        runOnce(n, fnByName(n))
-      }.filter(_.wall >= 0)
+      val laps = (1 to steadyReps).map(_ => runOnce(n, fnByName(n)))
+        .filter(_.wall >= 0)
       val best = laps.minByOption(_.wall).getOrElse(Pass(-1.0, -1.0, -1.0))
       println(s"""{"query":"$n","steady":${r3(best.wall)},"steady_cpu":${r3(best.cpu)},"steady_gc":${r3(best.gc)}}""")
       Console.out.flush()

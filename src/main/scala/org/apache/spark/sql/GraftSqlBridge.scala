@@ -1,15 +1,18 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into `private[sql]` surface that custom logical plans
   * need: building a DataFrame from a hand-constructed (or parsed and
-  * rewritten) LogicalPlan and extracting the Catalyst expression behind a
-  * public Column. Both are the classic (non-Connect) implementations this
-  * engine always runs on; the bridge is the entire private-API footprint
-  * of the project, kept in one file on purpose.
+  * rewritten) LogicalPlan or from Catalyst rows, extracting the Catalyst
+  * expression behind a public Column, and the optimizer's first batch.
+  * All are the classic (non-Connect) implementations this engine always
+  * runs on; the bridge is the entire private-API footprint of the project,
+  * kept in one file on purpose.
   */
 object GraftSqlBridge {
 
@@ -42,4 +45,17 @@ object GraftSqlBridge {
 
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** The optimizer's first batch ("Finish Analysis") applied alone: it
+    * replaces what only the optimizer rewrites before expressions can be
+    * evaluated, such as RuntimeReplaceable functions and current_date.
+    */
+  def finishAnalysis(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].sessionState.optimizer.FinishAnalysis(plan)
+
+  /** A DataFrame over Catalyst rows, with no conversion to or from Row.
+    * Every column is declared nullable.
+    */
+  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema.asNullable)
 }

@@ -473,14 +473,126 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("many INSERTs stay correct across the plan-lineage collapse") {
+  test("many INSERTs stay correct and the registered plan stays shallow") {
     engine.run("create table acc_t(v int)")
     (1 to 70).foreach(i => engine.run(s"insert into acc_t values ($i)"))
     val got = rows("select count(*) as n, sum(v) as s from acc_t").head
     assert(got == Seq(70L, (1 to 70).sum.toLong))
-    // the registered plan is collapsed, not a 70-deep union
+    // the registered plan is base ∪ appended ∪ tail, not a 70-deep union
     val depth = engine.table("acc_t").queryExecution.analyzed.collect { case p => p }.size
-    assert(depth < 30, s"lineage should have been collapsed, plan has $depth nodes")
+    assert(depth < 30, s"inserts should not deepen the plan, plan has $depth nodes")
+  }
+
+  test("COPY FROM snapshots the file: rewriting it later leaves the table alone") {
+    val f = java.nio.file.Files.createTempDirectory("copy_snap").resolve("snap.csv")
+    engine.run(
+      "create table snap_src(a int); insert into snap_src values (1); " +
+        s"copy snap_src to '$f' (format csv); create table snap_t(a int); " +
+        s"copy snap_t from '$f'; insert into snap_src values (2); " +
+        s"copy snap_src to '$f' (format csv)")
+    assert(rows("select count(*), sum(a) from snap_t") == Seq(Seq(1L, 1L)))
+  }
+
+  test("interleaved inserts keep the table within base + 2 x defaultParallelism partitions") {
+    val csv = java.nio.file.Files.createTempFile("bound", ".csv")
+    java.nio.file.Files.writeString(csv,
+      (1000 until 1010).map(i => s"$i,c").mkString("a,b\n", "\n", "\n"))
+    engine.run("create table bound_t(a int, b varchar)")
+    val base = engine.table("bound_t").rdd.getNumPartitions
+    val t1a = rows("select a from t1").map(_.head.toString.toLong)
+    var expected = Seq.empty[Long]
+    (1 to 100).foreach { i =>
+      engine.run(s"insert into bound_t values ($i, 'v'), (${-i}, 'w')")
+      expected ++= Seq(i.toLong, -i.toLong)
+      if (i % 10 == 0) {
+        engine.run(s"insert into bound_t select a + $i, 's' from t1")
+        expected ++= t1a.map(_ + i)
+      }
+      if (i % 25 == 0) {
+        engine.run(s"copy bound_t from '$csv'")
+        expected ++= (1000 until 1010).map(_.toLong)
+      }
+    }
+    assert(rows("select count(*), sum(a) from bound_t") ==
+      Seq(Seq(expected.size.toLong, expected.sum)))
+    val parts = engine.table("bound_t").rdd.getNumPartitions
+    val bound = base + 2 * spark.sparkContext.defaultParallelism
+    assert(parts <= bound, s"$parts partitions, bound $bound")
+  }
+
+  test("resetCatalog drops a table's inserted rows with the table") {
+    val e = new GraftEngine(spark.newSession())
+    e.run("create table rc_t(a int)")
+    e.run("insert into rc_t values (1), (2)")
+    e.run("insert into rc_t select a + 10 from rc_t")
+    e.run("insert into rc_t values (3)")
+    e.resetCatalog()
+    e.run("create table rc_t(a int)")
+    e.run("insert into rc_t values (7)")
+    assert(e.run("select a from rc_t").collect().map(_.getInt(0)).toSeq == Seq(7))
+  }
+
+  test("INSERT into a parquet table never copies the parquet base") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val path = java.nio.file.Files.createTempDirectory("pq_base").resolve("region.parquet").toString
+    spark.range(5).selectExpr("cast(id as int) as r_regionkey", "concat('r', id) as r_name")
+      .write.parquet(path)
+    engine.createParquetTable("pq_base", path)
+    (1 to 40).foreach { i =>
+      engine.run(s"insert into pq_base values (${100 + i}, 'planted')")
+      if (i % 20 == 0) engine.run(s"insert into pq_base select r_regionkey + ${1000 + i}, " +
+        "r_name from pq_base where r_regionkey < 5")
+    }
+    val plan = engine.table("pq_base").queryExecution.analyzed
+    assert(plan.collect { case r: LogicalRelation => r }.size == 1, plan.treeString)
+    // 5 base rows, 40 planted, 5 copied at i = 20 and 5 at i = 40
+    assert(rows("select count(*), count(if(r_name = 'planted', 1, null)) from pq_base") ==
+      Seq(Seq(55L, 40L)))
+  }
+
+  test("a tail crossing its row bound seals into one appended checkpoint") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    engine.run("create table seal_t(a int)")
+    val bound = GraftEngine.TailRows
+    def shape() = {
+      val plan = engine.table("seal_t").queryExecution.analyzed
+      (plan.collect { case r: LocalRelation => r.data.size }.sum,
+        plan.collect { case r: LogicalRDD => r }.size)
+    }
+    // two VALUES inserts fill the tail to the bound exactly: no job, no fold
+    engine.run(s"insert into seal_t values ${(1 to bound - 1).map(i => s"($i)").mkString(", ")}")
+    engine.run(s"insert into seal_t values ($bound)")
+    assert(shape() == (bound, 1)) // the tail, and the base's RDD
+    // one row more crosses it: the tail folds into `appended`
+    engine.run(s"insert into seal_t values (${bound + 1})")
+    assert(shape() == (0, 2))
+    assert(rows("select count(*), sum(a) from seal_t") ==
+      Seq(Seq(bound + 1L, (1L to bound + 1L).sum)))
+  }
+
+  test("INSERT..SELECT over inline VALUES evaluates functions only the optimizer rewrites") {
+    // nvl, to_date and left are RuntimeReplaceable: their own eval throws
+    engine.run("create table rr_t(a int, d date, s varchar)")
+    engine.run("insert into rr_t select nvl(a, 0), to_date(d), left(s, 2) " +
+      "from values (cast(null as int), '2024-01-01', 'abc') as v(a, d, s)")
+    engine.run("insert into rr_t select nullif(a, 5), d, s from values (5, '2024-02-03', 'x') as v(a, d, s)")
+    assert(rows("select a, cast(d as string), s from rr_t order by d") ==
+      Seq(Seq(0, "2024-01-01", "ab"), Seq(null, "2024-02-03", "x")))
+    // the unsigned range check evaluates the incoming rows the same way
+    engine.run("create table rr_u(v tinyint unsigned)")
+    engine.run("insert into rr_u select nvl(a, 7) from values (cast(null as int)) as v(a)")
+    intercept[IllegalArgumentException] {
+      engine.run("insert into rr_u select nvl(a, 300) from values (cast(null as int)) as v(a)")
+    }
+    assert(rows("select v from rr_u") == Seq(Seq(7)))
+  }
+
+  test("INSERT..SELECT takes unaliased expressions whose names hold a dot") {
+    engine.run("create table dot_t(a double, b varchar)")
+    engine.run("insert into dot_t select x * 0.5, concat(y, '.') from values (3, 'p') as v(x, y)")
+    engine.run("insert into dot_t(b, a) select 'q', x * 1.5 from values (2) as v(x)")
+    assert(rows("select a, b from dot_t order by a") == Seq(Seq(1.5, "p."), Seq(3.0, "q")))
   }
 
   // ---- graft_* serving TVFs (extension: the pipeline operators through
