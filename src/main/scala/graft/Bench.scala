@@ -323,8 +323,8 @@ object Bench {
     // steady wall lands back at its historical number was inflated by
     // contention or GC pressure during its in-pass slot; a steady wall
     // that REPRODUCES the inflation is a real regression. This is the
-    // in-artifact equivalent of the BenchSubset re-measure the judge had
-    // to run by hand in r11-r13.
+    // in-artifact form of the isolated subset re-measure that r11-r13 ran
+    // by hand; a subset alone runs with SPARK_GRAFT_BENCH_QUERIES.
     val steadyTargets = results.filter(_._2.wall >= 0).sortBy(-_._2.wall)
       .take(SteadyCount).map(_._1)
     val fnByName = names.toMap

@@ -1,25 +1,39 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.antlr.v4.runtime.Token
+import org.antlr.v4.runtime.misc.Interval
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{AnalysisException, DataFrame, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedInlineTable, UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, InterpretedMutableProjection, LateralSubquery, Literal, NamedArgumentExpression, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.parser.GraftSqlLexer
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer.{COMMA, FROM, INTEGER_VALUE, LEFT_PAREN, LIMIT, OFFSET, RIGHT_PAREN, SEMICOLON, STRING_LITERAL, TO}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Offset, Project, SetOperation, Sort, SubqueryAlias, Union, UnresolvedHint, UnresolvedWith, WithWindowDefinition}
+import org.apache.spark.sql.catalyst.util.SparkParserUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import GraftEngine.Tokens
 
 /** The sqlrs-compatible engine surface: an embedded SQL session over Spark.
   *
   * Mirrors the reference's two entry points — v1 `Database::run`
   * (src/db.rs:107) and v2 `ClientContext::query`
   * (src/main_entry/client_context.rs:76) — as one `run(sql)` over Spark's
-  * own parser and analyzer, plus the statement surface Spark temp views
-  * don't give us directly:
+  * own lexer, parser and analyzer. Like the reference, which splits and
+  * parses with one grammar (sqlparser-rs), the engine reads statement text
+  * only through Spark's grammar: `run` lexes its input once with Spark's
+  * `SqlBaseLexer`, and the statement split, the routing below, the COPY
+  * options, the CREATE TABLE column list and the two rewrites a SELECT
+  * needs before Spark's parser ([[runSelect]]) all work on those tokens, so
+  * a string literal or comment can never be mistaken for code. On top of
+  * that, the statement surface Spark temp views don't give us directly:
   *
   *  - CREATE TABLE (explicit columns, incl. UNSIGNED widening per SURVEY
   *    §1.2) and CTAS (bind_create.rs:13-51)
@@ -79,12 +93,14 @@ class GraftEngine(val spark: SparkSession) {
     * rows, so it copies the earlier rows only when a bit carries and a row
     * is copied at most log2(folds) times. `df` reads the blocks as one
     * LogicalRDD of at most `defaultParallelism` partitions, packed by row
-    * count.
+    * count, that carries the blocks' row count for the optimizer's size
+    * estimate.
     */
   private final class Appended(val blocks: Vector[Block], val folds: Int, schema: StructType) {
     val df: DataFrame = GraftSqlBridge.internalDataFrame(spark,
       spark.sparkContext.union(blocks.map(_.rdd)).coalesce(spark.sparkContext.defaultParallelism,
-        shuffle = false, Some(new GraftEngine.Packing(blocks.flatMap(_.rows)))), schema)
+        shuffle = false, Some(new GraftEngine.Packing(blocks.flatMap(_.rows)))),
+      schema, blocks.map(_.rows.sum).sum)
   }
 
   /** name → its store; the catalog (reference: TableCatalog,
@@ -187,7 +203,7 @@ class GraftEngine(val spark: SparkSession) {
     * the target is a DIRECTORY of part files — the only layout that works
     * when 1000 executors write 100 TB — with options for the knobs that
     * matter at scale:
-    *   FORMAT csv|parquet        (default: by path extension, else parquet)
+    *   FORMAT csv|parquet|json   (default: by path extension, else parquet)
     *   HEADER false              (csv; default true, mirroring COPY FROM)
     *   DELIMITER 'c'             (csv; default ',')
     *   PARTITION_BY (col, ...)   (hive-style subdirectories — partition
@@ -198,219 +214,142 @@ class GraftEngine(val spark: SparkSession) {
     *                              predicates skip whole files)
     *   MAX_RECORDS_PER_FILE n    (bounds file size so a skewed partition
     *                              never produces one giant file)
+    *   BUCKET_BY (col, ...) [BUCKETS n] [BUCKET_TABLE name]
     * Overwrites like the reference's CSV-writing kin (DuckDB COPY TO).
+    * `opts` is the option list without its parentheses.
     */
-  /** COPY ... TO routing. The `TO` keyword is located mask-aware at paren
-    * depth 0 outside string literals, so a subquery source containing the
-    * text `to '` (in a literal or nested select) can never mis-split the
-    * statement the way a lazy regex would.
-    */
-  private def runCopyTo(sql: String): DataFrame = {
-    val copyPos = topLevelKeyword(sql, "copy", 0).getOrElse(
-      throw new IllegalArgumentException(s"not a COPY statement: $sql"))
-    val toPos = topLevelKeyword(sql, "to", copyPos + 4).getOrElse(
-      throw new IllegalArgumentException(s"unsupported COPY statement: $sql"))
-    val src = sql.substring(copyPos + 4, toPos).trim
-    val TailRe = """(?s)\s*'([^']+)'\s*(?:\((.*)\))?\s*""".r
-    sql.substring(toPos + 2) match {
-      case TailRe(path, opts) =>
-        copyTo(src, path, Option(opts).getOrElse("")); emptyOk
-      case _ => throw new IllegalArgumentException(
-        s"COPY TO expects 'path' (options): $sql")
-    }
-  }
+  def copyTo(src: String, path: String, opts: String): Unit =
+    copyTo(GraftEngine.tokens(src), path, copyOptions("COPY TO", GraftEngine.tokens(opts)))
 
-  def copyTo(src: String, path: String, opts: String): Unit = {
+  private def copyTo(src: Tokens, path: String, opts: CopyOptions): Unit = {
     var df =
-      if (src.trim.startsWith("(") && src.trim.endsWith(")"))
-        runSelect(src.trim.stripPrefix("(").stripSuffix(")"))
-      else runSelect(s"select * from ${src.trim}")
-    // BUCKET_BY (col, ...) [BUCKETS n] [BUCKET_TABLE name]: the bucketed
-    // co-located-join layout (operators.Bucketing) through the SQL front
-    // door. A bucketed write is a catalog table by construction (the scan
-    // must report the bucket distribution to drop join exchanges), so it
-    // registers `name` (default: the path's last segment, sanitized) in
-    // the session catalog with data at `path`, parquet only, and owns the
-    // layout outright — SORT_BY (buckets sort by their keys already) and
-    // PARTITION_BY don't compose with it here and error instead of
-    // silently interacting.
-    val bucketBy = """(?i)bucket_by\s*\(([^)]*)\)""".r.findFirstMatchIn(opts)
-    bucketBy.foreach { m =>
-      val keys = m.group(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      require(keys.nonEmpty, "COPY TO: BUCKET_BY names no columns")
-      for (bad <- Seq("sort_by", "partition_by"))
-        require(!s"(?i)$bad".r.findFirstIn(opts).isDefined,
-          s"COPY TO: BUCKET_BY does not combine with ${bad.toUpperCase} " +
-            "(buckets are parquet, sorted by their keys)")
-      // the FORMAT value is PARSED, not substring-matched: a literal
-      // "format csv" guard let `FORMAT  CSV` (extra whitespace) or
-      // `format 'csv'` slip through and silently write parquet buckets,
-      // dropping the user's format with no error
-      """(?i)format\s+'?(\w+)'?""".r.findFirstMatchIn(opts).foreach { f =>
-        require(f.group(1).equalsIgnoreCase("parquet"),
-          s"COPY TO: BUCKET_BY does not combine with FORMAT " +
-            s"${f.group(1).toUpperCase} (buckets are parquet, sorted by " +
-            "their keys)")
-      }
-      val buckets = """(?i)buckets\s+(\d+)""".r.findFirstMatchIn(opts)
-        .map(_.group(1).toInt).getOrElse(8)
-      require(buckets >= 1 && buckets <= 100000,
-        s"COPY TO: BUCKETS must be in [1, 100000], got $buckets")
-      val tname = """(?i)bucket_table\s+(\w+)""".r.findFirstMatchIn(opts)
-        .map(_.group(1).toLowerCase)
-        .getOrElse(path.split('/').filter(_.nonEmpty).lastOption
-          .map(_.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase)
-          .getOrElse(throw new IllegalArgumentException(
-            s"COPY TO: cannot derive a bucket table name from '$path' — " +
-              "pass BUCKET_TABLE name")))
-      graft.operators.Bucketing.writeBucketed(df, tname, path, buckets, keys)
-    }
-    if (bucketBy.isDefined) return
-    """(?i)sort_by\s*\(([^)]*)\)""".r.findFirstMatchIn(opts).foreach { m =>
-      val cols = m.group(1).split(",").map(c => col(c.trim)).toIndexedSeq
-      // explicit partition count: a user-specified repartition is final
-      // (AQE would otherwise coalesce small range partitions back into
-      // one file, defeating the layout)
-      val n = spark.sessionState.conf.numShufflePartitions
-      df = df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
-    }
-    val lower = path.toLowerCase
-    val fmt = """(?i)format\s+(\w+)""".r.findFirstMatchIn(opts)
-      .map(_.group(1).toLowerCase)
-      .getOrElse(
-        if (lower.endsWith(".csv")) "csv"
-        else if (lower.endsWith(".parquet")) "parquet"
-        else "parquet")
-    var w = df.write.mode("overwrite")
-    """(?i)partition_by\s*\(([^)]*)\)""".r.findFirstMatchIn(opts).foreach { m =>
-      w = w.partitionBy(m.group(1).split(",").map(_.trim).filter(_.nonEmpty).toIndexedSeq: _*)
-    }
-    """(?i)max_records_per_file\s+(\d+)""".r.findFirstMatchIn(opts).foreach { m =>
-      w = w.option("maxRecordsPerFile", m.group(1))
-    }
-    fmt match {
-      case "csv" =>
-        val delim = """(?i)delimiter\s+'([^']+)'""".r
-          .findFirstMatchIn(opts).map(_.group(1)).getOrElse(",")
-        val header = """(?i)header\s+false""".r.findFirstIn(opts).isEmpty
-        w.option("header", header.toString).option("delimiter", delim).csv(path)
-      case "parquet" => w.parquet(path)
-      case "json" => w.json(path)
-      case other => throw new IllegalArgumentException(
-        s"unsupported COPY TO format: $other (csv|parquet|json)")
+      if (src.word(0) == "(" && src.close(0) == src.size - 1) runSelect(src.slice(1, src.size - 1))
+      else runSelect(src, relation = true)
+    val format = opts.one("format").map(_.toLowerCase)
+    opts.list("bucket_by") match {
+      case Some(keys) =>
+        // the bucketed co-located-join layout (operators.Bucketing): a
+        // catalog table by construction (the scan must report the bucket
+        // distribution to drop join exchanges), registered as BUCKET_TABLE
+        // (default: the path's last segment) with data at `path`. It owns
+        // the layout, so SORT_BY, PARTITION_BY and a FORMAT other than
+        // parquet error instead of silently interacting.
+        require(keys.nonEmpty, "COPY TO: BUCKET_BY names no columns")
+        val clash = Seq("sort_by", "partition_by").filter(opts.has).map(_.toUpperCase) ++
+          format.filter(_ != "parquet").map(f => s"FORMAT ${f.toUpperCase}")
+        require(clash.isEmpty, s"COPY TO: BUCKET_BY does not combine with ${clash.head} " +
+          "(buckets are parquet, sorted by their keys)")
+        val buckets = opts.number("buckets").getOrElse(8L)
+        require(buckets >= 1 && buckets <= 100000,
+          s"COPY TO: BUCKETS must be in [1, 100000], got $buckets")
+        val tname = opts.one("bucket_table").map(_.toLowerCase)
+          .getOrElse(path.split('/').filter(_.nonEmpty).lastOption
+            .map(GraftEngine.wordChars(_).toLowerCase)
+            .getOrElse(throw new IllegalArgumentException(
+              s"COPY TO: cannot derive a bucket table name from '$path' — " +
+                "pass BUCKET_TABLE name")))
+        graft.operators.Bucketing.writeBucketed(df, tname, path, buckets.toInt, keys)
+      case None =>
+        opts.list("sort_by").foreach { keys =>
+          val cols = keys.map(col).toIndexedSeq
+          // explicit partition count: a user-specified repartition is final
+          // (AQE would otherwise coalesce small range partitions back into
+          // one file, defeating the layout)
+          val n = spark.sessionState.conf.numShufflePartitions
+          df = df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*)
+        }
+        var w = df.write.mode("overwrite")
+        opts.list("partition_by").foreach(keys => w = w.partitionBy(keys: _*))
+        opts.number("max_records_per_file").foreach(n => w = w.option("maxRecordsPerFile", n))
+        format.getOrElse(if (path.toLowerCase.endsWith(".csv")) "csv" else "parquet") match {
+          case "csv" =>
+            w.option("header", opts.header.toString)
+              .option("delimiter", opts.one("delimiter").getOrElse(",")).csv(path)
+          case "parquet" => w.parquet(path)
+          case "json" => w.json(path)
+          case other => throw new IllegalArgumentException(
+            s"unsupported COPY TO format: $other (csv|parquet|json)")
+        }
     }
   }
 
-  /** In-memory table from explicit rows (tests / VALUES). */
-  def createTable(name: String, schema: StructType, rows: Seq[Row] = Seq.empty): Unit =
-    register(name, spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema))
+  private val CopyOptionKeys = Map("COPY FROM" -> Set("delimiter", "header"),
+    "COPY TO" -> Set("format", "header", "delimiter", "partition_by", "sort_by",
+      "max_records_per_file", "bucket_by", "buckets", "bucket_table"))
+
+  /** A COPY statement's options, parsed once from `KEY`, `KEY value` or
+    * `KEY (name, …)` items: key → no value (a flag), the value (a literal,
+    * unescaped as Spark's parser does, or one word) or the list. Like the
+    * graft_* TVF options, an unknown or repeated key errors and names the
+    * accepted keys.
+    */
+  private final class CopyOptions(stmt: String, values: Map[String, Seq[String]]) {
+    def has(key: String): Boolean = values.contains(key)
+    def list(key: String): Option[Seq[String]] = values.get(key)
+    private def bad(key: String, want: String) =
+      new IllegalArgumentException(s"$stmt: option ${key.toUpperCase} needs $want, got '${values(key).mkString(", ")}'")
+    def one(key: String): Option[String] =
+      values.get(key).map { case Seq(v) => v; case _ => throw bad(key, "one value") }
+    def number(key: String): Option[Long] =
+      one(key).map(_.toLongOption.getOrElse(throw bad(key, "an integer")))
+    /** HEADER is on unless given as false; a bare HEADER is on. */
+    def header: Boolean = values.get("header").forall(_.forall(v =>
+      v.toBooleanOption.getOrElse(throw bad("header", "true or false"))))
+  }
+
+  private def copyOptions(stmt: String, opts: Tokens): CopyOptions = {
+    val pairs = opts.commaList.map { o =>
+      require(o.isName(0), s"$stmt: an option is a name and its value, got '${o.sql}'")
+      val v = o.drop(1)
+      o.text(0).toLowerCase -> (
+        if (v.size == 0) Nil
+        else if (v.size == 1) Seq(v.string(0).getOrElse(v.text(0)))
+        else if (v.word(0) == "(" && v.close(0) == v.size - 1) v.slice(1, v.size - 1).commaList.map(_.plain)
+        else throw new IllegalArgumentException(
+          s"$stmt: option ${o.word(0)} takes one value or a (list), got '${v.sql}'"))
+    }
+    val accepted = CopyOptionKeys(stmt)
+    val unknown = pairs.map(_._1).filterNot(accepted) ++ pairs.map(_._1).diff(pairs.map(_._1).distinct)
+    require(unknown.isEmpty,
+      s"$stmt: unknown or repeated option(s) ${unknown.distinct.map(_.toUpperCase).mkString(", ")}; " +
+        s"accepted: ${accepted.toSeq.sorted.map(_.toUpperCase).mkString(", ")}")
+    new CopyOptions(stmt, pairs.toMap)
+  }
+
+  /** In-memory table from explicit rows (tests / VALUES). Its LogicalRDD
+    * carries the row count, so the optimizer sizes it by its rows.
+    */
+  def createTable(name: String, schema: StructType, rows: Seq[Row] = Seq.empty): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    register(name, GraftSqlBridge.internalDataFrame(spark, spark.sparkContext.parallelize(
+      rows.map(toCatalyst(_).asInstanceOf[InternalRow]), 1), schema, rows.size))
+  }
 
   // ---- statement router ---------------------------------------------------
-
-  private val CreateTableRe =
-    """(?is)\s*create\s+table\s+(\w+)\s*\((.+)\)\s*""".r
-  private val CtasRe =
-    """(?is)\s*create\s+table\s+(\w+)\s+as\s+(select\b.*)""".r
-  private val InsertValuesRe =
-    """(?is)\s*insert\s+into\s+(\w+)\s*(\(([^)]*)\))?\s*(values\b.*)""".r
-  private val InsertSelectRe =
-    """(?is)\s*insert\s+into\s+(\w+)\s*(\(([^)]*)\))?\s*(select\b.*)""".r
-  private val CopyRe =
-    """(?is)\s*copy\s+(\w+)\s+from\s+'([^']+)'\s*(?:\((.*)\))?\s*""".r
-  private val CopyAnyRe = """(?is)\s*copy\s+.*""".r
-  private val ShowTablesRe = """(?is)\s*show\s+tables\s*""".r
-  private val GraftReleaseRe = """(?is)\s*graft_release\s*(?:\(\s*\))?\s*""".r
-  private val DescribeRe = """(?is)\s*describe\s+(\w+)\s*""".r
-  private val ExplainRe = """(?is)\s*explain\s+(.*)""".r
-  private val BareFileFromRe = """(?i)(from\s+)'([^']+\.(csv|parquet|jsonl?))'""".r
-  private val OffsetLimitRe = """(?is)\boffset\s+(\d+)\s+limit\s+(\d+)""".r
 
   /** Execute one or more `;`-separated statements; returns the LAST
     * statement's DataFrame (DDL/DML return an empty result, like the
     * reference's ok-statements). The reference's v2 entry loops over every
     * parsed statement in the input (client_context.rs:76-97), so pasting
-    * `create ...; insert ...;` into the CLI must work — the split is
-    * string-literal-aware, so a `;` inside '...' never splits.
+    * `create ...; insert ...;` into the CLI must work. The input is lexed
+    * once by Spark's lexer and split on its `;` tokens, so a `;` inside a
+    * string literal, quoted identifier or (nested) comment never splits.
     */
-  def run(sql0: String): DataFrame = {
-    val stmts = splitStatements(sql0)
+  def run(sql: String): DataFrame = {
+    val stmts = GraftEngine.statements(sql)
     if (stmts.isEmpty) emptyOk
     else stmts.map(runStatement).last
   }
 
-  /** Per-character "active code" mask: false inside single-quoted string
-    * literals (backslash and doubled-quote escapes), backtick-quoted
-    * identifiers, `--` line comments, and block comments. The few scanners
-    * that still read statement text before Spark's parser does (statement
-    * split, COPY TO, the OFFSET/LIMIT swap, bare `FROM 'file'`, column
-    * lists) consult this ONE automaton instead of tracking literal state
-    * themselves, so escape rules cannot drift between scanners (a `;` in a
-    * comment must not split a statement exactly like a `;` in a string
-    * must not).
-    */
-  private def codeMask(s: String): Array[Boolean] = {
-    val n = s.length
-    val mask = new Array[Boolean](n) // default false
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\'') {
-        i += 1
-        var closed = false
-        while (i < n && !closed) {
-          val d = s.charAt(i)
-          if (d == '\\' && i + 1 < n) i += 2
-          else if (d == '\'' && i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-          else if (d == '\'') { i += 1; closed = true }
-          else i += 1
-        }
-      } else if (c == '`') {
-        i += 1
-        while (i < n && s.charAt(i) != '`') i += 1
-        if (i < n) i += 1
-      } else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') {
-        while (i < n && s.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && s.charAt(i + 1) == '*') {
-        i += 2
-        while (i + 1 < n && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-        i = math.min(n, i + 2)
-      } else {
-        mask(i) = true
-        i += 1
-      }
-    }
-    mask
-  }
+  /** The text of each of [[GraftEngine.statements]]. */
+  private[graft] def splitStatements(sql: String): Seq[String] =
+    GraftEngine.statements(sql).map(_.sql)
 
-  /** Split a multi-statement block on active-code semicolons; drops empty
-    * fragments (so a single trailing `;` is a no-op, not an empty
-    * statement). Comments and quoted text travel with their statement.
+  /** Route one statement on its leading tokens; keywords compare case-
+    * insensitively and a comment between them is invisible.
     */
-  private[graft] def splitStatements(sql: String): Seq[String] = {
-    val mask = codeMask(sql)
-    val out = Vector.newBuilder[String]
-    // a statement starts at its first ACTIVE non-whitespace char: leading
-    // comments are routing noise (`-- note\ninsert …` must route as an
-    // INSERT); a fragment that is pure comment is no statement at all
-    def emit(start: Int, end: Int): Unit = {
-      var s = start
-      while (s < end && !(mask(s) && !sql.charAt(s).isWhitespace)) s += 1
-      val stmt = sql.substring(s, end).trim
-      if (stmt.nonEmpty) out += stmt
-    }
-    var start = 0
-    var i = 0
-    while (i < sql.length) {
-      if (mask(i) && sql.charAt(i) == ';') { emit(start, i); start = i + 1 }
-      i += 1
-    }
-    emit(start, sql.length)
-    out.result()
-  }
-
-  private def runStatement(sql: String): DataFrame = sql match {
-    case GraftReleaseRe() =>
+  private def runStatement(s: Tokens): DataFrame = s.word(0) match {
+    case "GRAFT_RELEASE" if s.size == 1 || (s.size == 3 && s.word(1) == "(" && s.word(2) == ")") =>
       // the SQL-surface release path for serving-TVF scratch state: the
       // dedup/BPE TVFs pin tracked persisted frames per call (the caches
       // their plans reuse WITHIN one execution), and a long-lived session
@@ -422,62 +361,64 @@ class GraftEngine(val spark: SparkSession) {
       // result.
       graft.operators.Dedup.releaseCaches()
       emptyOk
-    case ShowTablesRe() => showTables()
-    case DescribeRe(t) => describe(t)
-    case ExplainRe(q) => explainDf(q)
-    case CtasRe(name, select) =>
-      requireNotExists(name)
-      register(name, runSelect(select)); emptyOk
-    case CreateTableRe(name, cols) =>
-      requireNotExists(name)
-      createTable(name, parseSchema(cols)); emptyOk
-    case CopyRe(t, path, opts) =>
-      // the reference rewrites COPY to INSERT..SELECT over read_csv
-      // (bind_copy.rs:10-35); same rewrite here. Header defaults to true
-      // like read_csv (tests/slt/csv/csv.slt: state1.csv's header row is
-      // skipped without any HEADER option); `HEADER false` disables.
-      val o = Option(opts).getOrElse("")
-      if (path.toLowerCase.endsWith(".parquet")) {
-        // columnar twin of the rewrite (extension; COPY in the reference
-        // is CSV-only) — same INSERT..SELECT shape over read_parquet
-        insertInto(t, None, readParquet(path))
-      } else {
-        val delim = """(?i)delimiter\s+'([^']+)'""".r
-          .findFirstMatchIn(o).map(_.group(1)).getOrElse(",")
-        val header = """(?i)header\s+false""".r.findFirstIn(o).isEmpty
-        insertInto(t, None, readCsv(path, header, delim))
+    case "SHOW" if s.size == 2 && s.word(1) == "TABLES" => showTables()
+    case "DESCRIBE" if s.size == 2 && s.isName(1) => describe(s.text(1))
+    case "EXPLAIN" if s.size > 1 => explainOf(s.drop(1))
+    case "CREATE" if s.word(1) == "TABLE" && s.isName(2) && s.word(3) == "AS" && s.word(4) == "SELECT" =>
+      requireNotExists(s.text(2))
+      register(s.text(2), runSelect(s.drop(4))); emptyOk
+    case "CREATE" if s.word(1) == "TABLE" && s.isName(2) && s.word(3) == "(" && s.close(3) == s.size - 1 =>
+      requireNotExists(s.text(2))
+      createTable(s.text(2), parseSchema(s.slice(4, s.size - 1))); emptyOk
+    case "COPY" => runCopy(s)
+    case "INSERT" if s.word(1) == "INTO" && s.isName(2) =>
+      val at = if (s.word(3) == "(") s.close(3) + 1 else 3
+      val cols = Option.when(at > 3)(s.slice(4, at - 1).commaList.map(_.plain))
+      s.word(at) match {
+        case "VALUES" =>
+          insertInto(s.text(2), cols, spark.sql(s"select * from ${s.drop(at).sql}")); emptyOk
+        case "SELECT" => insertInto(s.text(2), cols, runSelect(s.drop(at))); emptyOk
+        case _ => runSelect(s)
       }
-      emptyOk
-    case CopyAnyRe() => runCopyTo(sql) // COPY FROM already matched above
-    case InsertValuesRe(t, _, colList, values) =>
-      insertInto(t, Option(colList), spark.sql(s"select * from $values"))
-      emptyOk
-    case InsertSelectRe(t, _, colList, select) =>
-      insertInto(t, Option(colList), runSelect(select)); emptyOk
-    case _ => runSelect(sql)
+    case _ => runSelect(s)
   }
 
-  /** SELECT path. Two text rewrites run first, mask-aware so a phrase
-    * inside a string literal or comment is never touched: the
-    * OFFSET/LIMIT swap, and bare `FROM 'file.{csv,parquet,json[l]}'`
-    * (Spark's parser rejects a string literal as a relation). Then the
-    * statement is parsed ONCE, inside the planning tracker's parsing
-    * phase; the FROM-subquery alias rule is checked on that tree; every
-    * table-function call expands in place ([[expandTableFunctions]]); and
-    * the expanded tree is analyzed under the same tracker. An
-    * unresolved-column failure retries once on the same expanded tree
-    * with select-list aliases substituted into WHERE, so no table-function
-    * body runs twice.
+  /** `COPY t FROM 'path' (opts)` or `COPY <table | (subquery)> TO 'path'
+    * (opts)`, split at the first `TO` token outside parentheses.
     */
-  private def runSelect(sql0: String): DataFrame = {
-    // sqlparser-rs accepts OFFSET before LIMIT (tests/slt/order.slt:2);
-    // Spark's parser requires LIMIT first — swap the clause order
-    val swapped = maskedReplace(sql0, OffsetLimitRe) { m =>
-      s"limit ${m.group(2)} offset ${m.group(1)}"
-    }
-    val sql = maskedReplace(swapped, BareFileFromRe) { m =>
-      m.group(1) + bareFileView(m.group(2), m.group(3))
-    }
+  private def runCopy(s: Tokens): DataFrame = {
+    val from = s.isName(1) && s.word(2) == "FROM"
+    val to = if (from) 2 else s.find(TO)
+    val stmt = if (from) "COPY FROM" else "COPY TO"
+    require(to < s.size, s"unsupported COPY statement: ${s.sql}")
+    val path = s.string(to + 1).getOrElse(
+      throw new IllegalArgumentException(s"$stmt expects 'path' (options): ${s.sql}"))
+    val tail = s.drop(to + 2)
+    require(tail.size == 0 || (tail.word(0) == "(" && tail.close(0) == tail.size - 1),
+      s"$stmt expects 'path' (options): ${s.sql}")
+    val opts = copyOptions(stmt, tail.slice(1, tail.size - 1))
+    if (!from) copyTo(s.slice(1, to), path, opts)
+    // the reference's rewrite to INSERT..SELECT over read_csv
+    // (bind_copy.rs:10-35), header on by default like read_csv
+    // (tests/slt/csv/csv.slt); a parquet path reads through read_parquet
+    else if (path.toLowerCase.endsWith(".parquet")) insertInto(s.text(1), None, readParquet(path))
+    else insertInto(s.text(1), None, readCsv(path, opts.header, opts.one("delimiter").getOrElse(",")))
+    emptyOk
+  }
+
+  /** SELECT path. Two token splices come first ([[selectText]]): the
+    * OFFSET/LIMIT swap and bare `FROM 'file.{csv,parquet,json[l]}'`, which
+    * Spark's parser rejects. Then the statement is parsed ONCE, inside the
+    * planning tracker's parsing phase; the FROM-subquery alias rule is
+    * checked on that tree; every table-function call expands in place
+    * ([[expandTableFunctions]]); and the expanded tree is analyzed under
+    * the same tracker. An unresolved-column failure retries once on the
+    * same expanded tree with select-list aliases substituted into WHERE, so
+    * no table-function body runs twice. With `relation`, `s` is a relation
+    * read whole, as `select * from <s>` (COPY TO's source).
+    */
+  private def runSelect(s: Tokens, relation: Boolean = false): DataFrame = {
+    val sql = selectText(s, relation)
     val tracker = new QueryPlanningTracker
     val parsed = tracker.measurePhase(QueryPlanningTracker.PARSING) {
       spark.sessionState.sqlParser.parsePlan(sql)
@@ -496,39 +437,47 @@ class GraftEngine(val spark: SparkSession) {
     df
   }
 
+  /** `s`'s text for Spark's parser: `OFFSET m LIMIT n`, which sqlparser-rs
+    * accepts (tests/slt/order.slt:2), becomes `limit n offset m`, and a file
+    * literal after FROM becomes its [[bareFileView]].
+    */
+  private def selectText(s: Tokens, relation: Boolean): String = {
+    val edits = (0 until s.size).flatMap { i =>
+      s.kind(i) match {
+        case OFFSET if s.kind(i + 1) == INTEGER_VALUE && s.kind(i + 2) == LIMIT &&
+            s.kind(i + 3) == INTEGER_VALUE =>
+          Some((i, i + 4, s"limit ${s.text(i + 3)} offset ${s.text(i + 1)}"))
+        case STRING_LITERAL if (if (i == 0) relation else s.kind(i - 1) == FROM) =>
+          bareFileView(s.string(i).get).map(view => (i, i + 1, view))
+        case _ => None
+      }
+    }
+    (if (relation) "select * from " else "") + s.splice(edits)
+  }
+
   /** Bare `FROM 'file.ext'` auto-binds to the matching reader (CSV with
     * the read_csv defaults, header on). The relation is a temp view named
     * after the file stem so qualified references work — `select t1.a from
     * 'tests/csv/t1.csv'` binds t1 to the file (bind_base_table_ref.rs:98-118
-    * does the same); the stem view is user-facing and stays registered.
+    * does the same); the stem view is user-facing and stays registered. A
+    * path with another extension is no file relation.
     */
-  private def bareFileView(path: String, ext: String): String = {
-    val kind = if (ext.toLowerCase.startsWith("json")) "json" else ext.toLowerCase
-    val stem = path.split("/").last.dropRight(ext.length + 1)
-      .replaceAll("[^A-Za-z0-9_]", "_")
-    val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
-      else s"${kind}_$stem"
-    val df = kind match {
-      case "csv" => readCsv(path, header = true, delim = ",")
-      case "parquet" => readParquet(path)
-      case _ => readJson(path)
-    }
-    df.createOrReplaceTempView(view)
-    view
-  }
-
-  /** Literal/comment-safe regex rewrite: the replacement applies only to
-    * matches STARTING in active code (per [[codeMask]]) — a file path
-    * mentioned inside a string literal or a comment passes through
-    * verbatim instead of being eagerly read. Both text rewrites in
-    * [[runSelect]] go through this one helper.
-    */
-  private def maskedReplace(sql: String, re: scala.util.matching.Regex)(
-      f: scala.util.matching.Regex.Match => String): String = {
-    val mask = codeMask(sql)
-    re.replaceAllIn(sql, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (m.start < mask.length && !mask(m.start)) m.matched else f(m)))
+  private def bareFileView(path: String): Option[String] = {
+    val lower = path.toLowerCase
+    Seq("csv", "parquet", "json", "jsonl").find(e => lower.endsWith("." + e) && lower.length > e.length + 1)
+      .map { ext =>
+        val kind = if (ext.startsWith("json")) "json" else ext
+        val stem = GraftEngine.wordChars(path.split("/").last.dropRight(ext.length + 1))
+        val view = if (stem.headOption.exists(c => c.isLetter || c == '_')) stem
+          else s"${kind}_$stem"
+        val df = kind match {
+          case "csv" => readCsv(path, header = true, delim = ",")
+          case "parquet" => readParquet(path)
+          case _ => readJson(path)
+        }
+        df.createOrReplaceTempView(view)
+        view
+      }
   }
 
   // ---- table functions ---------------------------------------------------
@@ -1491,55 +1440,6 @@ class GraftEngine(val spark: SparkSession) {
     }
   }
 
-  /** Index of the first top-level (paren depth 0, outside string literals)
-    * occurrence of keyword `kw` at or after position `from`, as a whole
-    * word — the COPY TO split needs clause boundaries that ignore
-    * subqueries and string literals.
-    */
-  private def topLevelKeyword(s: String, kw: String, from: Int): Option[Int] = {
-    val mask = codeMask(s)
-    var depth = 0
-    var i = 0
-    val n = s.length
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      if (mask(i)) {
-        val c = s.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && i >= from &&
-          s.regionMatches(true, i, kw, 0, kw.length) &&
-          (i == 0 || !isWord(s.charAt(i - 1))) &&
-          (i + kw.length >= n || !isWord(s.charAt(i + kw.length))))
-          return Some(i)
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** Split a CREATE TABLE column list on top-level commas (ignores commas
-    * inside parens and quotes, e.g. `decimal(10, 2)`).
-    */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val mask = codeMask(s)
-    val out = mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      if (mask(i)) s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.filter(_.trim.nonEmpty).toSeq
-  }
-
   // ---- DDL/DML helpers ---------------------------------------------------
 
   /** Reference error semantics: CREATE TABLE over an existing name fails
@@ -1601,16 +1501,20 @@ class GraftEngine(val spark: SparkSession) {
 
   private[engine] val UnsignedMaxKey = "graft.unsignedMax"
 
-  private def parseSchema(colDefs: String): StructType =
-    StructType(splitTopLevel(colDefs).map { c =>
-      val parts = c.trim.split("\\s+", 2)
-      val norm = parts(1).trim.toLowerCase.replaceAll("\\s+", " ")
-      val meta = UnsignedMax.get(norm) match {
+  /** The column list of CREATE TABLE: definitions split on the commas
+    * outside parentheses (so `decimal(10, 2)` stays whole), each a name
+    * token and its type's tokens, read without comments.
+    */
+  private def parseSchema(colDefs: Tokens): StructType =
+    StructType(colDefs.commaList.map { c =>
+      require(c.size >= 2, s"column definition needs a name and a type: ${c.sql}")
+      val tpe = c.drop(1).plain
+      val meta = UnsignedMax.get(tpe.toLowerCase) match {
         case Some(mx) =>
           new MetadataBuilder().putString(UnsignedMaxKey, mx.toPlainString).build()
         case None => Metadata.empty
       }
-      StructField(parts(0).toLowerCase, parseType(parts(1)), nullable = true, meta)
+      StructField(c.text(0).toLowerCase, parseType(tpe), nullable = true, meta)
     })
 
   /** INSERT semantics from the reference (bind_insert.rs): explicit column
@@ -1621,11 +1525,10 @@ class GraftEngine(val spark: SparkSession) {
     * any other source (INSERT..SELECT, COPY) already pays for a job, so it
     * folds tail ∪ incoming into `appended` (see [[Appended]]).
     */
-  private def insertInto(name: String, colList: Option[String], values: DataFrame): Unit = {
+  private def insertInto(name: String, colList: Option[Seq[String]], values: DataFrame): Unit = {
     val st = tables(name.toLowerCase)
     val schema = st.base.schema
-    val explicit = colList.map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq)
-    val incoming = explicit.getOrElse(schema.fields.map(_.name).toSeq)
+    val incoming = colList.fold(schema.fields.map(_.name).toSeq)(_.map(_.toLowerCase))
     require(incoming.size == values.columns.length,
       s"INSERT column count mismatch: ${incoming.size} vs ${values.columns.length}")
     // a source column by its exact name: an unaliased expression's name
@@ -1766,26 +1669,20 @@ class GraftEngine(val spark: SparkSession) {
     * (table_name, column_names, column_types) with list-rendered strings,
     * e.g. `t1 [v1, v2, v3] [Integer, Integer, Integer]`.
     */
-  def sqlrsColumns(): DataFrame = {
-    import spark.implicits._
-    tables.toSeq.sortBy(_._1).map { case (t, st) =>
-      val df = st.view
-      (t,
-        df.schema.fields.map(_.name).mkString("[", ", ", "]"),
-        df.schema.fields.map(f => logicalTypeName(f.dataType)).mkString("[", ", ", "]"))
-    }.toDF("table_name", "column_names", "column_types")
-  }
+  def sqlrsColumns(): DataFrame = columnRows(tables.keys.toSeq.sorted)
 
-  /** DESCRIBE t renders identically to one sqlrs_columns() row
-    * (bind_explain_table.rs; golden output tests/slt/pragma.slt:14-17).
+  /** DESCRIBE t is t's sqlrs_columns() row (bind_explain_table.rs; golden
+    * output tests/slt/pragma.slt:14-17).
     */
-  def describe(name: String): DataFrame = {
+  def describe(name: String): DataFrame = columnRows(Seq(name.toLowerCase))
+
+  private def columnRows(names: Seq[String]): DataFrame = {
     import spark.implicits._
-    val df = table(name)
-    Seq((name.toLowerCase,
-      df.schema.fields.map(_.name).mkString("[", ", ", "]"),
-      df.schema.fields.map(f => logicalTypeName(f.dataType)).mkString("[", ", ", "]")))
-      .toDF("table_name", "column_names", "column_types")
+    names.map { t =>
+      val fields = table(t).schema.fields
+      (t, fields.map(_.name).mkString("[", ", ", "]"),
+        fields.map(f => logicalTypeName(f.dataType)).mkString("[", ", ", "]"))
+    }.toDF("table_name", "column_names", "column_types")
   }
 
   /** Per-column catalog dump (richer than the reference surface; kept for
@@ -1813,9 +1710,11 @@ class GraftEngine(val spark: SparkSession) {
     * (the reference prints binder column indices that have no Spark
     * analogue); node names and tree shape are the parity surface.
     */
-  def explainDf(sql: String): DataFrame = {
+  def explainDf(sql: String): DataFrame = explainOf(GraftEngine.tokens(sql))
+
+  private def explainOf(s: Tokens): DataFrame = {
     import spark.implicits._
-    val qe = runSelect(sql).queryExecution
+    val qe = runSelect(s).queryExecution
     Seq(
       ("logical_plan", renderLogicalTree(qe.analyzed)),
       ("logical_plan_opt", renderLogicalTree(qe.optimizedPlan)),
@@ -1912,6 +1811,98 @@ class GraftEngine(val spark: SparkSession) {
 }
 
 object GraftEngine {
+
+  /** A statement, or part of one, as the visible tokens of Spark's SQL
+    * lexer: whitespace and comments are hidden, and a literal, quoted
+    * identifier or comment is one token, so nothing inside one reads as a
+    * keyword, paren, comma or `;`.
+    */
+  private[engine] final case class Tokens(toks: IndexedSeq[Token]) {
+    def size: Int = toks.size
+    def kind(i: Int): Int = if (i < size) toks(i).getType else Token.EOF
+    def text(i: Int): String = toks(i).getText
+    /** Token i's text in upper case ("" past the end); a literal keeps its quotes. */
+    def word(i: Int): String = if (i < size) text(i).toUpperCase(java.util.Locale.ROOT) else ""
+    /** Token i is a plain name: letters, digits and underscores. */
+    def isName(i: Int): Boolean = i < size && text(i).forall(c => c.isLetterOrDigit || c == '_')
+    /** Token i's value when it is a string literal, unescaped as Spark's parser does. */
+    def string(i: Int): Option[String] =
+      if (kind(i) == STRING_LITERAL) Some(SparkParserUtils.string(toks(i))) else None
+    def slice(from: Int, until: Int): Tokens = Tokens(toks.slice(from, until))
+    def drop(n: Int): Tokens = slice(n, size)
+
+    /** Paren depth before each token. */
+    private lazy val depth: Array[Int] = toks.iterator.map(_.getType).scanLeft(0) {
+      case (d, LEFT_PAREN) => d + 1
+      case (d, RIGHT_PAREN) => d - 1
+      case (d, _) => d
+    }.toArray
+
+    /** Index of the `)` closing the `(` at i, or `size` when none does. */
+    def close(i: Int): Int =
+      (i + 1 until size).find(j => kind(j) == RIGHT_PAREN && depth(j) == depth(i) + 1).getOrElse(size)
+
+    /** Index of the first token of kind `k` outside parentheses, or `size`. */
+    def find(k: Int): Int = (0 until size).find(i => kind(i) == k && depth(i) == 0).getOrElse(size)
+
+    /** The non-empty runs between the tokens at which `cut` holds. */
+    def split(cut: Int => Boolean): Seq[Tokens] = {
+      val cuts = (0 until size).filter(cut)
+      ((-1 +: cuts) zip (cuts :+ size)).collect { case (a, b) if b > a + 1 => slice(a + 1, b) }
+    }
+
+    /** The items of a comma-separated list (commas outside parentheses). */
+    def commaList: Seq[Tokens] = split(i => kind(i) == COMMA && depth(i) == 0)
+
+    /** The source text from the first token through the last. */
+    def sql: String = splice(Nil)
+
+    /** [[sql]] with disjoint, ordered token spans [from, until) replaced. */
+    def splice(edits: Seq[(Int, Int, String)]): String =
+      if (toks.isEmpty) ""
+      else {
+        // positions count code points, so text is read through the stream
+        def source(from: Int, until: Int): String =
+          if (until <= from) "" else toks.head.getInputStream.getText(Interval.of(from, until - 1))
+        val out = new StringBuilder
+        var at = toks.head.getStartIndex
+        edits.foreach { case (from, until, text) =>
+          out ++= source(at, toks(from).getStartIndex) ++= text
+          at = toks(until - 1).getStopIndex + 1
+        }
+        (out ++= source(at, toks.last.getStopIndex + 1)).toString
+      }
+
+    /** The tokens' text with one space wherever the source had whitespace
+      * or a comment between two of them.
+      */
+    def plain: String = toks.indices.map { i =>
+      if (i > 0 && toks(i).getStartIndex > toks(i - 1).getStopIndex + 1) " " + text(i) else text(i)
+    }.mkString
+  }
+
+  /** `sql` lexed once, without the lexer's error listeners: Spark's parser
+    * reports a syntax error.
+    */
+  private[engine] def tokens(sql: String): Tokens = {
+    val lexer = GraftSqlLexer(sql)
+    lexer.removeErrorListeners()
+    Tokens(lexer.getAllTokens.asScala.iterator.filter(_.getChannel == Token.DEFAULT_CHANNEL).toIndexedSeq)
+  }
+
+  /** The statements of `sql`: the runs between its `;` tokens, so comments
+    * around a statement drop and comments alone are no statement.
+    */
+  private[engine] def statements(sql: String): Seq[Tokens] = {
+    val all = tokens(sql)
+    all.split(all.kind(_) == SEMICOLON)
+  }
+
+  /** A name from a file path: characters other than ASCII letters, digits
+    * and `_` become `_`.
+    */
+  private[engine] def wordChars(s: String): String =
+    s.map(c => if (c < 128 && (c.isLetterOrDigit || c == '_')) c else '_')
 
   /** Packs a union's partitions into at most n groups, with no shuffle.
     * The first `rows.size` partitions, whose row counts are known, go

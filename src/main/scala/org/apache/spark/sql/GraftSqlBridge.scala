@@ -1,15 +1,20 @@
 package org.apache.spark.sql
 
+import org.antlr.v4.runtime.CharStreams
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into `private[sql]` surface that custom logical plans
   * need: building a DataFrame from a hand-constructed (or parsed and
   * rewritten) LogicalPlan or from Catalyst rows, extracting the Catalyst
-  * expression behind a public Column, and the optimizer's first batch.
+  * expression behind a public Column, the optimizer's first batch, and
+  * Spark's SQL lexer.
   * All are the classic (non-Connect) implementations this engine always
   * runs on; the bridge is the entire private-API footprint of the project,
   * kept in one file on purpose.
@@ -54,8 +59,25 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.optimizer.FinishAnalysis(plan)
 
   /** A DataFrame over Catalyst rows, with no conversion to or from Row.
-    * Every column is declared nullable.
+    * Every column is declared nullable. Its LogicalRDD carries `rowCount` and a size estimate of rows × row width,
+    * so the optimizer sizes it as it sizes a LocalRelation instead of at
+    * `spark.sql.defaultSizeInBytes`.
     */
-  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema.asNullable)
+  def internalDataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType,
+      rowCount: Long): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema.asNullable)
+    val stats = Statistics(EstimationUtils.getOutputSize(output, rowCount), Some(BigInt(rowCount)))
+    classic.Dataset.ofRows(session, LogicalRDD(output, rows)(session, Some(stats)))
+  }
+}
+
+package catalyst.parser {
+  /** Spark's SQL lexer over the upper-casing stream its parser reads (a
+    * `private[parser]` class, hence this package).
+    */
+  object GraftSqlLexer {
+    def apply(sql: String): SqlBaseLexer =
+      new SqlBaseLexer(new UpperCaseCharStream(CharStreams.fromString(sql)))
+  }
 }

@@ -318,6 +318,58 @@ class EngineSpec extends AnyFunSuite {
       s"roundtrip count mismatch across $total files")
   }
 
+  test("COPY TO FORMAT: quoted and bare values both write csv") {
+    val base = java.nio.file.Files.createTempDirectory("graft_copyfmt").toString
+    engine.run("create table cf_t(id int, lang varchar)")
+    engine.run("insert into cf_t values (1,'en'),(2,'de')")
+    for ((dir, fmt) <- Seq("q" -> "'csv'", "b" -> "csv", "u" -> "'CSV'")) {
+      engine.run(s"copy cf_t to '$base/$dir' (FORMAT $fmt)")
+      val files = new java.io.File(s"$base/$dir").listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(files.nonEmpty && files.forall(_.endsWith(".csv")), s"FORMAT $fmt wrote ${files.toSeq}")
+      assert(engine.readCsv(s"$base/$dir", header = true, delim = ",").count() == 2L)
+    }
+  }
+
+  test("COPY options: an unknown key errors and names the accepted keys") {
+    val base = java.nio.file.Files.createTempDirectory("graft_copyopt").toString
+    engine.run("create table co_t(id int, lang varchar)")
+    val to = intercept[IllegalArgumentException] {
+      engine.run(s"copy co_t to '$base/o.csv' (DELIMTER '|')")
+    }.getMessage
+    assert(to.contains("DELIMTER") && to.contains("DELIMITER") && to.contains("PARTITION_BY"), to)
+    assert(!new java.io.File(s"$base/o.csv").exists(), "a rejected COPY TO writes nothing")
+    val from = intercept[IllegalArgumentException] {
+      engine.run(s"copy co_t from '${fixture("state_pipe_header")}' (delimter '|')")
+    }.getMessage
+    assert(from.contains("DELIMTER") && from.contains("accepted: DELIMITER, HEADER"), from)
+    assert(rows("select count(*) from co_t").head.head == 0L)
+  }
+
+  test("a double-quoted literal's ';' does not split the statement") {
+    assert(rows("select \"a;b\" as s") == Seq(Seq("a;b")))
+  }
+
+  test("a comment between INSERT and INTO still routes as an INSERT") {
+    engine.run("create table lex_ins_t(a int, b varchar)")
+    engine.run("insert /* c */ into lex_ins_t values (3, 'z')")
+    assert(rows("select a, b from lex_ins_t") == Seq(Seq(3, "z")))
+  }
+
+  test("a line comment in a CREATE TABLE column list is no part of a column") {
+    engine.run("create table lex_cols_t(\n  a int, -- first column\n  b decimal(10, 2)\n)")
+    assert(engine.table("lex_cols_t").schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+      Seq(("a", IntegerType), ("b", DecimalType(10, 2))))
+  }
+
+  test("inserted rows carry statistics: the table stays broadcast-sized") {
+    engine.run("create table stats_t(a int, b varchar)")
+    engine.run("insert into stats_t values (1, 'x'), (2, 'y')")
+    engine.run("insert into stats_t select a + 10, b from stats_t")
+    val size = engine.table("stats_t").queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size < spark.sessionState.conf.autoBroadcastJoinThreshold, s"sizeInBytes = $size")
+    assert(rows("select count(*) from stats_t").head.head == 4L)
+  }
+
   // ---- pragma.slt / table_function.slt ----
   test("show tables + sqlrs_tables()") {
     val t = rows("show tables").map(_(1))

@@ -175,8 +175,9 @@ object KernelProperties extends Properties("graft.kernels") {
   // ---- statement splitting (engine scanner) ------------------------------
 
   /** Statement bodies that cannot themselves contain a top-level `;`:
-    * word runs, quoted strings with embedded semicolons/escapes, backtick
-    * identifiers, and comments.
+    * word runs, single- and double-quoted strings with embedded
+    * semicolons/escapes/comment markers, backtick identifiers, and (nested)
+    * comments.
     */
   private val stmtAtom: Gen[String] = Gen.oneOf(
     Gen.alphaNumStr.suchThat(_.nonEmpty).map("select " + _),
@@ -185,7 +186,10 @@ object KernelProperties extends Properties("graft.kernels") {
     Gen.const("select 'it''s; fine'"),
     Gen.const("select 1 as `a;b`"),
     Gen.const("select 1 -- trailing; comment\nfrom t"),
-    Gen.const("select /* block; comment */ 2"))
+    Gen.const("select /* block; comment */ 2"),
+    Gen.const("select \"a;b\""),
+    Gen.const("select \"--\" as s"),
+    Gen.const("select /* a /* nested; */ b; */ 1"))
 
   property("splitStatements recovers the statements joined with ';'") =
     forAll(Gen.nonEmptyListOf(stmtAtom)) { stmts =>
