@@ -8,15 +8,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `Database`/`ClientContext` entry points (reference: src/db.rs:107,
   * src/main_entry/client_context.rs:76) map onto one [[SparkSession]] here.
   * All parallelism that the reference lacks (it is single-threaded,
-  * SURVEY.md §4.3) comes from Spark's distributed execution: we size shuffle
-  * partitions for local[32] but every operator is written to scale out —
-  * partition-parallel scans, map-side partial aggregation, broadcast for
-  * small dimension tables, AQE for runtime re-planning and skew handling.
+  * SURVEY.md §4.3) comes from Spark's distributed execution: the shuffle
+  * width follows the data (`Tables.applySessionWidth`), and every operator
+  * is written to scale out — partition-parallel scans, map-side partial
+  * aggregation, broadcast for small dimension tables, AQE for runtime
+  * re-planning and skew handling.
   */
 object GraftSession {
 
-  /** Build a SparkSession tuned for this workload. `local[32]` in tests /
-    * bench; on a real cluster the master line is the only change.
+  /** Build a SparkSession tuned for this workload. The default master is
+    * `local[N]` with N from `SPARK_GRAFT_CPUS` (32 when unset); on a real
+    * cluster the master line is the only change. `shufflePartitions` is
+    * only the starting width: every harness entry that knows its data
+    * directory resets it to the data-derived width with
+    * [[Tables.applySessionWidth]].
+    *
+    * Two extensions are injected through [[org.apache.spark.sql.SparkSessionExtensions]],
+    * so `spark.sql` and DataFrame plans both get them:
+    *  - a planner strategy for per-key top-k ([[graft.plans.TopKPerKeyStrategy]]);
+    *  - a pre-transition columnar rule ([[graft.plans.ParamLiterals]]) that
+    *    moves the constants of filters and projections out of the generated
+    *    Java source, so a statement shape run again with new constants
+    *    reuses its compiled classes instead of compiling new ones. The
+    *    compiled-class cache is sized so that those classes stay cached.
     */
   def build(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -26,10 +40,17 @@ object GraftSession {
       .builder()
       .master(master)
       .appName(appName)
-      // custom whole-operator extensions (graft.plans.*): per-key top-k
-      // bounded-heap selection — injected the sanctioned way so `spark.sql`
-      // plans and DataFrame plans both see the strategy
-      .withExtensions(_.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy))
+      .withExtensions { e =>
+        e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+        e.injectColumnar(_ => graft.plans.ParamLiterals.columnarRule)
+      }
+      // the compiled-class cache is a Guava LRU split into 4 segments of
+      // maxEntries/4; at the default 100, the 73 classes of one pass over
+      // the interactive shapes overflow a segment in about half of all
+      // JVMs (its keys hash the class loader's identity), and that
+      // segment then evicts and recompiles on every lap. 1000 leaves room
+      // for every shape of a session's hot set to stay compiled.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1911,4 +1911,49 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(nodeCount(p, "HashAggregate") >= 2, p)
     assert(nodeCount(p, "Window") == 1, p)
   }
+
+  test("constants leave generated source, never the scans: pushdown and reuse intact") {
+    import org.apache.spark.sql.execution.{
+      FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.plans.ParamLiteral
+    object aqe extends AdaptiveSparkPlanHelper
+    def hasParam(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[ParamLiteral]))
+    // the executed plan, after the run (adaptive stages included)
+    def executed(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+    def filters(p: SparkPlan): Seq[FilterExec] = aqe.collect(p) { case f: FilterExec => f }
+
+    val e = new graft.engine.GraftEngine(spark)
+    e.createParquetTable("pq_param_part", s"$dir/part.parquet")
+    def lookup(k: Int): DataFrame =
+      e.run(s"SELECT p_partkey, p_name, p_retailprice FROM pq_param_part WHERE p_partkey = $k")
+    val one = lookup(42)
+    val exec = executed(one)
+    val p = one.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(p.contains("PushedFilters: [IsNotNull(p_partkey), EqualTo(p_partkey,42)]"),
+      s"the point lookup must still push its literal to parquet:\n$p")
+    assert(filters(exec).exists(hasParam), s"the filter's constant should be a parameter:\n$exec")
+
+    // a cached frame's batch-pruning predicates keep their literals too
+    val cached = spark.range(100).selectExpr("id AS k", "id * 2 AS v").cache()
+    try {
+      val execs = Seq(exec, executed(cached.where("k = 7 AND v > 3")))
+      val scans = execs.flatMap(x => aqe.collect(x) {
+        case s: FileSourceScanExec => s: SparkPlan
+        case s: InMemoryTableScanExec => s
+      })
+      assert(scans.size == 2 && scans.forall(s => s.expressions.nonEmpty && !hasParam(s)),
+        s"no scan may hold a ParamLiteral:\n${execs.mkString("\n")}")
+    } finally cached.unpersist(blocking = true)
+
+    // plans that differ only in a constant must not canonicalize equal,
+    // or exchange reuse could serve one value's rows for the other
+    val same = filters(executed(lookup(42))).head
+    val other = filters(executed(lookup(43))).head
+    val f42 = filters(exec).head
+    assert(f42.canonicalized == same.canonicalized)
+    assert(f42.canonicalized != other.canonicalized && !f42.sameResult(other))
+  }
 }
