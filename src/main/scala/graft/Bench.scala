@@ -39,8 +39,8 @@ import org.apache.spark.sql.SparkSession
   *   - `probe_sec` carries a fixed trivial probe timed at start/middle/
   *     end of the pass — a large spread marks the artifact as taken under
   *     container CPU starvation (see BENCH_r08's 10× inflation).
-  *   - `fit_sec` times the model/index prebuild (IVF, PQ, PCA, pair
-  *     index, cc map) run BEFORE the loop, so per-query numbers are
+  *   - `fit_sec` times the prebuild of every store in Pipeline's store
+  *     table, run BEFORE the loop, so per-query numbers are
   *     steady-state serving, not serving + whichever one-time fit the
   *     pass order happened to charge them with.
   *
@@ -239,13 +239,14 @@ object Bench {
       graft.operators.Dedup.unpersistAll()
     }
 
-    // Pre-build the persisted models/indexes (IVF centroids, PQ
-    // codebooks, PCA fit, tf-idf pair index, cc map) BEFORE the timed
-    // loop: these are one-time per-corpus fit costs — production serves
-    // them from disk — and letting whichever query runs first pay them
-    // smeared g1/t13/a2's round-9 numbers with fit time. The cost is
-    // reported as its own `fit_sec` so the artifact separates fit from
-    // steady-state serving. Near-zero when the models already exist.
+    // Pre-build every store in Pipeline's store table (models, centroid
+    // tables, indexes) BEFORE the timed loop: these are one-time
+    // per-corpus fit costs — production serves them from disk — and
+    // letting whichever query runs first pay them smeared g1/t13/a2's
+    // round-9 numbers with fit time. The cost is reported as its own
+    // `fit_sec` so the artifact separates fit from steady-state
+    // serving. The index stores rebuild in every JVM; the model and
+    // centroid stores load when their bytes on disk are valid.
     val fitT0 = System.nanoTime()
     val built =
       try queries.Pipeline.prebuildModels(spark, sfDir)

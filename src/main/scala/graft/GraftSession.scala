@@ -186,13 +186,16 @@ object Tables {
     w
   }
 
-  /** Directory for small persisted model tables (PCA models, IVF
-    * centroids) fitted against `sfDir`'s data — the model-as-data half of
-    * an oracle-backed gate: Spark writes the fitted state here as parquet
-    * and the DuckDB oracle `read_parquet`s the identical bytes (see
-    * `Verify`'s `__GRAFT_MODELS__` substitution). Keyed by the sf dir
-    * name so verify (sf0.01) and bench (sf0.1) runs never clobber each
-    * other's models.
+  /** Root of the persisted stores built from `sfDir`'s data — every
+    * model, centroid table and index declared in `queries.Pipeline`'s
+    * store table (see `queries.Store`), plus the oracle artifacts some
+    * queries write. It is the model-as-data half of an oracle-backed
+    * gate: Spark writes the bytes here as parquet and the DuckDB oracle
+    * `read_parquet`s the identical bytes (see `Verify`'s
+    * `__GRAFT_MODELS__` substitution). Keyed by the sf dir name so verify
+    * (sf0.01) and bench (sf0.1) runs never clobber each other's stores;
+    * relative to the working directory, so a run from a fresh directory
+    * fits from an empty root.
     */
   def modelsDir(sfDir: String): String = {
     val sfName = new java.io.File(sfDir).getName

@@ -1,11 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Decontaminate, Dedup, FuzzyJoin, Graph, Layout, Multimodal, Privacy, Probe, Similarity, Tokenizer}
+import graft.operators.{Bucketing, Decontaminate, Dedup, FuzzyJoin, Graph, Layout, Multimodal, Privacy, Probe, Similarity, Tokenizer}
 
 /** Training-data-pipeline operators over the `documents` / `embeddings`
   * tables: the dedup family, similarity search, and text analysis.
@@ -27,163 +31,204 @@ object Pipeline {
   val BpePattern: String =
     """'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\f\r]+|[ \t\n\f\r]+"""
 
-  /** The v4/v4p/v5 queries share one whitened dim=64/k=8 model, and the
-    * fit is DETERMINISTIC for a given sf dir (hash-prefix sample, decimal
-    * sums, fixed-sweep Jacobi — bit-identical on any partitioning), so
-    * memoizing by dir is semantically transparent: each JVM pays the
-    * covariance pass once instead of once per query. Queries stay
-    * self-contained — a cold cache just refits the identical model.
+  // ---- persisted stores ------------------------------------------------
+  // Each store is declared once below, after the stores it reads; the
+  // declaration order is the table prebuildModels fits and the tiebreak
+  // of its schedule.
+
+  private val declared = scala.collection.mutable.ArrayBuffer.empty[Store[_]]
+  /** Every persisted store, in declaration order. */
+  private[graft] def stores: Seq[Store[_]] = declared.toSeq
+  private def declare[T](st: Store[T]): Store[T] = { declared += st; st }
+
+  private def modelPath(dir: String, file: String): String =
+    s"${Tables.modelsDir(dir)}/$file"
+
+  /** Stable per-sf-dir catalog-name suffix: basename (readability) plus
+    * a 4-byte path hash (two dirs sharing a basename must never alias
+    * to one catalog table — the second caller would silently serve the
+    * first dir's data).
     */
-  /** Per-key lazy holder (the materializedIndex discipline): the
-    * ConcurrentHashMap only installs this cheap object — the Spark fit
-    * job runs under the HOLDER's lazy lock, not the map's bin lock, so
-    * first fitters of different models/dirs never serialize behind one
-    * another.
-    */
-  private final class ModelHolder[T](build: () => T) {
-    lazy val value: T = build()
+  private def dirTag(dir: String): String = {
+    val pathTag = java.security.MessageDigest.getInstance("MD5")
+      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
+      .take(4).map("%02x".format(_)).mkString
+    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_") +
+      "_" + pathTag
   }
 
-  private val pcaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[Similarity.PcaModel]]()
-  private def fittedPca(s: SparkSession, dir: String): Similarity.PcaModel =
-    pcaMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      loadPcaFit(s, dir, dim = 64, k = 8).getOrElse {
-        val model = Similarity.fitPca(Tables.loadFanned(s, dir, "embeddings"),
-          dim = 64, k = 8, whiten = true)
-        savePcaFit(s, dir, model)
-        model
-      })).value
-
-  /** Cross-JVM cache of the fitted PCA model (the pq_model discipline):
-    * the fit is deterministic per sf dir, so a later JVM (Verify at one
-    * sf, Bench at another, repeated bench passes) loads the persisted
-    * state instead of re-running the covariance pass + Jacobi sweep.
-    * Stored at `pca_fit.parquet` — deliberately separate from
-    * `pca_model.parquet`, which is v4p's ORACLE artifact (written from
-    * the in-memory model every run so its gate contract is untouched).
-    * Shape-validated on load; any mismatch refits. Same immutable-data
-    * contract as [[materializedIndex]].
+  /** A store each JVM rebuilds (index-as-data): `build`'s frame,
+    * published at `<modelsDir>/<file>` (default `<name>.parquet`) and
+    * re-read by every consumer, so they all scan the same bytes.
+    *
+    * With bucket `keys` the bytes are written bucketed by the store's
+    * probe key — the storage posture for every index a LIFECYCLE
+    * operation joins against (r16's verdict: stores persisted as plain
+    * parquet made every delete/merge/probe equi join shuffle the full
+    * store side; at 100 TB a takedown that is ∝ revoked-set in
+    * arithmetic still paid a full-store exchange in the join). The scan
+    * then reports hashpartitioning(key, width), so delete/merge/probe
+    * joins plan ZERO exchange above the store scan — only the
+    * takedown-sized delta side moves (PlanQualitySpec asserts the shape
+    * for d23/d25b). Bucket metadata lives in the catalog, so the store
+    * is served as table `<table>_<dirTag>` (default `graft_idx_<name>`);
+    * the files stay plain parquet, one file per bucket, the same
+    * oracle-readable layout as the unbucketed form. The catalog is
+    * per-JVM (in-memory) and the path outlives it: a fresh JVM
+    * re-registers by rewriting (deterministic bytes, charged to
+    * `fit_sec`).
     */
+  private def index(name: String, deps: Seq[Store[_]], keys: Seq[String] = Nil,
+      file: String = "", table: String = "")(
+      build: (SparkSession, String) => DataFrame): Store[DataFrame] =
+    declare(new Store[DataFrame](name, deps)({ (s, dir) =>
+      val path = modelPath(dir, if (file.isEmpty) s"$name.parquet" else file)
+      if (keys.isEmpty) {
+        Store.publish(s, path)(build(s, dir).write.parquet(_))
+        _.read.parquet(path)
+      } else {
+        val tbl = s"${if (table.isEmpty) s"graft_idx_$name" else table}_${dirTag(dir)}"
+        if (!s.catalog.tableExists(tbl)) {
+          // bucket width = the data-derived engine width (Tables
+          // .adaptiveWidth): deterministic per sf dir, so a fresh JVM
+          // re-registers the identical layout; r19's constant 32 was
+          // the local core count in disguise and over-fanned every
+          // scan at small SFs (see the GraftSession.Tables scaladoc)
+          val buckets = Tables.adaptiveWidth(s, dir)
+          val tmpTable = s"${tbl}_tmp"
+          var schema: StructType = null
+          Store.publish(s, path) { tmp =>
+            s.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
+            try {
+              Bucketing.writeBucketed(build(s, dir), tmpTable, tmp,
+                buckets = buckets, keys = keys)
+              schema = s.table(tmpTable).schema
+            } finally s.sql(s"DROP TABLE IF EXISTS `$tmpTable`") // external: files stay
+          }
+          // metadata-only over the published directory
+          Bucketing.registerBucketed(s, tbl, path, buckets = buckets,
+            keys = keys, schema = schema)
+        }
+        _.table(tbl)
+      }
+    }))
+
+  /** A store whose valid bytes on disk outlive the JVM (the model and
+    * centroid stores): `load` reads and shape-checks them — None, or any
+    * non-fatal error, means missing or stale — else `fit` builds and
+    * publishes. Each fit is deterministic per sf dir (hash-prefix
+    * samples, decimal-routed sums, fixed sweeps — bit-identical on any
+    * partitioning), so a later JVM (Verify at one sf, Bench at another,
+    * repeated bench passes) loads the state instead of refitting, and a
+    * shape mismatch from changed fit parameters refits rather than
+    * serves.
+    */
+  private def loadOrFit[T](name: String, deps: Store[_]*)(
+      load: (SparkSession, String) => Option[T])(
+      fit: (SparkSession, String) => T): Store[T] =
+    declare(Store.value(name, deps: _*) { (s, dir) =>
+      (try load(s, dir) catch { case NonFatal(_) => None }).getOrElse(fit(s, dir))
+    })
+
+  /** A centroid table `(…, centroid, …)` at `<modelsDir>/<file>`
+    * (default `<name>.parquet`), served as its path: loaded when it holds
+    * `rows` rows, passes `valid`, and every centroid has `dim` components
+    * (default: the corpus's embedding width), else `fit`'s frame is
+    * published in one file. The parquet doubles as the cross-JVM cache
+    * and the oracle's centroids-as-data input, so a later JVM serves
+    * from it instead of re-running the Lloyd fit in the timed loop. The
+    * table is read FIRST — only a successful load pays the corpus job
+    * behind the default `dim`, and a stale table with wrong-length
+    * centroids refits instead of feeding wrong-length literals into an
+    * assignment expression.
+    */
+  private def centroids(name: String, deps: Seq[Store[_]] = Nil,
+      file: String = "", rows: Int = 16, dim: Option[Int] = None,
+      valid: Array[Row] => Boolean = _ => true)(
+      fit: (SparkSession, String) => DataFrame): Store[String] = {
+    def path(dir: String) = modelPath(dir, if (file.isEmpty) s"$name.parquet" else file)
+    loadOrFit(name, deps: _*) { (s, dir) =>
+      val rs = s.read.parquet(path(dir)).collect()
+      lazy val d = dim.getOrElse(Tables.loadFanned(s, dir, "embeddings")
+        .select(size(col("embedding")).as("d")).head().getInt(0))
+      Some(path(dir)).filter(_ => rs.length == rows && valid(rs) &&
+        rs.forall(_.getAs[scala.collection.Seq[Double]]("centroid").size == d))
+    } { (s, dir) =>
+      Store.publish(s, path(dir))(fit(s, dir).coalesce(1).write.parquet(_))
+    }
+  }
+
+  /** The v4/v4p/v5 queries share one whitened dim=64/k=8 PCA model, so
+    * each JVM pays the covariance pass and Jacobi sweep once instead of
+    * once per query, and a later JVM loads it. Stored at `pca_fit.parquet`
+    * — deliberately separate from `pca_model.parquet`, which is v4p's
+    * ORACLE artifact (written from the in-memory model every run so its
+    * gate contract is untouched).
+    */
+  private val fittedPca = loadOrFit("pca_fit")(loadPcaFit(_, _, dim = 64, k = 8)) {
+    (s, dir) =>
+      val model = Similarity.fitPca(Tables.loadFanned(s, dir, "embeddings"),
+        dim = 64, k = 8, whiten = true)
+      savePcaFit(s, dir, model)
+      model
+  }
+
   private def savePcaFit(s: SparkSession, dir: String,
       model: Similarity.PcaModel): Unit = {
     import s.implicits._
     val rows =
       Seq(("mean", 0, model.means.toSeq), ("eig", 0, model.eigenvalues.toSeq)) ++
         model.components.zipWithIndex.map { case (c, r) => ("comp", r, c.toSeq) }
-    rows.toDF("kind", "idx", "vec").coalesce(1).write.mode("overwrite")
-      .parquet(s"${Tables.modelsDir(dir)}/pca_fit.parquet")
+    Store.publish(s, modelPath(dir, "pca_fit.parquet"))(
+      rows.toDF("kind", "idx", "vec").coalesce(1).write.parquet(_))
   }
   private def loadPcaFit(s: SparkSession, dir: String,
-      dim: Int, k: Int): Option[Similarity.PcaModel] =
-    try {
-      val rows = s.read.parquet(s"${Tables.modelsDir(dir)}/pca_fit.parquet")
-        .collect() // O(k·dim) model state
-      def vec(kind: String, idx: Int): Option[Array[Double]] =
-        rows.find(r => r.getAs[String]("kind") == kind
-          && r.getAs[Int]("idx") == idx)
-          .map(_.getAs[scala.collection.Seq[Double]]("vec").toArray)
-      val means = vec("mean", 0)
-      val eig = vec("eig", 0)
-      val comps = (0 until k).map(vec("comp", _))
-      if (means.exists(_.length == dim) && eig.exists(_.length == k) &&
-          comps.forall(_.exists(_.length == dim)))
-        Some(Similarity.PcaModel(means.get, comps.map(_.get).toArray, eig.get))
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+      dim: Int, k: Int): Option[Similarity.PcaModel] = {
+    val rows = s.read.parquet(modelPath(dir, "pca_fit.parquet"))
+      .collect() // O(k·dim) model state
+    def vec(kind: String, idx: Int): Option[Array[Double]] =
+      rows.find(r => r.getAs[String]("kind") == kind
+        && r.getAs[Int]("idx") == idx)
+        .map(_.getAs[scala.collection.Seq[Double]]("vec").toArray)
+    val means = vec("mean", 0)
+    val eig = vec("eig", 0)
+    val comps = (0 until k).map(vec("comp", _))
+    if (means.exists(_.length == dim) && eig.exists(_.length == k) &&
+        comps.forall(_.exists(_.length == dim)))
+      Some(Similarity.PcaModel(means.get, comps.map(_.get).toArray, eig.get))
+    else None
+  }
 
-  /** a2's IVF centroid fit shares the same cross-JVM treatment: the
-    * Lloyd fit is deterministic per sf dir (hash-prefix seed sample,
-    * decimal-routed updates), the centroid table IS the index
-    * (saveIvfIndex), so fit once, persist, and every later JVM serves
-    * query batches against the loaded centroids — the production ANN
-    * shape. Row-count + dimension validated on load; mismatch refits.
+  /** a2's IVF centroids: the centroid table IS the index, so it is fit
+    * once and every later JVM serves query batches against the loaded
+    * centroids — the production ANN shape.
     */
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedIvfPath(s: SparkSession, dir: String,
-      nlist: Int): String =
-    // keyed by (dir, nlist): a second call site with a different nlist
-    // must never be served the first caller's index
-    ivfMemo.computeIfAbsent(s"$dir#$nlist", _ => new ModelHolder(() => {
-      val path = s"${Tables.modelsDir(dir)}/ivf_centroids_$nlist.parquet"
-      val ok =
-        try {
-          // read the cached index FIRST — only a successful load pays
-          // the corpus job that reads the expected dimensionality (a
-          // stale index with wrong-length centroids must refit, not
-          // feed wrong-length literals into the assignment expression);
-          // the fresh-fit path skips the validation job entirely
-          val rows = s.read.parquet(path).collect()
-          lazy val dim = Tables.loadFanned(s, dir, "embeddings")
-            .select(size(col("embedding")).as("d")).head().getInt(0)
-          rows.length == nlist && rows.forall(
-            _.getAs[scala.collection.Seq[Double]]("centroid").size == dim)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) Similarity.saveIvfIndex(
-        Similarity.lloydCentroids(Tables.loadFanned(s, dir, "embeddings"),
-          nlist = nlist, iters = 2), path)
-      path
-    })).value
+  private val fittedIvfPath = centroids("ivf_centroids_16") { (s, dir) =>
+    Similarity.lloydCentroids(Tables.loadFanned(s, dir, "embeddings"),
+      nlist = 16, iters = 2)
+  }
 
-  /** d9's fitted Lloyd cell table, load-or-fit (the fittedIvfPath
-    * discipline, same validation: row count + centroid dimensionality,
-    * mismatch refits). The fit is deterministic per sf dir, the persisted
-    * parquet doubles as the CROSS-JVM cache AND the oracle's
-    * centroids-as-data input — a later JVM (Verify then Bench) serves
-    * [[Similarity.semanticDedupWith]] from it instead of re-running the
-    * inline Lloyd fit in the timed loop.
+  /** d9's fitted Lloyd cell table: a later JVM (Verify then Bench)
+    * serves [[Similarity.semanticDedupWith]] from it instead of
+    * re-running the inline Lloyd fit in the timed loop.
     */
-  private val d9CellsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedD9CellsPath(s: SparkSession, dir: String): String = {
-    val nlist = 16
-    d9CellsMemo.computeIfAbsent(dir, _ => new ModelHolder(() => {
-      val path = s"${Tables.modelsDir(dir)}/cells_d9.parquet"
-      val ok =
-        try {
-          val rows = s.read.parquet(path).collect()
-          lazy val dim = Tables.loadFanned(s, dir, "embeddings")
-            .select(size(col("embedding")).as("d")).head().getInt(0)
-          rows.length == nlist && rows.forall(
-            _.getAs[scala.collection.Seq[Double]]("centroid").size == dim)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) Similarity.saveIvfIndex(
-        Similarity.lloydCentroids(
-          Tables.loadFanned(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-          nlist = nlist, iters = 2), path)
-      path
-    })).value
+  private val fittedD9CellsPath = centroids("cells_d9") { (s, dir) =>
+    Similarity.lloydCentroids(
+      Tables.loadFanned(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+      nlist = 16, iters = 2)
   }
 
   /** a9's BASE-fitted cell table (vec_id % 4 != 0 — the v8/x4 snapshot
     * convention): the persisted index the incremental-append story
     * serves, fit BEFORE the drop arrives so the drop's assignment is a
-    * genuine refit-free append. Load-or-fit with the fittedIvfPath
-    * validation discipline.
+    * genuine refit-free append.
     */
-  private val a9CellsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedA9CellsPath(s: SparkSession, dir: String): String = {
-    val nlist = 16
-    a9CellsMemo.computeIfAbsent(dir, _ => new ModelHolder(() => {
-      val path = s"${Tables.modelsDir(dir)}/cells_a9.parquet"
-      val ok =
-        try {
-          val rows = s.read.parquet(path).collect()
-          lazy val dim = Tables.loadFanned(s, dir, "embeddings")
-            .select(size(col("embedding")).as("d")).head().getInt(0)
-          rows.length == nlist && rows.forall(
-            _.getAs[scala.collection.Seq[Double]]("centroid").size == dim)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) Similarity.saveIvfIndex(
-        Similarity.lloydCentroids(
-          Tables.loadFanned(s, dir, "embeddings")
-            .filter(col("vec_id") % 4 =!= 0)
-            .select(col("vec_id"), col("embedding")),
-          nlist = nlist, iters = 2), path)
-      path
-    })).value
+  private val fittedA9CellsPath = centroids("cells_a9") { (s, dir) =>
+    Similarity.lloydCentroids(
+      Tables.loadFanned(s, dir, "embeddings")
+        .filter(col("vec_id") % 4 =!= 0)
+        .select(col("vec_id"), col("embedding")),
+      nlist = 16, iters = 2)
   }
 
   /** v13's PLANTED drifted drop — the x4 drop vectors NEGATED (one
@@ -207,38 +252,17 @@ object Pipeline {
     * index against the planted drifted drop, wired to the a9 drift
     * signal (cells the drop touched whose drift cosine fell below
     * 0.98 re-Lloyd; healthy centroids pass through bit-identical).
-    * Load-or-fit with the fittedIvfPath validation discipline, plus:
-    * the refit column must exist and at least one cell must be flagged
-    * (a stale pre-refit table must refit, not serve).
+    * At least one cell must be flagged: a stale pre-refit table must
+    * refit, not serve.
     */
-  private val v13CellsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedV13CellsPath(s: SparkSession, dir: String): String = {
-    val nlist = 16
-    v13CellsMemo.computeIfAbsent(dir, _ => new ModelHolder(() => {
-      val path = s"${Tables.modelsDir(dir)}/cells_v13.parquet"
-      val ok =
-        try {
-          val rows = s.read.parquet(path).collect()
-          lazy val dim = Tables.loadFanned(s, dir, "embeddings")
-            .select(size(col("embedding")).as("d")).head().getInt(0)
-          rows.length == nlist &&
-            rows.exists(_.getAs[Boolean]("refit")) &&
-            rows.forall(
-              _.getAs[scala.collection.Seq[Double]]("centroid").size == dim)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) {
-        val base = Tables.loadFanned(s, dir, "embeddings")
-          .filter(col("vec_id") % 4 =!= 0)
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("embedding"))
-        Similarity.ivfPartialRefit(
-            s.read.parquet(fittedA9CellsPath(s, dir)),
-            base, v13DriftedDrop(s, dir), minCos = 0.98, iters = 2)
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
-      path
-    })).value
+  private val fittedV13CellsPath = centroids("cells_v13", Seq(fittedA9CellsPath),
+      valid = _.exists(_.getAs[Boolean]("refit"))) { (s, dir) =>
+    val base = Tables.loadFanned(s, dir, "embeddings")
+      .filter(col("vec_id") % 4 =!= 0)
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+    Similarity.ivfPartialRefit(s.read.parquet(fittedA9CellsPath(s, dir)),
+      base, v13DriftedDrop(s, dir), minCos = 0.98, iters = 2)
   }
 
   /** v14's PLANTED stale-subspace drop — the x4 drop vectors with the
@@ -258,167 +282,113 @@ object Pipeline {
           (x, i) => when(i < 8, x * lit(3.0) + lit(2.0)).otherwise(x))
           .as("embedding"))
 
+  /** a3/a4 share one PQ codebook set (m=8 books × k=16 centroids ×
+    * dsub=8 dims, shape-checked on load).
+    */
+  private val fittedPq = loadOrFit("pq_model")(loadPqModel(_, _, dim = 64, m = 8, k = 16)) {
+    (s, dir) =>
+      val model = Similarity.fitPq(Tables.loadFanned(s, dir, "embeddings"),
+        dim = 64, m = 8, k = 16, iters = 2)
+      savePqModel(s, dir, model)
+      model
+  }
+
   /** v14's PARTIAL-REFIT codebook table `(sub, centroid_id, centroid,
     * refit)` — `Similarity.pqPartialRefit` of the persisted a3/a4
     * codebooks against the planted stale drop (subspace 0 re-fits on
     * the capped base ∪ drop block sample; the seven healthy books pass
-    * through bit-identical). Load-or-fit with the fittedV13CellsPath
-    * validation discipline: shape, at least one refit flag, and at
-    * least one untouched book.
+    * through bit-identical). Valid only with at least one refit flag
+    * and at least one untouched book.
     */
-  private val v14PqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedV14PqPath(s: SparkSession, dir: String): String =
-    v14PqMemo.computeIfAbsent(dir, _ => new ModelHolder(() => {
-      val path = s"${Tables.modelsDir(dir)}/pq_v14_model.parquet"
-      val ok =
-        try {
-          val rows = s.read.parquet(path).collect()
-          rows.length == 8 * 16 &&
-            rows.exists(_.getAs[Boolean]("refit")) &&
-            rows.exists(!_.getAs[Boolean]("refit")) &&
-            rows.forall(
-              _.getAs[scala.collection.Seq[Double]]("centroid").size == 8)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) {
-        val base = Tables.loadFanned(s, dir, "embeddings")
-          .filter(col("vec_id") % 4 =!= 0)
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("embedding"))
-        Similarity.pqPartialRefit(fittedPq(s, dir), base,
-            v14StaleDrop(s, dir), mseRatio = 4.0, iters = 2)
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
-      path
-    })).value
+  private val fittedV14PqPath = centroids("pq_v14_model", Seq(fittedPq),
+      rows = 8 * 16, dim = Some(8),
+      valid = rs => rs.exists(_.getAs[Boolean]("refit")) &&
+        rs.exists(!_.getAs[Boolean]("refit"))) { (s, dir) =>
+    val base = Tables.loadFanned(s, dir, "embeddings")
+      .filter(col("vec_id") % 4 =!= 0)
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+    Similarity.pqPartialRefit(fittedPq(s, dir), base,
+      v14StaleDrop(s, dir), mseRatio = 4.0, iters = 2)
+  }
 
-  /** a3/a4 share one PQ codebook set; the fit is deterministic per sf dir
-    * (hash-prefix sample + decimal sums), so memoizing is transparent —
-    * the pcaMemo discipline — and the persisted model parquet doubles as
-    * a CROSS-JVM cache (the saveIvfIndex discipline): a later JVM
-    * (Verify then Bench) loads the codebooks instead of re-running the
-    * Lloyd fit. The load validates shape (m books × k centroids × dsub
-    * dims) and falls back to a fresh fit on any mismatch, so a stale
-    * model from changed fit parameters can't serve. Same immutable-data
-    * contract as [[materializedIndex]].
-    */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[Similarity.PqModel]]()
-  private def fittedPq(s: SparkSession, dir: String): Similarity.PqModel =
-    pqMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      loadPqModel(s, dir, dim = 64, m = 8, k = 16).getOrElse {
-        val model = Similarity.fitPq(Tables.loadFanned(s, dir, "embeddings"),
-          dim = 64, m = 8, k = 16, iters = 2)
-        savePqModel(s, dir, model)
-        model
-      })).value
   /** a11's codebooks are trained on the COARSE RESIDUALS against the
-    * shared nlist=16 IVF index (the IVFADC fit) — same memo + cross-JVM
-    * parquet cache discipline as [[fittedPq]], distinct model file.
+    * shared nlist=16 IVF index (the IVFADC fit).
     */
-  private val residPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[Similarity.PqModel]]()
-  private def fittedResidualPq(s: SparkSession,
-      dir: String): Similarity.PqModel =
-    residPqMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      loadPqModel(s, dir, dim = 64, m = 8, k = 16,
-        name = "pq_resid_model").getOrElse {
-        val model = Similarity.fitResidualPq(
-          Tables.loadFanned(s, dir, "embeddings"),
-          Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
-          dim = 64, m = 8, k = 16, iters = 2)
-        savePqModel(s, dir, model, name = "pq_resid_model")
-        model
-      })).value
+  private val fittedResidualPq = loadOrFit("pq_resid_model", fittedIvfPath)(
+      loadPqModel(_, _, dim = 64, m = 8, k = 16, name = "pq_resid_model")) { (s, dir) =>
+    val model = Similarity.fitResidualPq(
+      Tables.loadFanned(s, dir, "embeddings"),
+      Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
+      dim = 64, m = 8, k = 16, iters = 2)
+    savePqModel(s, dir, model, name = "pq_resid_model")
+    model
+  }
+
   /** a12's parametric OPQ: PCA rotation + balanced permutation +
     * rotated-space PQ codebooks — both halves persisted (rotation as
-    * (r, c, w) rows — the v4p model shape; books via the pq_model
-    * discipline) so DuckDB replays rotation AND quantization.
+    * (r, c, w) rows — the v4p model shape; books in the pq_model shape)
+    * so DuckDB replays rotation AND quantization.
     */
-  private val opqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[Similarity.OpqModel]]()
-  private def fittedOpq(s: SparkSession, dir: String): Similarity.OpqModel =
-    opqMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      loadOpqModel(s, dir, dim = 64, m = 8, k = 16).getOrElse {
-        val model = Similarity.fitOpqParametric(
-          Tables.loadFanned(s, dir, "embeddings"), dim = 64, m = 8, k = 16,
-          iters = 2)
-        saveOpqModel(s, dir, model)
-        model
-      })).value
+  private val fittedOpq = loadOrFit("opq_model")(loadOpqModel(_, _, dim = 64, m = 8, k = 16)) {
+    (s, dir) =>
+      val model = Similarity.fitOpqParametric(
+        Tables.loadFanned(s, dir, "embeddings"), dim = 64, m = 8, k = 16,
+        iters = 2)
+      saveOpqModel(s, dir, model)
+      model
+  }
+
   /** a13's coarse centroids, fitted IN THE ROTATED SPACE (the FAISS
     * OPQ+IVF+PQ stack shares one rotation — [[fittedOpq]]'s — across
     * the flat a12 index and this one): Lloyd over the rotated
-    * embeddings, persisted like [[fittedIvfPath]] (row count +
-    * dimensionality validated on load; mismatch refits).
+    * embeddings.
     */
-  private val opqIvfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[String]]()
-  private def fittedOpqIvfPath(s: SparkSession, dir: String): String =
-    opqIvfMemo.computeIfAbsent(dir, _ => new ModelHolder(() => {
-      val nlist = 16
-      val path = s"${Tables.modelsDir(dir)}/opq_ivf_centroids_$nlist.parquet"
-      val ok =
-        try {
-          val rows = s.read.parquet(path).collect()
-          lazy val dim = Tables.loadFanned(s, dir, "embeddings")
-            .select(size(col("embedding")).as("d")).head().getInt(0)
-          rows.length == nlist && rows.forall(
-            _.getAs[scala.collection.Seq[Double]]("centroid").size == dim)
-        } catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) Similarity.saveIvfIndex(
-        Similarity.lloydCentroids(
-          Similarity.rotateFrame(Tables.loadFanned(s, dir, "embeddings"),
-            fittedOpq(s, dir).rotation),
-          nlist = nlist, iters = 2), path)
-      path
-    })).value
+  private val fittedOpqIvfPath = centroids("opq_ivf_centroids", Seq(fittedOpq),
+      file = "opq_ivf_centroids_16.parquet") { (s, dir) =>
+    Similarity.lloydCentroids(
+      Similarity.rotateFrame(Tables.loadFanned(s, dir, "embeddings"),
+        fittedOpq(s, dir).rotation),
+      nlist = 16, iters = 2)
+  }
 
   /** a13's residual codebooks — [[Similarity.fitResidualPq]] in the
-    * rotated space against the rotated coarse index; same memo +
-    * cross-JVM parquet discipline as [[fittedResidualPq]], distinct
-    * model file.
+    * rotated space against the rotated coarse index.
     */
-  private val opqResidPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[Similarity.PqModel]]()
-  private def fittedOpqResidualPq(s: SparkSession,
-      dir: String): Similarity.PqModel =
-    opqResidPqMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      loadPqModel(s, dir, dim = 64, m = 8, k = 16,
-        name = "opq_resid_model").getOrElse {
-        val model = Similarity.fitResidualPq(
-          Similarity.rotateFrame(Tables.loadFanned(s, dir, "embeddings"),
-            fittedOpq(s, dir).rotation),
-          Similarity.loadIvfIndex(s, fittedOpqIvfPath(s, dir)),
-          dim = 64, m = 8, k = 16, iters = 2)
-        savePqModel(s, dir, model, name = "opq_resid_model")
-        model
-      })).value
+  private val fittedOpqResidualPq = loadOrFit("opq_resid_model", fittedOpq, fittedOpqIvfPath)(
+      loadPqModel(_, _, dim = 64, m = 8, k = 16, name = "opq_resid_model")) { (s, dir) =>
+    val model = Similarity.fitResidualPq(
+      Similarity.rotateFrame(Tables.loadFanned(s, dir, "embeddings"),
+        fittedOpq(s, dir).rotation),
+      Similarity.loadIvfIndex(s, fittedOpqIvfPath(s, dir)),
+      dim = 64, m = 8, k = 16, iters = 2)
+    savePqModel(s, dir, model, name = "opq_resid_model")
+    model
+  }
 
   private def saveOpqModel(s: SparkSession, dir: String,
       model: Similarity.OpqModel): Unit = {
     import s.implicits._
-    model.rotation.zipWithIndex
-      .map { case ((w, c), r) => (r, c, w) }
-      .toDF("r", "c", "w")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${Tables.modelsDir(dir)}/opq_rotation.parquet")
+    Store.publish(s, modelPath(dir, "opq_rotation.parquet"))(
+      model.rotation.zipWithIndex
+        .map { case ((w, c), r) => (r, c, w) }
+        .toDF("r", "c", "w")
+        .coalesce(1).write.parquet(_))
     savePqModel(s, dir, model.pq, name = "opq_pq_model")
   }
   private def loadOpqModel(s: SparkSession, dir: String,
-      dim: Int, m: Int, k: Int): Option[Similarity.OpqModel] =
-    try {
-      val rows = s.read
-        .parquet(s"${Tables.modelsDir(dir)}/opq_rotation.parquet")
-        .collect() // O(dim) rows — driver-scale model state
-        .sortBy(_.getAs[Int]("r"))
-        .map(r => (r.getAs[scala.collection.Seq[Double]]("w")
-          .toVector: Seq[Double], r.getAs[Double]("c")))
-      val ok = rows.length == dim && rows.forall(_._1.size == dim)
-      if (!ok) None
-      else loadPqModel(s, dir, dim, m, k, name = "opq_pq_model")
-        .map(pq => Similarity.OpqModel(rows.toSeq, pq))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      dim: Int, m: Int, k: Int): Option[Similarity.OpqModel] = {
+    val rows = s.read
+      .parquet(modelPath(dir, "opq_rotation.parquet"))
+      .collect() // O(dim) rows — driver-scale model state
+      .sortBy(_.getAs[Int]("r"))
+      .map(r => (r.getAs[scala.collection.Seq[Double]]("w")
+        .toVector: Seq[Double], r.getAs[Double]("c")))
+    val ok = rows.length == dim && rows.forall(_._1.size == dim)
+    if (!ok) None
+    else loadPqModel(s, dir, dim, m, k, name = "opq_pq_model")
+      .map(pq => Similarity.OpqModel(rows.toSeq, pq))
+  }
   private def savePqModel(s: SparkSession, dir: String,
       model: Similarity.PqModel, name: String = "pq_model"): Unit = {
     import s.implicits._
@@ -426,29 +396,40 @@ object Pipeline {
       (book, sub) <- model.books.zipWithIndex
       (cid, c) <- book
     } yield (sub, cid, c)
-    rows.toDF("sub", "centroid_id", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"${Tables.modelsDir(dir)}/$name.parquet")
+    Store.publish(s, modelPath(dir, s"$name.parquet"))(
+      rows.toDF("sub", "centroid_id", "centroid").coalesce(1).write.parquet(_))
   }
   private def loadPqModel(s: SparkSession, dir: String,
       dim: Int, m: Int, k: Int,
       name: String = "pq_model"): Option[Similarity.PqModel] = {
     val dsub = dim / m
-    try {
-      val rows = s.read.parquet(s"${Tables.modelsDir(dir)}/$name.parquet")
-        .collect() // O(m·k) rows — driver-scale model state
-      val books = rows.toSeq
-        .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
-        .map { case (_, rs) =>
-          rs.sortBy(_.getAs[Int]("centroid_id"))
-            .map(r => (r.getAs[Int]("centroid_id"),
-              r.getAs[scala.collection.Seq[Double]]("centroid").toVector: Seq[Double]))
-        }
-      val ok = books.size == m &&
-        books.forall(b => b.size == k && b.forall(_._2.size == dsub))
-      if (ok) Some(Similarity.PqModel(m, dsub, books)) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+    val rows = s.read.parquet(modelPath(dir, s"$name.parquet"))
+      .collect() // O(m·k) rows — driver-scale model state
+    val books = rows.toSeq
+      .groupBy(_.getAs[Int]("sub")).toSeq.sortBy(_._1)
+      .map { case (_, rs) =>
+        rs.sortBy(_.getAs[Int]("centroid_id"))
+          .map(r => (r.getAs[Int]("centroid_id"),
+            r.getAs[scala.collection.Seq[Double]]("centroid").toVector: Seq[Double]))
+      }
+    val ok = books.size == m &&
+      books.forall(b => b.size == k && b.forall(_._2.size == dsub))
+    if (ok) Some(Similarity.PqModel(m, dsub, books)) else None
   }
+
+  /** The corpus as a doc_id-BUCKETED external table (bucket count = the
+    * data-derived engine width, so a doc_id-keyed shuffle output is
+    * co-partitioned with the scan): the production storage posture for
+    * corpus REWRITES. A rewrite (d20's span excision) must bring global
+    * metadata (cover maps) back to every document body; against a plain
+    * parquet scan that join shuffles the 100 TB text side, against a
+    * bucketed layout the scan itself reports hashpartitioning(doc_id)
+    * and ONLY the metadata side exchanges — text never moves (the
+    * `Bucketing` zero-exchange property, asserted in PlanQualitySpec).
+    * Bucketed once per corpus snapshot, read by every rewrite job after.
+    */
+  private[graft] val bucketedDocsShared = index("docs_bkt", Nil, Seq("doc_id"),
+      file = "docs_bkt", table = "graft_docs_bkt")(Tables.load(_, _, "documents"))
 
   /** The t14/g1 shared pair engine: tf-idf-weighted lexical similarity
     * pairs over the df-banded (2 ≤ df ≤ 25) bigram inverted index. See
@@ -477,196 +458,6 @@ object Pipeline {
         sum(col("term")).cast("double").as("score"))
   }
 
-  /** Build-once materialized index (index-as-data, the saveIvfIndex /
-    * PCA-model discipline): computes `build`, publishes it at
-    * `<modelsDir>/<name>.parquet`, memoizes the path for the JVM
-    * lifetime so every later consumer scans the same bytes.
-    *
-    * Concurrency/atomicity: the ConcurrentHashMap only installs a cheap
-    * per-key lazy holder — the Spark write job runs under the HOLDER's
-    * lock, not the map's bin lock, so first builders of DIFFERENT
-    * indexes never serialize behind one another. The write lands in a
-    * `*.tmp-<uuid>` directory and is published by a filesystem rename,
-    * so no reader can observe a partially-written index.
-    *
-    * Contract (documented, not fingerprinted): one JVM serves an sf dir
-    * at a time, and the sf dir's testdata is immutable while this JVM
-    * lives. Regenerating the corpus under a live JVM would serve the
-    * stale index — restart the JVM (or delete the models dir) after a
-    * data refresh. The indexes themselves are deterministic functions of
-    * the corpus, so a cold cache rebuilds identical bytes.
-    */
-  private final class IndexHolder(build: () => String) {
-    lazy val path: String = build()
-  }
-  private val indexMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexHolder]()
-  private def materializedIndex(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val holder = indexMemo.computeIfAbsent(s"$dir#$name",
-      _ => new IndexHolder(() => {
-        val finalPath = s"${Tables.modelsDir(dir)}/$name.parquet"
-        val tmpPath = s"$finalPath.tmp-${java.util.UUID.randomUUID()}"
-        val fp = new org.apache.hadoop.fs.Path(finalPath)
-        val tp = new org.apache.hadoop.fs.Path(tmpPath)
-        val fs = fp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // a failed build must not leak its partial tmp dir — the lazy
-        // holder retries on next access with a FRESH uuid, so orphans
-        // would otherwise accumulate beside the live indexes
-        try build.write.mode("overwrite").parquet(tmpPath)
-        catch {
-          case e: Throwable =>
-            try fs.delete(tp, true)
-            catch { case scala.util.control.NonFatal(_) => () }
-            throw e
-        }
-        // Hadoop's delete/rename report failure via their BOOLEAN, not
-        // an exception — and rename onto an EXISTING directory moves the
-        // tmp dir INSIDE it, after which a recursive parquet read would
-        // silently merge stale and fresh index files. Check both and
-        // fail loudly (cleaning the tmp) rather than memoize a corrupt
-        // or vanished path for the JVM lifetime.
-        if (fs.exists(fp) && !fs.delete(fp, true)) {
-          fs.delete(tp, true)
-          throw new java.io.IOException(
-            s"materializedIndex: could not replace existing $finalPath")
-        }
-        if (!fs.rename(tp, fp)) {
-          fs.delete(tp, true)
-          throw new java.io.IOException(
-            s"materializedIndex: rename $tmpPath -> $finalPath failed")
-        }
-        finalPath
-      }))
-    s.read.parquet(holder.path)
-  }
-
-  /** Stable per-sf-dir catalog-name suffix: basename (readability) plus
-    * a 4-byte path hash (two dirs sharing a basename must never alias
-    * to one catalog table — the second caller would silently serve the
-    * first dir's data).
-    */
-  private def dirTag(dir: String): String = {
-    val pathTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(dir).getAbsolutePath.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9_]", "_") +
-      "_" + pathTag
-  }
-
-  /** [[materializedIndex]] written BUCKETED by the store's probe key —
-    * the storage posture for every index a LIFECYCLE operation joins
-    * against (r16's verdict: stores persisted as plain parquet made
-    * every delete/merge/probe equi join shuffle the full store side;
-    * at 100 TB a takedown that is ∝ revoked-set in arithmetic still
-    * paid a full-store exchange in the join). Bucketing by the probe
-    * key (span/charspan `gh`, postings `gram`, minhash
-    * `(band, bucket)`, secrets `tok`, curriculum `source`) makes the
-    * scan itself report hashpartitioning(key, 32), so
-    * delete/merge/probe joins plan ZERO exchange above the store scan
-    * — only the takedown-sized delta side moves (PlanQualitySpec
-    * asserts the shape for d23/d25b). Registered as a catalog table
-    * (bucket metadata lives in the catalog); the files at
-    * `<models>/<name>.parquet` are plain parquet — same bytes, same
-    * oracle-readable layout as the unbucketed form, one file per
-    * bucket. Same memoization/lifecycle contract as
-    * [[materializedIndex]]; a fresh JVM re-registers by rewriting
-    * (deterministic bytes, charged to `fit_sec`).
-    */
-  private def materializedBucketedIndex(s: SparkSession, dir: String,
-      name: String, keys: Seq[String])(build: => DataFrame): DataFrame = {
-    val holder = indexMemo.computeIfAbsent(s"$dir#$name",
-      _ => new IndexHolder(() => {
-        val table = s"graft_idx_${name}_${dirTag(dir)}"
-        if (!s.catalog.tableExists(table)) {
-          // build under a TMP path + tmp catalog name and publish by
-          // filesystem rename (the materializedIndex discipline):
-          // saveAsTable(overwrite) straight onto the live path deletes
-          // the serving files before the new build commits, so a
-          // failed/killed build would leave the path missing or partial
-          // for external readers (the DuckDB oracle) and fresh-JVM
-          // re-registration. The final catalog entry is metadata-only
-          // over the renamed directory.
-          val finalPath = s"${Tables.modelsDir(dir)}/$name.parquet"
-          val tmpPath = s"$finalPath.tmp-${java.util.UUID.randomUUID()}"
-          val tmpTable = s"${table}_tmp"
-          val fp = new org.apache.hadoop.fs.Path(finalPath)
-          val tp = new org.apache.hadoop.fs.Path(tmpPath)
-          val fs = fp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          s.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-          // bucket width = the data-derived engine width (Tables
-          // .adaptiveWidth): deterministic per sf dir, so a fresh JVM
-          // re-registers the identical layout; r19's constant 32 was
-          // the local core count in disguise and over-fanned every
-          // scan at small SFs (see the GraftSession.Tables scaladoc)
-          val buckets = Tables.adaptiveWidth(s, dir)
-          try graft.operators.Bucketing.writeBucketed(build, tmpTable,
-            tmpPath, buckets = buckets, keys = keys)
-          catch {
-            case e: Throwable =>
-              try {
-                s.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-                fs.delete(tp, true)
-              } catch { case scala.util.control.NonFatal(_) => () }
-              throw e
-          }
-          val schema = s.table(tmpTable).schema
-          s.sql(s"DROP TABLE IF EXISTS `$tmpTable`") // external: files stay
-          // delete/rename report failure via their BOOLEAN (see
-          // materializedIndex) — check both, cleaning the tmp on failure
-          if (fs.exists(fp) && !fs.delete(fp, true)) {
-            fs.delete(tp, true)
-            throw new java.io.IOException(
-              s"materializedBucketedIndex: could not replace $finalPath")
-          }
-          if (!fs.rename(tp, fp)) {
-            fs.delete(tp, true)
-            throw new java.io.IOException(
-              s"materializedBucketedIndex: rename $tmpPath -> $finalPath failed")
-          }
-          graft.operators.Bucketing.registerBucketed(s, table, finalPath,
-            buckets = buckets, keys = keys, schema = schema)
-        }
-        table
-      }))
-    s.table(holder.path)
-  }
-
-  /** The corpus as a doc_id-BUCKETED external table (bucket count = the
-    * data-derived engine width, so a doc_id-keyed shuffle output is
-    * co-partitioned with the scan): the production storage posture for
-    * corpus REWRITES. A rewrite (d20's span excision) must bring global
-    * metadata (cover maps) back to every document body; against a plain
-    * parquet scan that join shuffles the 100 TB text side, against a
-    * bucketed layout the scan itself reports hashpartitioning(doc_id)
-    * and ONLY the metadata side exchanges — text never moves (the
-    * `Bucketing` zero-exchange property, asserted in PlanQualitySpec).
-    * Bucketed once per corpus snapshot (the materialized-index
-    * lifecycle; charged to `fit_sec` by prebuildModels), read by every
-    * rewrite job after.
-    */
-  private val bucketedDocsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def bucketedDocsShared(s: SparkSession, dir: String): DataFrame = {
-    val tableName = bucketedDocsMemo.computeIfAbsent(dir, _ => {
-      // the memo keys by FULL path but the catalog name must too
-      // (dirTag's path-hash suffix keeps same-basename dirs distinct)
-      val name = "graft_docs_bkt_" + dirTag(dir)
-      // the catalog is per-JVM (in-memory); the PATH outlives it. A
-      // fresh JVM re-registers by rewriting — deterministic bytes, and
-      // mode(overwrite) keeps a stale path from merging with fresh rows
-      if (!s.catalog.tableExists(name)) {
-        graft.operators.Bucketing.writeBucketed(
-          Tables.load(s, dir, "documents"),
-          name, s"${Tables.modelsDir(dir)}/docs_bkt",
-          buckets = Tables.adaptiveWidth(s, dir),
-          keys = Seq("doc_id"))
-      }
-      name
-    })
-    s.table(tableName)
-  }
-
   /** The t14 pair table is DETERMINISTIC for a given sf dir (integer
     * tf/df/N counts, one exact division per weight, decimal-routed sums —
     * bit-identical on any partitioning), which makes it a legitimate
@@ -676,8 +467,7 @@ object Pipeline {
     * similarity graph is served: built once per corpus snapshot, read by
     * every downstream job.
     */
-  private def tfidfPairsShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "tfidf_pairs")(tfidfPairs(s, dir))
+  private val tfidfPairsShared = index("tfidf_pairs", Seq(bucketedDocsShared))(tfidfPairs)
 
   /** The VERIFIED exact-Jaccard pair sets, materialized per
     * (n, threshold, blocking) key — the tfidfPairsShared discipline
@@ -690,20 +480,20 @@ object Pipeline {
     * consumer of that pair universe. Distinct'd at the store boundary
     * (the d3p per-band multi-emit contract).
     */
-  private def ngramPairs95Shared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pairs_ng1_t95_lang") {
+  private val ngramPairs95Shared = index("pairs_ng1_t95_lang", Seq(bucketedDocsShared)) {
+    (s, dir) =>
       Dedup.ngramJaccardPairs(bucketedDocsShared(s, dir),
         n = 1, threshold = 0.95, blockCols = Seq(col("lang"))).distinct()
-    }
+  }
 
   /** x19p's pair universe: exact 3-shingle Jaccard >= 0.8, unblocked
     * (PPJoin prefix filter — pure pruning, exact recall).
     */
-  private def ngramPairs80Shared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pairs_ng3_t80") {
+  private val ngramPairs80Shared = index("pairs_ng3_t80", Seq(bucketedDocsShared)) {
+    (s, dir) =>
       Dedup.ngramJaccardPairs(bucketedDocsShared(s, dir),
         n = 3, threshold = 0.8, blockCols = Seq(lit(true))).distinct()
-    }
+  }
 
   /** The LSH-proposed + exact-verified pair set d3p gates and x19
     * rolls up (same parameters as d3): every pair passed the exact
@@ -711,33 +501,29 @@ object Pipeline {
     * deterministic per corpus even though its RECALL is the band bet
     * the d3p/x19 twins document.
     */
-  private def mhPairs80Shared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pairs_mh_t80") {
-      Dedup.minhashLshPairs(bucketedDocsShared(s, dir),
-        shingleLen = 3, numHashes = 32, bands = 8, threshold = 0.8)
-        .distinct()
-    }
+  private val mhPairs80Shared = index("pairs_mh_t80", Seq(bucketedDocsShared)) { (s, dir) =>
+    Dedup.minhashLshPairs(bucketedDocsShared(s, dir),
+      shingleLen = 3, numHashes = 32, bands = 8, threshold = 0.8)
+      .distinct()
+  }
 
   /** The BASE-snapshot MinHash band index (docs outside the x4/t20/v8
-    * drop convention doc_id % 4 == 0) — deterministic per sf dir
-    * (xxhash64 shingles/minhash, whole-bucket skew cap), so it earns the
-    * materialized-index treatment: built once per base snapshot, read by
-    * the d19 batch drop probe and by `EventsStream.nearDupPairsStream`'s
-    * continuous twin alike.
+    * drop convention doc_id % 4 == 0), deterministic per sf dir
+    * (xxhash64 shingles/minhash), read by the d19 batch drop probe and
+    * by `EventsStream.nearDupPairsStream`'s continuous twin alike. The
+    * persisted bytes are UNCAPPED — what [[Dedup.minhashIndexDelete]]
+    * operates on. The skew cap is a PROBE-time guard
+    * ([[minhashIndexShared]] applies it on read), and keeping over-cap
+    * buckets' rows in the store is what lets a takedown delete re-admit
+    * a bucket that falls back under the cap — bit-identical to a rebuild
+    * (IndexDeleteSpec).
     */
-  /** The UNCAPPED persisted mh_index bytes — what
-    * [[Dedup.minhashIndexDelete]] operates on. The skew cap is a
-    * PROBE-time guard ([[minhashIndexShared]] applies it on read), and
-    * keeping over-cap buckets' rows in the store is what lets a
-    * takedown delete re-admit a bucket that falls back under the cap —
-    * bit-identical to a rebuild (IndexDeleteSpec).
-    */
-  private def minhashIndexFullShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "mh_index", Seq("band", "bucket")) {
-      Dedup.minhashIndex(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0),
-        shingleLen = 3, numHashes = 32, bands = 8, maxBandBucket = 0)
-    }
+  private val minhashIndexFullShared = index("mh_index", Seq(bucketedDocsShared),
+      Seq("band", "bucket")) { (s, dir) =>
+    Dedup.minhashIndex(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0),
+      shingleLen = 3, numHashes = 32, bands = 8, maxBandBucket = 0)
+  }
 
   private def minhashIndexShared(s: SparkSession, dir: String): DataFrame =
     // served rows are unchanged vs the previously-persisted capped
@@ -753,11 +539,11 @@ object Pipeline {
     * by the d22 batch drop excision and by
     * `EventsStream.spanExciseStream`'s continuous twin alike.
     */
-  private def spanIndexShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "span_index", Seq("gh")) {
+  private val spanIndexShared = index("span_index", Seq(bucketedDocsShared), Seq("gh")) {
+    (s, dir) =>
       Dedup.spanIndexCounted(
         bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0))
-    }
+  }
 
   /** The STALE (pre-compaction) span index d25's merge advances — the
     * base snapshot minus the doc_id % 10 == 3 compaction drop. In
@@ -768,12 +554,12 @@ object Pipeline {
     * showed d25 paying a 17 s first pass against a 3.5 s steady state
     * — all scratch build).
     */
-  private def spanIndexOlderShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "span_index_older", Seq("gh")) {
-      Dedup.spanIndexCounted(
-        bucketedDocsShared(s, dir)
-          .filter(col("doc_id") % 4 =!= 0 && col("doc_id") % 10 =!= 3))
-    }
+  private val spanIndexOlderShared = index("span_index_older", Seq(bucketedDocsShared),
+      Seq("gh")) { (s, dir) =>
+    Dedup.spanIndexCounted(
+      bucketedDocsShared(s, dir)
+        .filter(col("doc_id") % 4 =!= 0 && col("doc_id") % 10 =!= 3))
+  }
 
   /** The BASE-snapshot CHAR-window counted index (docs outside the x4
     * drop convention) — [[spanIndexShared]] at d24's granularity, the
@@ -785,35 +571,29 @@ object Pipeline {
     * materialized-index lifecycle like its token-granular twin; the
     * streaming twin (`charExciseStream`) probes the same bytes.
     */
-  private def charspanIndexBaseShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "charspan_index_base", Seq("gh")) {
-      Dedup.spanIndexCountedChars(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0),
-        n = 40)
-    }
+  private val charspanIndexBaseShared = index("charspan_index_base",
+      Seq(bucketedDocsShared), Seq("gh")) { (s, dir) =>
+    Dedup.spanIndexCountedChars(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0),
+      n = 40)
+  }
 
   /** The span-hash Bloom prefilter d22b probes, built ONCE per index
     * snapshot from the materialized [[spanIndexShared]] (capacity
-    * derived from the index itself — `Dedup.spanIndexBloom`) and
-    * memoized per sf dir: the build is an eager Spark action, so it
-    * lives in the model-prebuild lifecycle (charged to `fit_sec`), not
-    * inside a serving operator's construction.
+    * derived from the index itself — `Dedup.spanIndexBloom`) and held
+    * per JVM: the build is an eager Spark action, so it lives in the
+    * model-prebuild lifecycle (charged to `fit_sec`), not inside a
+    * serving operator's construction.
     */
-  private val spanBloomMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, ModelHolder[graft.functions.SerializableBloom]]()
-  private[graft] def spanBloomShared(s: SparkSession, dir: String): graft.functions.SerializableBloom =
-    spanBloomMemo.computeIfAbsent(dir, _ => new ModelHolder(() =>
-      Dedup.spanIndexBloom(spanIndexShared(s, dir)))).value
+  private[graft] val spanBloomShared = declare(Store.value("span_bloom", spanIndexShared) {
+    (s, dir) => Dedup.spanIndexBloom(spanIndexShared(s, dir))
+  })
 
   /** The BASE-snapshot tf-idf POSTINGS index (docs outside the x4 drop
-    * convention) — `(gram, doc_id, tf, w)` with the df band and the
-    * n_docs/df weight both computed on the base: the serving half of
-    * t14's pair build for the incremental flow (g14), where the pair
-    * table itself (tfidf_pairs) is the batch product. Deterministic per
-    * sf dir, so it earns the materialized-index lifecycle.
-    */
-  /** The persisted bytes are the UNBANDED inverted index
-    * `(gram, doc_id, tf, df, n_docs)` — the standard search-engine
+    * convention): the serving half of t14's pair build for the
+    * incremental flow (g14), where the pair table itself (tfidf_pairs)
+    * is the batch product. The persisted bytes are the UNBANDED inverted
+    * index `(gram, doc_id, tf, df, n_docs)` — the standard search-engine
     * posture (an index stores every term; the df band is a SERVE-time
     * filter), and the property that makes takedown possible: deleting
     * documents shifts df, and a gram whose df sat just ABOVE the band
@@ -823,11 +603,11 @@ object Pipeline {
     * it is NOT derivable from the index: base documents too short to
     * produce a 2-gram count toward it but post no rows.
     */
-  private def tfidfPostingsFullShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "tfidf_postings", Seq("gram")) {
-      Dedup.tfidfPostingsFull(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0))
-    }
+  private val tfidfPostingsFullShared = index("tfidf_postings", Seq(bucketedDocsShared),
+      Seq("gram")) { (s, dir) =>
+    Dedup.tfidfPostingsFull(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 4 =!= 0))
+  }
 
   /** The STALE (pre-compaction) postings store d25b's merge advances —
     * the base snapshot minus the doc_id % 10 == 3 compaction drop,
@@ -837,12 +617,12 @@ object Pipeline {
     * rebuild that charged the r16 bench 450 CPU-s against a 4.8 s
     * steady state.
     */
-  private def tfidfPostingsOlderShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "tfidf_postings_older", Seq("gram")) {
-      Dedup.tfidfPostingsFull(
-        bucketedDocsShared(s, dir)
-          .filter(col("doc_id") % 4 =!= 0 && col("doc_id") % 10 =!= 3))
-    }
+  private val tfidfPostingsOlderShared = index("tfidf_postings_older",
+      Seq(bucketedDocsShared), Seq("gram")) { (s, dir) =>
+    Dedup.tfidfPostingsFull(
+      bucketedDocsShared(s, dir)
+        .filter(col("doc_id") % 4 =!= 0 && col("doc_id") % 10 =!= 3))
+  }
 
   /** The SERVED banded postings `(gram, doc_id, tf, w)` g14 probes —
     * the df band [2, 25] and the n_docs/df weight applied as a lazy
@@ -861,10 +641,11 @@ object Pipeline {
     * lifecycle store: the serving lap measures the exact top-k MERGE +
     * quota replay, cost ∝ index + drop, never a corpus re-rank.
     */
-  private[graft] def curriculumOlderShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "curriculum_index_older", Seq("source"))(
-      graft.operators.Curriculum.curriculumIndex(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3)))
+  private[graft] val curriculumOlderShared = index("curriculum_index_older",
+      Seq(bucketedDocsShared), Seq("source")) { (s, dir) =>
+    graft.operators.Curriculum.curriculumIndex(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3))
+  }
 
   /** The SMALL-K curriculum ranking store + its overflow buffer on the
     * same stale snapshot (%10 != 3) — the x28 buffered-delete gate and
@@ -874,26 +655,19 @@ object Pipeline {
     * saturates below sf1 and the buffer would be empty, gating
     * nothing. The tenth persisted lifecycle artifact pair.
     */
-  private[graft] def curriculumBIndexShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "curriculum_b_index", Seq("source"))(
-      graft.operators.Curriculum.curriculumIndex(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3),
-        k = 10))
+  private[graft] val curriculumBIndexShared = index("curriculum_b_index",
+      Seq(bucketedDocsShared), Seq("source")) { (s, dir) =>
+    graft.operators.Curriculum.curriculumIndex(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3),
+      k = 10)
+  }
 
-  private[graft] def curriculumBOverflowShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "curriculum_b_overflow")(
-      graft.operators.Curriculum.curriculumOverflow(
-        bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3),
-        k = 10, pad = 8))
-
-  /** d8's component map is deterministic per sf dir (md5-clique collapse
-    * + exact-Jaccard pairs + min-label closure — every step
-    * partitioning-independent), so it shares the materialized-index
-    * treatment of [[tfidfPairsShared]]: built once per JVM, persisted as
-    * parquet, read back by d8 and d12.
-    */
-  private def ccComponentsShared(s: SparkSession, dir: String): DataFrame =
-    Dedup.componentsFromIndex(componentsIndexShared(s, dir))
+  private[graft] val curriculumBOverflowShared = index("curriculum_b_overflow",
+      Seq(bucketedDocsShared)) { (s, dir) =>
+    graft.operators.Curriculum.curriculumOverflow(
+      bucketedDocsShared(s, dir).filter(col("doc_id") % 10 =!= 3),
+      k = 10, pad = 8)
+  }
 
   /** The persisted near-dup COMPONENT STORE (r16 — the eighth lifecycle
     * index): [[Dedup.componentsIndex]]'s member + edge rows,
@@ -904,7 +678,8 @@ object Pipeline {
     * PPJoin + closure) — and it is what d26's takedown and the x22/x25
     * audits run their index-only delete against.
     */
-  private[graft] def componentsIndexShared(s: SparkSession, dir: String): DataFrame =
+  private[graft] val componentsIndexShared = index("components_index",
+      Seq(bucketedDocsShared, ngramPairs95Shared)) { (s, dir) =>
     // the rep-level edge set rides the corpus's materialized verified
     // pair store (same n/threshold/lang-blocking, restricted to rep
     // endpoints — bit-identical per the componentsIndex contract,
@@ -912,9 +687,17 @@ object Pipeline {
     // PPJoin, the fit channel's most expensive subtree. The PIN twin
     // (components_index_pin) cannot share it — planted text shifts
     // every Jaccard — and keeps the inline PPJoin.
-    materializedIndex(s, dir, "components_index")(
-      Dedup.componentsIndex(bucketedDocsShared(s, dir),
-        verifiedPairs = Some(ngramPairs95Shared(s, dir))))
+    Dedup.componentsIndex(bucketedDocsShared(s, dir),
+      verifiedPairs = Some(ngramPairs95Shared(s, dir)))
+  }
+
+  /** d8's component map is deterministic per sf dir (md5-clique collapse
+    * + exact-Jaccard pairs + min-label closure — every step
+    * partitioning-independent): the member projection of the persisted
+    * [[componentsIndexShared]], read by d8 and d12.
+    */
+  private def ccComponentsShared(s: SparkSession, dir: String): DataFrame =
+    Dedup.componentsFromIndex(componentsIndexShared(s, dir))
 
   /** x25's planted base slice — the pin prefix derives from the TEXT
     * (identical texts keep identical pins, preserving exact-dup
@@ -946,17 +729,17 @@ object Pipeline {
     * pass per query. Delta-sized; consumed as the broadcast side of
     * every delete path, so plain parquet (no bucket key to exploit).
     */
-  private def pinRevokedShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pin_revoked_docs")(
-      x25PlantedBase(s, dir).filter(col("doc_id") % 10 === 1))
+  private val pinRevokedShared = index("pin_revoked_docs", Seq(bucketedDocsShared)) {
+    (s, dir) => x25PlantedBase(s, dir).filter(col("doc_id") % 10 === 1)
+  }
 
   /** The PRE-STAGED compaction batch for x26 — the planted drop slice
     * (4 % of the corpus), same staging argument as [[pinRevokedShared]]:
     * an arriving batch is input, not a corpus scan.
     */
-  private[graft] def pinDropShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pin_drop_docs")(
-      plantedDocs(s, dir).filter(col("doc_id") % 25 === 0))
+  private[graft] val pinDropShared = index("pin_drop_docs", Seq(bucketedDocsShared)) {
+    (s, dir) => plantedDocs(s, dir).filter(col("doc_id") % 25 === 0)
+  }
 
   /** The persisted (vec_id, cell) IVF MEMBER TABLE — the ninth
     * lifecycle store (r18): assignment against the fit-once nlist=16
@@ -964,20 +747,58 @@ object Pipeline {
     * previously re-ran the corpus-wide assign map THREE times per lap
     * (n_before, delete input, lost-cells probe). One row per vector.
     */
-  private[graft] def ivfMembersShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "ivf_members_16")(
+  private[graft] val ivfMembersShared = index("ivf_members_16", Seq(fittedIvfPath)) {
+    (s, dir) =>
       Similarity.ivfAssign(
-        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
-        Tables.loadFanned(s, dir, "embeddings")))
+        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
+        Tables.loadFanned(s, dir, "embeddings"))
+  }
 
   /** x26's curriculum drop batch `(doc_id, source)` — the s16 lifecycle
     * convention (stale = % 10 != 3, drop = % 10 == 3), pre-staged like
     * [[pinDropShared]].
     */
-  private[graft] def curriculumDropShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "curriculum_drop_docs")(
-      bucketedDocsShared(s, dir).filter(col("doc_id") % 10 === 3)
-        .select(col("doc_id"), col("source")))
+  private[graft] val curriculumDropShared = index("curriculum_drop_docs",
+      Seq(bucketedDocsShared)) { (s, dir) =>
+    bucketedDocsShared(s, dir).filter(col("doc_id") % 10 === 3)
+      .select(col("doc_id"), col("source"))
+  }
+
+  /** The planted corpus's SEVEN text stores for the x25 audit, by key —
+    * each deterministic per sf dir, so the audit's serving lap measures
+    * the eight DELETE paths plus O(1) counts, never a build (the store
+    * an audit deletes from is persisted in production by definition).
+    * Each is its own store, so the prebuild pool builds the seven
+    * INDEPENDENT stores concurrently (r19's single `x25_pin_stores`
+    * entry built all seven sequentially inside one pool thread and set
+    * the fit channel's wall).
+    */
+  private val x25PinStores: ListMap[String, Store[DataFrame]] = {
+    def pin(name: String, keys: String*)(build: DataFrame => DataFrame) =
+      index(name, Seq(bucketedDocsShared), keys)((s, dir) => build(x25PlantedBase(s, dir)))
+    ListMap(
+      "span_index" -> pin("pin_span_index", "gh")(Dedup.spanIndexCounted(_, n = 8)),
+      "charspan_index" -> pin("pin_charspan_index", "gh")(
+        Dedup.spanIndexCountedChars(_, n = 40)),
+      "tfidf_postings" -> pin("pin_tfidf_postings", "gram")(Dedup.tfidfPostingsFull(_)),
+      "mh_index" -> pin("pin_mh_index", "band", "bucket")(
+        Dedup.minhashIndex(_, maxBandBucket = 0)),
+      // prefix_index's probe key is the (block struct, token) pair and
+      // its delete is a broadcast anti join on bid — the store side
+      // never shuffles as plain parquet either, so it stays unbucketed
+      "prefix_index" -> pin("pin_prefix_index")(Dedup.incrementalIndex(_)),
+      "secrets_index" -> pin("pin_secrets_index", "tok")(Privacy.secretFrequencies(_)),
+      // the components store mixes member and edge rows (no single
+      // probe key); its delete/merge joins are all broadcast-delta
+      // semi/anti probes — no full-store exchange to save. The planted
+      // text shifts every Jaccard, so it cannot ride the raw corpus's
+      // pair store the way components_index does.
+      "components" -> pin("components_index_pin")(Dedup.componentsIndex(_)))
+  }
+
+  private[graft] def x25StoresShared(s: SparkSession,
+      dir: String): Map[String, DataFrame] =
+    x25PinStores.map { case (k, st) => k -> st(s, dir) }
 
   /** The pin components store's rep-evidence POSTINGS `(bid, blang,
     * bsz, p)` and per-token df — the new×old probe side of
@@ -988,17 +809,19 @@ object Pipeline {
     * snapshot (df is a selectivity heuristic only — the one-sided
     * prefix bound holds under any order — but this copy is exact).
     */
-  private[graft] def pinCompPostingsShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "pin_comp_postings", Seq("p"))(
-      // the SINGLE pin store it depends on — constructing the full
-      // x25StoresShared map here would build all seven pin stores
-      // sequentially inside this holder's pool thread (measured: it was
-      // the 61 s fit-channel wall)
-      Dedup.componentsPostings(x25PinStore(s, dir, "components")))
+  private[graft] val pinCompPostingsShared = index("pin_comp_postings",
+      Seq(x25PinStores("components")), Seq("p")) { (s, dir) =>
+    // the SINGLE pin store it depends on — constructing the full
+    // x25StoresShared map here would build all seven pin stores
+    // sequentially inside this holder's pool thread (measured: it was
+    // the 61 s fit-channel wall)
+    Dedup.componentsPostings(x25PinStores("components")(s, dir))
+  }
 
-  private[graft] def pinCompDfShared(s: SparkSession, dir: String): DataFrame =
-    materializedBucketedIndex(s, dir, "pin_comp_df", Seq("p"))(
-      Dedup.componentsDf(pinCompPostingsShared(s, dir)))
+  private[graft] val pinCompDfShared = index("pin_comp_df", Seq(pinCompPostingsShared),
+      Seq("p")) { (s, dir) =>
+    Dedup.componentsDf(pinCompPostingsShared(s, dir))
+  }
 
   /** The corpus's persisted PQ CODES (vec_id, c0..c7) — the quantized
     * index the ADC family serves from (r18): encoding is deterministic
@@ -1008,10 +831,9 @@ object Pipeline {
     * this first-touch encode). a3 keeps encoding inline — the encode
     * path IS its gate.
     */
-  private[graft] def pqCodesShared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pq_codes")(
-      Similarity.pqEncode(Tables.loadFanned(s, dir, "embeddings"),
-        fittedPq(s, dir)))
+  private[graft] val pqCodesShared = index("pq_codes", Seq(fittedPq)) { (s, dir) =>
+    Similarity.pqEncode(Tables.loadFanned(s, dir, "embeddings"), fittedPq(s, dir))
+  }
 
   /** d13's VERIFIED containment pair set (sub_id, super_id,
     * containment) at (n=1, τ=0.98, lang-blocked) — the
@@ -1022,175 +844,22 @@ object Pipeline {
     * store while the oracle still replays the full exact predicate
     * from raw token strings.
     */
-  private def containmentPairs98Shared(s: SparkSession, dir: String): DataFrame =
-    materializedIndex(s, dir, "pairs_cont_ng1_t98_lang")(
-      Dedup.containmentPairs(bucketedDocsShared(s, dir),
-        n = 1, threshold = 0.98, blockCols = Seq(col("lang"))))
-
-  /** The planted corpus's SEVEN text stores for the x25 audit — each
-    * deterministic per sf dir, so they earn the materialized-index
-    * lifecycle: the audit's serving lap measures the eight DELETE
-    * paths plus O(1) counts, never a build (the store an audit
-    * deletes from is persisted in production by definition).
-    */
-  /** One pin store by key — each behind its own memoized holder, so the
-    * prebuild pool builds the seven INDEPENDENT stores concurrently
-    * (r19's single `x25_pin_stores` entry built all seven sequentially
-    * inside one pool thread and set the fit channel's wall).
-    */
-  private[graft] def x25PinStore(s: SparkSession, dir: String,
-      which: String): DataFrame = {
-    def base = x25PlantedBase(s, dir)
-    which match {
-      case "span_index" => materializedBucketedIndex(
-        s, dir, "pin_span_index", Seq("gh"))(
-        Dedup.spanIndexCounted(base, n = 8))
-      case "charspan_index" => materializedBucketedIndex(
-        s, dir, "pin_charspan_index", Seq("gh"))(
-        Dedup.spanIndexCountedChars(base, n = 40))
-      case "tfidf_postings" => materializedBucketedIndex(
-        s, dir, "pin_tfidf_postings", Seq("gram"))(
-        Dedup.tfidfPostingsFull(base))
-      case "mh_index" => materializedBucketedIndex(
-        s, dir, "pin_mh_index", Seq("band", "bucket"))(
-        Dedup.minhashIndex(base, maxBandBucket = 0))
-      // prefix_index's probe key is the (block struct, token) pair and
-      // its delete is a broadcast anti join on bid — the store side
-      // never shuffles as plain parquet either, so it stays unbucketed
-      case "prefix_index" => materializedIndex(s, dir, "pin_prefix_index")(
-        Dedup.incrementalIndex(base))
-      case "secrets_index" => materializedBucketedIndex(
-        s, dir, "pin_secrets_index", Seq("tok"))(
-        Privacy.secretFrequencies(base))
-      // the components store mixes member and edge rows (no single
-      // probe key); its delete/merge joins are all broadcast-delta
-      // semi/anti probes — no full-store exchange to save. The planted
-      // text shifts every Jaccard, so it cannot ride the raw corpus's
-      // pair store the way components_index does.
-      case "components" => materializedIndex(s, dir, "components_index_pin")(
-        Dedup.componentsIndex(base))
-    }
+  private val containmentPairs98Shared = index("pairs_cont_ng1_t98_lang",
+      Seq(bucketedDocsShared)) { (s, dir) =>
+    Dedup.containmentPairs(bucketedDocsShared(s, dir),
+      n = 1, threshold = 0.98, blockCols = Seq(col("lang")))
   }
 
-  private[graft] val x25PinStoreKeys: Seq[String] = Seq("span_index",
-    "charspan_index", "tfidf_postings", "mh_index", "prefix_index",
-    "secrets_index", "components")
-
-  private[graft] def x25StoresShared(s: SparkSession,
-      dir: String): Map[String, DataFrame] =
-    x25PinStoreKeys.map(k => k -> x25PinStore(s, dir, k)).toMap
-
-  /** Forces every cross-JVM persisted model/index the serving queries
-    * read (PCA fit, IVF centroids, PQ codebooks, the tf-idf pair index,
-    * the connected-components map), so a bench pass can charge one-time
-    * fit cost to a separate `fit_sec` line instead of smearing it across
-    * whichever queries happen to run first (g1/t13/a2 in round 9's
-    * artifact). Idempotent and cheap when the models already exist on
-    * disk — every build sits behind a memoized load-or-fit holder.
-    * Returns the artifact names, for logging.
+  /** Builds every persisted store ([[stores]]) before a bench pass, so
+    * the one-time fit cost is charged to a separate `fit_sec` line
+    * instead of smeared across whichever queries happen to run first
+    * (g1/t13/a2 in round 9's artifact). Idempotent, and cheap for the
+    * stores whose valid bytes are already on disk. Returns each store's
+    * name and fit seconds (-1 for a failed build), for logging; see
+    * [[Store.prebuild]] for the pool and the failure isolation.
     */
-  /** The fits run on a BOUNDED THREAD POOL (r18): each build is an
-    * independent Spark job chain (or serializes on its dependency's
-    * memoized holder — pq_codes on pq_model, pin_comp_postings on the
-    * pin stores; lazy-val holders are thread-safe and acyclic), and
-    * every fit leaves most of local[32] idle during its driver-side
-    * phases — the sequential pass paid the sum of those bubbles. The
-    * per-artifact numbers are each fit's WALL inside the pooled pass,
-    * so their sum exceeds `fit_sec` under overlap; relative magnitude
-    * still attributes cost.
-    */
-  def prebuildModels(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    // Per-store failure isolation (r19 verdict task 3): one store build
-    // throwing must degrade ONE store to inline-fit — not dump all ~37
-    // builds into the timed queries. A failed build reports -1 against
-    // its own name (named on stderr too), siblings keep building, and
-    // the memoized holder retries the failed store when its first
-    // consumer query runs (inline-fit, charged to that query — visible,
-    // attributable, bounded). Non-fatal errors only: an OOM must still
-    // kill the run.
-    def timed(name: String)(build: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try build
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"bench: store build '$name' FAILED " +
-            s"(its consumers will fit inline): ${e.getClass.getName}: ${e.getMessage}")
-          return name -> -1.0
-      }
-      name -> math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000
-    }
-    // LONGEST DEPENDENCY CHAIN FIRST (r19 verdict task 6): entries that
-    // head a holder-serialized chain (pin_comp_df → pin_comp_postings →
-    // components_index_pin; opq_resid_model → opq_model) go to the pool
-    // before the independent mid-size builds, so one thread drives each
-    // chain start-to-finish while the other seven fill with the rest —
-    // the r19 ordering parked the chains behind the model fits and the
-    // fit wall WAS the chain. docs_bkt goes absolutely first: every
-    // text-bearing build reads it through its holder, and building it
-    // eagerly keeps the first text build from serializing the other
-    // seven behind that holder. The former `x25_pin_stores` aggregate
-    // (seven sequential builds in ONE pool thread — it set the r19 fit
-    // wall) is split into its seven independent entries.
-    val builds: Seq[(String, () => Unit)] = Seq(
-      "docs_bkt" -> (() => { bucketedDocsShared(s, dir); () }),
-      "pin_comp_df" -> (() => { pinCompDfShared(s, dir); () }),
-      "components_index" -> (() => { componentsIndexShared(s, dir); () }),
-      "opq_resid_model" -> (() => { fittedOpqResidualPq(s, dir); () }),
-      "opq_ivf_centroids" -> (() => { fittedOpqIvfPath(s, dir); () }),
-      "pairs_ng3_t80" -> (() => { ngramPairs80Shared(s, dir); () }),
-      "pairs_mh_t80" -> (() => { mhPairs80Shared(s, dir); () }),
-      "cells_v13" -> (() => { fittedV13CellsPath(s, dir); () }),
-      "pca_fit" -> (() => { fittedPca(s, dir); () }),
-      "pq_resid_model" -> (() => { fittedResidualPq(s, dir); () }),
-      "pq_v14_model" -> (() => { fittedV14PqPath(s, dir); () }),
-      "curriculum_index_older" -> (() => { curriculumOlderShared(s, dir); () }),
-      "curriculum_b_index" -> (() => { curriculumBIndexShared(s, dir); () }),
-      "pin_span_index" -> (() => { x25PinStore(s, dir, "span_index"); () }),
-      "pin_charspan_index" -> (() => { x25PinStore(s, dir, "charspan_index"); () }),
-      "pin_tfidf_postings" -> (() => { x25PinStore(s, dir, "tfidf_postings"); () }),
-      "pin_mh_index" -> (() => { x25PinStore(s, dir, "mh_index"); () }),
-      "pin_prefix_index" -> (() => { x25PinStore(s, dir, "prefix_index"); () }),
-      "pin_secrets_index" -> (() => { x25PinStore(s, dir, "secrets_index"); () }),
-      "opq_model" -> (() => { fittedOpq(s, dir); () }),
-      "ivf_centroids_16" -> (() => { fittedIvfPath(s, dir, nlist = 16); () }),
-      "pq_model" -> (() => { fittedPq(s, dir); () }),
-      "cells_d9" -> (() => { fittedD9CellsPath(s, dir); () }),
-      "cells_a9" -> (() => { fittedA9CellsPath(s, dir); () }),
-      "mh_index" -> (() => { minhashIndexShared(s, dir); () }),
-      "tfidf_pairs" -> (() => { tfidfPairsShared(s, dir); () }),
-      "pin_revoked_docs" -> (() => { pinRevokedShared(s, dir); () }),
-      "pin_drop_docs" -> (() => { pinDropShared(s, dir); () }),
-      "ivf_members_16" -> (() => { ivfMembersShared(s, dir); () }),
-      "curriculum_drop_docs" -> (() => { curriculumDropShared(s, dir); () }),
-      "pin_comp_postings" -> (() => { pinCompPostingsShared(s, dir); () }),
-      "pq_codes" -> (() => { pqCodesShared(s, dir); () }),
-      "pairs_cont_ng1_t98_lang" -> (() => { containmentPairs98Shared(s, dir); () }),
-      "span_index" -> (() => { spanIndexShared(s, dir); () }),
-      "span_index_older" -> (() => { spanIndexOlderShared(s, dir); () }),
-      "charspan_index_base" -> (() => { charspanIndexBaseShared(s, dir); () }),
-      "span_bloom" -> (() => { spanBloomShared(s, dir); () }),
-      "tfidf_postings" -> (() => { tfidfPostingsShared(s, dir); () }),
-      "tfidf_postings_older" -> (() => { tfidfPostingsOlderShared(s, dir); () }),
-      "pairs_ng1_t95_lang" -> (() => { ngramPairs95Shared(s, dir); () }),
-      "curriculum_b_overflow" -> (() => { curriculumBOverflowShared(s, dir); () }))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = builds.map { case (n, b) =>
-        scala.concurrent.Future(timed(n)(b()))(ec)
-      }
-      futs.map(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    } finally {
-      // a failed fit must not leave siblings writing the models dir on
-      // non-daemon threads, nor scratch persists in executor cache:
-      // cancel, drain, then release — on success this is just the
-      // normal shutdown + scratch release
-      pool.shutdownNow()
-      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-      Dedup.unpersistAll() // builds may persist scratch frames; serving must not inherit them
-    }
-  }
+  def prebuildModels(s: SparkSession, dir: String): Seq[(String, Double)] =
+    Store.prebuild(s, dir, stores)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- dedup family ---------------------------------------------------
@@ -2066,7 +1735,7 @@ object Pipeline {
       // on the first touch per sf dir and lands in ivf_centroids.parquet)
       val e = Tables.loadFanned(s, dir, "embeddings")
       Similarity.ivfTopKWith(
-        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
+        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
         e, e.filter(col("vec_id") < 5), k = 10, nprobe = 4)
         .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
     },
@@ -2154,7 +1823,7 @@ object Pipeline {
       // serve-many — the a2 discipline; the bench prebuild covers it)
       val e = Tables.loadFanned(s, dir, "embeddings")
       Similarity.ivfRadiusWith(
-          Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
+          Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
           e, e.filter(col("vec_id") < 5), tau = 0.3, nprobe = 4)
         .orderBy(col("query_id"), col("neighbor_id"))
     },
@@ -2205,7 +1874,7 @@ object Pipeline {
       // answer hash-gates — the approximate index with an exact gate.
       val e = Tables.loadFanned(s, dir, "embeddings")
       Similarity.ivfPqTopK(
-        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
+        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
         e, e.filter(col("vec_id") < 5), fittedPq(s, dir),
         k = 10, nprobe = 4)
         .orderBy(col("query_id"), col("rank"))
@@ -2225,7 +1894,7 @@ object Pipeline {
       // residual-codebook parquets (models as data).
       val e = Tables.loadFanned(s, dir, "embeddings")
       Similarity.ivfPqResidualTopK(
-        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir, nlist = 16)),
+        Similarity.loadIvfIndex(s, fittedIvfPath(s, dir)),
         e, e.filter(col("vec_id") < 5), fittedResidualPq(s, dir),
         k = 10, nprobe = 4)
         .orderBy(col("query_id"), col("rank"))
@@ -5027,7 +4696,7 @@ object Pipeline {
       // containment are each one exact scaled integer division; the
       // per-source vocabulary sizes ride in on a broadcast. The postings
       // frame is referenced three times (sizes + both join sides) — at
-      // 100 TB you'd persist it once (the materializedIndex discipline)
+      // 100 TB you'd persist it once (as an index store)
       // instead of re-scanning; at gate scale the three passes keep the
       // plan cache-independent and pin-stable.
       val d = bucketedDocsShared(s, dir)
