@@ -23,14 +23,18 @@ object GraftSession {
     * directory resets it to the data-derived width with
     * [[Tables.applySessionWidth]].
     *
-    * Two extensions are injected through [[org.apache.spark.sql.SparkSessionExtensions]],
+    * Three extensions are injected through [[org.apache.spark.sql.SparkSessionExtensions]],
     * so `spark.sql` and DataFrame plans both get them:
     *  - a planner strategy for per-key top-k ([[graft.plans.TopKPerKeyStrategy]]);
     *  - a pre-transition columnar rule ([[graft.plans.ParamLiterals]]) that
     *    moves the constants of filters and projections out of the generated
     *    Java source, so a statement shape run again with new constants
     *    reuses its compiled classes instead of compiling new ones. The
-    *    compiled-class cache is sized so that those classes stay cached.
+    *    compiled-class cache is sized so that those classes stay cached;
+    *  - an AQE runtime optimizer rule ([[graft.plans.SmallSort]]) that
+    *    sorts a root ORDER BY whose measured input is at most
+    *    `spark.sql.adaptive.coalescePartitions.minPartitionSize` in one
+    *    task, without the range exchange's sampling job and map stage.
     */
   def build(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -43,6 +47,7 @@ object GraftSession {
       .withExtensions { e =>
         e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
         e.injectColumnar(_ => graft.plans.ParamLiterals.columnarRule)
+        e.injectRuntimeOptimizerRule(graft.plans.SmallSort)
       }
       // the compiled-class cache is a Guava LRU split into 4 segments of
       // maxEntries/4; at the default 100, the 73 classes of one pass over

@@ -15,6 +15,7 @@ import org.apache.spark.sql.catalyst.parser.GraftSqlLexer
 import org.apache.spark.sql.catalyst.parser.SqlBaseLexer.{COMMA, FROM, INTEGER_VALUE, LEFT_PAREN, LIMIT, OFFSET, RIGHT_PAREN, SEMICOLON, STRING_LITERAL, TO}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Offset, Project, SetOperation, Sort, SubqueryAlias, Union, UnresolvedHint, UnresolvedWith, WithWindowDefinition}
 import org.apache.spark.sql.catalyst.util.SparkParserUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -146,13 +147,13 @@ class GraftEngine(val spark: SparkSession) {
     register(name, df)
   }
 
-  /** read_csv(path, header=>, delim=>) parity (read_csv.rs:31-42). */
+  /** read_csv(path, header=>, delim=>) parity (read_csv.rs:31-42). The
+    * schema is inferred once per file version ([[readFiles]]): a rewritten
+    * file is inferred again.
+    */
   def readCsv(path: String, header: Boolean, delim: String): DataFrame = {
-    val df = spark.read
-      .option("header", header.toString)
-      .option("inferSchema", "true")
-      .option("delimiter", delim)
-      .csv(path)
+    val df = readFiles("csv", path,
+      Map("header" -> header.toString, "inferSchema" -> "true", "delimiter" -> delim))
     val renamed = if (header) {
       df.toDF(df.columns.map(_.toLowerCase): _*)
     } else {
@@ -180,22 +181,62 @@ class GraftEngine(val spark: SparkSession) {
 
   /** `read_parquet(path)` TVF body: lowercase column names like the CSV
     * inference path; parquet carries real NULLs and its own schema, so no
-    * empty-string coalescing and no inference options apply.
+    * empty-string coalescing and no inference options apply. The footer
+    * schema is read once per file version ([[readFiles]]): a rewritten
+    * file is read again.
     */
   def readParquet(path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = readFiles("parquet", path, Map.empty)
     df.toDF(df.columns.map(_.toLowerCase): _*)
   }
 
   /** `read_json(path)` TVF body (extension — JSON lines, the log/event
     * interchange format a pipeline ingests before columnarizing):
-    * schema inferred per Spark's JSONL reader, column names lowercased
-    * like the CSV/parquet paths. Real NULLs, no coalescing.
+    * schema inferred per Spark's JSONL reader, once per file version
+    * ([[readFiles]]), column names lowercased like the CSV/parquet paths.
+    * Real NULLs, no coalescing.
     */
   def readJson(path: String): DataFrame = {
-    val df = spark.read.json(path)
+    val df = readFiles("json", path, Map.empty)
     df.toDF(df.columns.map(_.toLowerCase): _*)
   }
+
+  /** A file source's inferred schema and the leaf files it was inferred
+    * from, each as (path, length, modification time).
+    */
+  private case class Inferred(files: Set[(String, Long, Long)], schema: StructType)
+
+  /** (format, options, qualified path) → the schema last inferred for it. */
+  private val inferred = mutable.HashMap.empty[(String, Map[String, String], String), Inferred]
+
+  /** `path` read as `format`, its schema inferred once per file version.
+    * Inference is a Spark job (parquet reads the footers, CSV and JSON scan
+    * the data), so a path read again with the same format and options
+    * reads with the schema it was inferred with, unless its leaf files
+    * changed: a file rewritten, added or removed is inferred again, and
+    * the new entry replaces the old. The check compares the listing the
+    * read makes anyway; a miss returns the DataFrame that inferred.
+    */
+  private def readFiles(format: String, path: String, options: Map[String, String]): DataFrame = {
+    def reader = spark.read.format(format).options(options)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val key = (format, options,
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString)
+    inferred.get(key)
+      .map(e => (e, reader.schema(e.schema).load(path)))
+      .collect { case (e, df) if leafFiles(df).contains(e.files) => df }
+      .getOrElse {
+        val df = reader.load(path)
+        leafFiles(df).foreach(files => inferred(key) = Inferred(files, df.schema))
+        df
+      }
+  }
+
+  private def leafFiles(df: DataFrame): Option[Set[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        i.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
 
   /** `COPY <table | (subquery)> TO 'path' (opts)` — the write sink
     * (extension: the reference REJECTS copy-to, bind_copy.rs:77-79; an
