@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import GraftEngine.Tokens
+import graft.operators.{AsofJoin, Audit, Curriculum, Decontaminate, Dedup, Graph, Privacy, Similarity, Tokenizer}
+
+import GraftEngine.{Bound, Opt, Tokens}
 
 /** The sqlrs-compatible engine surface: an embedded SQL session over Spark.
   *
@@ -46,20 +48,24 @@ import GraftEngine.Tokens
   *  - COPY t FROM 'f.csv' (DELIMITER, HEADER) — rewritten to INSERT INTO t
   *    SELECT * FROM read_csv(...), reproducing the reference's SQL-to-SQL
   *    rewrite (bind_copy.rs:10-35)
-  *  - read_csv('path', header=>..., delim=>...) table function
-  *    (read_csv.rs:17-42) and bare `FROM 'file.csv'` auto-binding
+  *  - table functions (below) and bare `FROM 'file.csv'` auto-binding
   *    (bind_base_table_ref.rs:98-118)
-  *  - SHOW TABLES / DESCRIBE / EXPLAIN pragmas and the sqlrs_tables() /
-  *    sqlrs_columns() introspection TVFs (sqlrs_tables.rs, sqlrs_columns.rs)
+  *  - SHOW TABLES / DESCRIBE / EXPLAIN pragmas
   *  - select-list aliases usable in WHERE (bind_select_node.rs:98-131) via
   *    an analysis-failure-driven repair of the parsed tree
   *
-  * Like the reference's binder, table functions bind from the parsed
-  * statement: a SELECT is parsed once by Spark's parser, each table-function
-  * call in the tree (read_*, sqlrs_*, graft_*) is replaced by the analyzed
-  * plan of the DataFrame its body builds, and the expanded tree goes
-  * through Catalyst untouched — the engine adds statement routing, never
-  * its own execution path, so plans stay fully optimizable and distributed.
+  * Table functions bind from one catalog, as the reference's v2 binder
+  * binds read_csv from its table-function catalog (read_csv.rs:17-42):
+  * [[tableFunctions]] declares each function once — the read_* sources,
+  * the sqlrs_tables()/sqlrs_columns() introspection pair (sqlrs_tables.rs,
+  * sqlrs_columns.rs) and the graft_* operators — with its relation
+  * arguments, its typed options (default and range) and its body, and one
+  * validator ([[tableFunction]]) checks every call against it. A SELECT is
+  * parsed once by Spark's parser, each table-function call in the tree is
+  * replaced by the analyzed plan of the DataFrame its body builds, and the
+  * expanded tree goes through Catalyst untouched — the engine adds
+  * statement routing, never its own execution path, so plans stay fully
+  * optimizable and distributed.
   */
 class GraftEngine(val spark: SparkSession) {
 
@@ -523,30 +529,305 @@ class GraftEngine(val spark: SparkSession) {
 
   // ---- table functions ---------------------------------------------------
 
-  /** The source readers and the catalog introspection pair, each with its
-    * body over (positional arguments, `name => value` options); the
-    * graft_* serving TVFs are the keys of [[GraftTvfs]].
+  /** One variant of a table function: a plain function has one, unnamed; a
+    * lifecycle function has one per store kind, chosen by its `kind`
+    * option, each with its own options and body.
     */
-  private val SourceFunctions
-      : Map[String, (Seq[Expression], Seq[(String, String)]) => DataFrame] = Map(
-    "read_csv" -> { (pos, named) =>
-      val opts = named.toMap
-      readCsv(pathArg("read_csv", pos),
-        header = opts.get("header").forall(_.equalsIgnoreCase("true")),
-        delim = opts.getOrElse("delim", ","))
-    },
-    "read_parquet" -> ((pos, _) => readParquet(pathArg("read_parquet", pos))),
-    "read_json" -> ((pos, _) => readJson(pathArg("read_json", pos))),
-    "sqlrs_tables" -> ((_, _) => sqlrsTables()),
-    "sqlrs_columns" -> ((_, _) => sqlrsColumns()))
+  private case class Kind(name: String, options: Seq[Opt], body: Call => DataFrame)
 
-  private def isTableFunction(name: Seq[String]): Boolean = name match {
-    case Seq(n) =>
-      val f = n.toLowerCase
-      SourceFunctions.contains(f) ||
-        (f.startsWith("graft_") && GraftTvfs.contains(f.stripPrefix("graft_")))
-    case _ => false
+  /** One table function: its name, its positional arguments (relations, or
+    * a source reader's quoted file path) and its kinds. It accepts its
+    * kinds' option keys, and `kind` when its kinds are named; the first
+    * kind is the default.
+    */
+  private case class TableFunction(name: String, relations: Seq[String], kinds: Seq[Kind],
+      readsPath: Boolean = false) {
+    val accepted: Seq[String] =
+      (kinds.flatMap(_.options.map(_.key)) ++ Option.when(kinds.head.name.nonEmpty)("kind")).distinct.sorted
   }
+
+  private def fn(name: String, relations: Seq[String], options: Opt*)(body: Call => DataFrame) =
+    TableFunction(name, relations, Seq(Kind("", options, body)))
+  private def reader(name: String, options: Opt*)(body: Call => DataFrame) =
+    TableFunction(name, Seq("path"), Seq(Kind("", options, body)), readsPath = true)
+  private def kind(name: String, options: Opt*)(body: Call => DataFrame) = Kind(name, options, body)
+
+  // option declarations; an integer is at least 1 unless its range says otherwise
+  private def int(key: String, default: Int, range: String = ">= 1") =
+    Opt(key, "an integer", _.toIntOption, Some(default), Some(Bound(range)))
+  private def number(key: String, default: Double, range: String = "") =
+    Opt(key, "a number", _.toDoubleOption, Some(default), Option.when(range.nonEmpty)(Bound(range)))
+  private def bool(key: String, default: Boolean = false) =
+    Opt(key, "true or false", _.toBooleanOption, Some(default))
+  private def text(key: String, default: String) = Opt(key, "text", Some(_), Some(default))
+  /** A required column name, used through the DataFrame API (`col`), never
+    * parsed as SQL text; a bare name and a quoted one are the same option.
+    */
+  private def columnName(key: String) = Opt(key, "a column name", s => Option.when(s.nonEmpty)(s))
+
+  /** Every table function, declared once: name → declaration, built once
+    * per engine. Relation arguments are a quoted parquet path, a table name
+    * from this engine's catalog or a nested call ([[relationArg]]); options
+    * are `name => value`. Each body runs after [[tableFunction]] validated
+    * the call, so it checks only what spans two options. The dedup and BPE
+    * bodies persist tracked scratch frames that their plans reuse; a
+    * long-lived session releases them with the `graft_release` statement.
+    */
+  private val tableFunctions: Map[String, TableFunction] = Seq(
+    // the reference's CSV reader (read_csv.rs:17-42); see [[readCsv]]
+    reader("read_csv", bool("header", default = true), text("delim", ","))(c =>
+      readCsv(c.path, c.bool("header"), c.string("delim"))),
+    reader("read_parquet")(c => readParquet(c.path)),
+    reader("read_json")(c => readJson(c.path)),
+    // catalog introspection (sqlrs_tables.rs, sqlrs_columns.rs)
+    fn("sqlrs_tables", Nil)(_ => sqlrsTables()),
+    fn("sqlrs_columns", Nil)(_ => sqlrsColumns()),
+    // exact cosine top-k over (vec_id, embedding) relations → (query_id,
+    // neighbor_id, sim, rank), served by the bounded-heap TopKPerKey operator
+    fn("graft_topk", Seq("corpus", "queries"), int("k", 10))(c =>
+      Similarity.bruteForceTopK(c.rel(0), c.rel(1), k = c.int("k"))),
+    // kNN majority-vote labels: corpus carries (vec_id, embedding, label) →
+    // (query_id, pred_label, votes)
+    fn("graft_knn_label", Seq("corpus", "queries"), int("k", 5))(c =>
+      Similarity.knnLabel(c.rel(0), c.rel(1), k = c.int("k"))),
+    // radius retrieval: every corpus vector within cosine ≥ tau of each
+    // query → (query_id, neighbor_id, sim); no heap, the output is
+    // radius-bounded. Self-pairs (equal vec_id) are excluded, the graft_topk
+    // convention: re-key one side when the query ids overlap the corpus's
+    fn("graft_radius", Seq("corpus", "queries"), number("tau", 0.3, "[-1, 1]"))(c =>
+      Similarity.radiusSearch(c.rel(0), c.rel(1), tau = c.number("tau"))),
+    // incremental IVF maintenance (a9): assign-only append of a (vec_id,
+    // embedding) drop against a persisted (centroid_id, centroid) index →
+    // per cell (cell, n_new, cos), cos the drift cosine between the stored
+    // centroid and the drop members' mean (null when the drop left the cell
+    // empty). Map-only; no job touches the base corpus
+    fn("graft_ivf_append", Seq("index", "drop"))(c => Similarity.ivfDrift(c.rel(0), c.rel(1))),
+    // MinHash-LSH near-duplicate pairs over (doc_id, text), exact-Jaccard
+    // verified → (i, j)
+    fn("graft_dedup_pairs", Seq("docs"), number("threshold", 0.8, "(0,1]"))(c =>
+      Dedup.minhashLshPairs(c.rel(0), threshold = c.number("threshold"))),
+    // eval-set n-gram contamination flags over (doc_id, text) → (doc_id, n_shared)
+    fn("graft_decontaminate", Seq("corpus", "eval"), int("n", 8))(c =>
+      Decontaminate.ngramOverlap(c.rel(0), c.rel(1), n = c.int("n"))),
+    // embedding near-copies of eval items → (vec_id, n_eval_hits, max_sim)
+    fn("graft_semantic_decon", Seq("corpus", "eval"), number("tau", 0.9, "[-1, 1]"))(c =>
+      Decontaminate.semanticFlags(c.rel(0), c.rel(1), tau = c.number("tau"))),
+    // as-of join on key, latest right row at or before each left row's ord
+    // (forward => true: earliest at or after), attaching the payload
+    // columns, a quoted comma list ('value,props') for several
+    fn("graft_asof", Seq("left", "right"), columnName("key"), columnName("ord"),
+        columnName("payload"), bool("forward")) { c =>
+      val payload = c.string("payload").split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      require(payload.nonEmpty, s"${c.fn}: payload names no columns")
+      if (c.bool("forward")) AsofJoin.forward(c.rel(0), c.rel(1), c.string("key"), c.string("ord"), payload)
+      else AsofJoin.backward(c.rel(0), c.rel(1), c.string("key"), c.string("ord"), payload)
+    },
+    // PageRank over a (doc_a, doc_b) pair relation → (doc_id, r). Served
+    // lazily unrolled, so expanding the call (and EXPLAIN) runs no job; the
+    // plan grows per round (doubling with dangling), so iters is capped.
+    // Deep fixpoints belong on Graph.pageRankConverged, which the g9 gate
+    // pins bit-equal to this form
+    fn("graft_pagerank", Seq("pairs"), int("iters", 3), number("damping", 0.85), bool("dangling")) { c =>
+      val cap = if (c.bool("dangling")) 8 else 20
+      require(c.int("iters") <= cap,
+        s"${c.fn}: iters > $cap unrolls too deep a plan — use Graph.pageRankConverged for deep fixpoints")
+      onGraph(c.rel(0))(Graph.pageRank(_, _, iters = c.int("iters"), damping = c.number("damping"),
+        dangling = c.bool("dangling")))
+    },
+    // integer-exact unnormalized HITS over a directed pair relation →
+    // (doc_id, auth, hub); Graph.hits caps iters at 4 (the int64 bound)
+    fn("graft_hits", Seq("pairs"), int("iters", 2))(c =>
+      onGraph(c.rel(0))(Graph.hits(_, _, iters = c.int("iters")))),
+    // one Louvain-style greedy merge round → (doc_id, comm, gain_num)
+    fn("graft_louvain", Seq("pairs"))(c => onGraph(c.rel(0))(Graph.louvainMove)),
+    // full multi-level Louvain: per-level mutual best-pair coarsening with
+    // the exact integer ΔQ score, `moves` greedy move rounds per level →
+    // (lvl, n_comms, l_in, q_ppm), one row per level from the all-singletons
+    // level 0. Graph.louvainLevels caps levels and moves at 4 each; its
+    // checkpoint rounds run when the plan executes (the g9 posture)
+    fn("graft_louvain_levels", Seq("pairs"), int("levels", 2), int("moves", 1))(c =>
+      onGraph(c.rel(0))(Graph.louvainLevels(_, _, levels = c.int("levels"), movesPerLevel = c.int("moves")))),
+    // HyperBall harmonic centrality and ball size within `dist` hops (g15's
+    // serving face), HLL-estimated with m registers; runs its per-round
+    // persisted jobs when executed
+    fn("graft_hyperball", Seq("pairs"), int("dist", 4, "[1, 8]"), int("m", 256, "[16, 65536]"))(c =>
+      onGraph(c.rel(0))(Graph.harmonicCentralityHll(_, _, maxDist = c.int("dist"), m = c.int("m")))),
+    // the exact integer-ppm ground truth graft_hyperball approximates (g15p),
+    // an O(V·reach) distance table
+    fn("graft_harmonic", Seq("pairs"), int("dist", 4, "[1, 8]"))(c =>
+      onGraph(c.rel(0))(Graph.harmonicCentralityExact(_, _, maxDist = c.int("dist")))),
+    // distributed BPE merge learning over (doc_id, text) → (round, a, b,
+    // cnt, n_syms)
+    fn("graft_bpe_merges", Seq("docs"), int("rounds", 2))(c =>
+      Tokenizer.distributedMergeRounds(c.rel(0), rounds = c.int("rounds"))),
+    // byte-level BPE merge learning (u11: GPT-2 byte→printable remap,
+    // per-round pair-count aggregate, one-row argmax, fold) → (round, a, b,
+    // cnt, n_syms); a trainer, its per-round persisted jobs run when executed
+    fn("graft_byte_bpe_merges", Seq("docs"), int("rounds", 2))(c =>
+      Tokenizer.distributedByteMergeRounds(c.rel(0), rounds = c.int("rounds"))),
+    // byte-level BPE application (u10): rank-greedy segmentation of every
+    // doc under the fixed (round, a, b) merge relation, round the BPE rank →
+    // (doc_id, n_words, n_bytes, n_subwords, spw_ppm, bps_ppm), docs with no
+    // words omitted. Composes: graft_byte_encode(docs,
+    // graft_byte_bpe_merges(docs, rounds => 3))
+    fn("graft_byte_encode", Seq("docs", "merges"))(c => byteEncode(c.fn, c.rel(0), c.rel(1))),
+    // SentencePiece-style unigram-LM training (Kudo ACL'18, u6):
+    // substring-seeded vocabulary, relational Viterbi E-step, usage-pruned
+    // M-step → (piece, n_uses), single chars always kept; a trainer
+    fn("graft_unigram_lm", Seq("docs"), int("vocab", 2048))(c =>
+      Tokenizer.unigramLm(c.rel(0), vocabTarget = c.int("vocab"))),
+    // unigram-LM application (u7): Viterbi segmentation under the fixed
+    // (piece, cost) relation, single characters at char_cost → (doc_id,
+    // n_words, n_pieces, ppw_ppm), docs with no words omitted; map-only
+    fn("graft_unigram_encode", Seq("docs", "pieces"), int("char_cost", 6145)) { c =>
+      val docs = c.rel(0)
+      val pieces = pieceTable(c.fn, c.rel(1))
+      docs.select(col("doc_id"),
+          size(graft.functions.TextFunctions.tokens(col("text"))).cast("long").as("n_words"),
+          size(Tokenizer.unigramSegment(col("text"), pieces, c.int("char_cost").toLong))
+            .cast("long").as("n_pieces"))
+        .filter(col("n_words") > 0)
+        .withColumn("ppw_ppm", expr("(1000000 * n_pieces) div n_words"))
+    },
+    // one unigram-LM EM round (u13) under the fixed (piece, cost) relation →
+    // (piece, n_uses, cost), itself a pieces relation, so the call
+    // self-composes and feeds graft_unigram_encode
+    fn("graft_unigram_em", Seq("docs", "pieces"), int("char_cost", 6145)) { c =>
+      val docs = c.rel(0)
+      Tokenizer.unigramEmStep(docs, pieceTable(c.fn, c.rel(1)), c.int("char_cost").toLong)
+    },
+    // snapshot-probe dedup over (doc_id, text, lang): per probe doc, the base
+    // docs it near-duplicates at word Jaccard ≥ num/den → (doc_id, n_dups,
+    // first_dup, is_new); the base never self-joins, and the rational
+    // threshold keeps the PPJoin prefix bound integer-exact
+    fn("graft_incremental_dedup", Seq("base", "probe"), int("num", 4), int("den", 5)) { c =>
+      val (num, den) = fraction(c)
+      Dedup.incrementalDedup(c.rel(0), c.rel(1), num = num, den = den)
+    },
+    // the same contract in the shingle domain over (doc_id, text): the probe
+    // joins a MinHash band index of the base (persist it through
+    // Dedup.minhashIndex for repeated serving), and the exact verify decides
+    fn("graft_incremental_minhash", Seq("base", "probe"), int("num", 4), int("den", 5)) { c =>
+      val (num, den) = fraction(c)
+      Dedup.incrementalMinhash(Dedup.minhashIndex(c.rel(0)), c.rel(1), num = num, den = den)
+    },
+    // the d8 near-dup closure over (doc_id, lang, text): exact-duplicate
+    // clique collapse, n-gram-Jaccard pairs within a language, min-label
+    // components → (doc_id, rep), the map the governance functions consume
+    fn("graft_components", Seq("docs"), int("n", 1), number("threshold", 0.95, "(0,1]"))(c =>
+      Dedup.nearDupComponents(c.rel(0), n = c.int("n"), threshold = c.number("threshold"))),
+    // the d26 near-dup graph store: member rows (doc_id, rep0, rep, lang,
+    // fp, tsz, toks) and edge rows (doc_id, dst); `… WHERE dst IS NULL` is
+    // the (doc_id, rep) map. graft_index_delete/merge take it as kind
+    // 'components'
+    fn("graft_components_index", Seq("docs"), int("n", 1), number("threshold", 0.95, "(0,1]"))(c =>
+      Dedup.componentsIndex(c.rel(0), n = c.int("n"), threshold = c.number("threshold"))),
+    // takedown on the (doc_id, rep) map: untouched components pass through,
+    // affected ones re-close over their survivors' text, splits included,
+    // bit-identical to rebuilding the closure
+    fn("graft_components_delete", Seq("components", "docs", "revoked"), int("n", 1),
+        number("threshold", 0.95, "(0,1]"))(c =>
+      Dedup.componentsDelete(c.rel(0), c.rel(1), c.rel(2), n = c.int("n"), threshold = c.number("threshold"))),
+    // most-restrictive class governs a component; rank names an integer
+    // class column of docs → (doc_id, rep, own_rank, comp_rank, n_members,
+    // upgraded)
+    fn("graft_license_propagation", Seq("comp", "docs"), columnName("rank"))(c =>
+      Dedup.licensePropagation(c.rel(0), c.rel(1), col(c.string("rank")))),
+    // near-dup components straddling train/val/test: every member of a
+    // multi-split component is flagged
+    fn("graft_split_leakage", Seq("comp", "split"))(c => Dedup.crossSplitLeakage(c.rel(0), c.rel(1))),
+    // duplicated-span surgery: cross-document n-token spans excise from
+    // every document (keep_one => true keeps the (doc_id, pos)-least copy,
+    // the ACL'22 all-but-one rule); documents are kept → (doc_id, n_tokens,
+    // n_removed, clean_text). At scale point docs at a doc_id-bucketed table
+    fn("graft_span_excise", Seq("docs"), int("n", 8, ">= 2"), bool("keep_one")) { c =>
+      if (c.bool("keep_one")) Dedup.spanExciseKeepOne(c.rel(0), n = c.int("n"))
+      else Dedup.spanExcise(c.rel(0), n = c.int("n"))
+    },
+    // TAKEDOWN (d23): a revoked set's contribution leaves a persisted index
+    // without a rebuild, at a cost in proportion to the takedown set
+    TableFunction("graft_index_delete", Seq("index", "revoked"), Seq(
+      // counted span-hash index; revoked carries doc_id + text, n the span length
+      kind("span", int("n", 8, ">= 2"))(c => Dedup.spanIndexDelete(c.rel(0), c.rel(1), n = c.int("n"))),
+      // unbanded tf-idf postings, uncapped band index, streaming prefix
+      // index, IVF member table; revoked is (doc_id), or (vec_id) for ivf
+      kind("postings")(c => Dedup.postingsDelete(c.rel(0), c.rel(1))),
+      kind("minhash")(c => Dedup.minhashIndexDelete(c.rel(0), c.rel(1))),
+      kind("prefix")(c => Dedup.prefixIndexDelete(c.rel(0), c.rel(1))),
+      kind("ivf")(c => Similarity.ivfMembersDelete(c.rel(0), c.rel(1))),
+      // t27's (tok, nd) candidate index; revoked carries doc_id + text, run
+      // the digit-run length; tokens reaching nd = 0 drop
+      kind("secrets", int("run", 4))(c =>
+        Privacy.secretIndexDelete(c.rel(0), c.rel(1), minDigitRun = c.int("run"))),
+      // d27's counted char-window index; n is the window in chars
+      kind("charspan", int("n", 40, ">= 2"))(c =>
+        Dedup.spanIndexCharsDelete(c.rel(0), c.rel(1), n = c.int("n"))),
+      // d26's graph store; revoked is (doc_id); clique relabel, edge splice
+      // and affected-component re-closure read no text, so no options apply
+      kind("components")(c => Dedup.componentsIndexDelete(c.rel(0), c.rel(1))),
+      // s16's ranking store; revoked carries (doc_id, source): anti join,
+      // in-place re-rank, count decrement, rank for rank the rebuild's prefix
+      kind("curriculum")(c => Curriculum.curriculumIndexDelete(c.rel(0), c.rel(1))))),
+    // COMPACTION, the append half of graft_index_delete: a drop (doc_ids
+    // disjoint from the base's) folds into a persisted index by delta
+    // arithmetic or per-doc row union, bit-identical to rebuilding over
+    // base ∪ drop, without re-reading the base. IVF appends are
+    // graft_ivf_append (the member merge needs the centroids)
+    TableFunction("graft_index_merge", Seq("index", "drop"), Seq(
+      kind("span", int("n", 8, ">= 2"))(c => Dedup.spanIndexMerge(c.rel(0), c.rel(1), n = c.int("n"))),
+      kind("postings")(c => Dedup.postingsMerge(c.rel(0), c.rel(1))),
+      kind("minhash")(c => Dedup.minhashIndexMerge(c.rel(0), c.rel(1))),
+      // served-answer equality under its frozen df order (the d19 contract)
+      kind("prefix")(c => Dedup.prefixIndexMerge(c.rel(0), c.rel(1))),
+      kind("secrets", int("run", 4))(c =>
+        Privacy.secretIndexMerge(c.rel(0), c.rel(1), minDigitRun = c.int("run"))),
+      kind("charspan", int("n", 40, ">= 2"))(c =>
+        Dedup.spanIndexCharsMerge(c.rel(0), c.rel(1), n = c.int("n"))),
+      // drop carries doc_id + lang + text; only new cross pairs verify, with
+      // the shingle length n and the Jaccard bound threshold
+      kind("components", int("n", 1), number("threshold", 0.95, "(0,1]"))(c =>
+        Dedup.componentsIndexMerge(c.rel(0), c.rel(1), n = c.int("n"), threshold = c.number("threshold"))),
+      // drop carries (doc_id, source); the heap re-runs over index rows ∪ the
+      // drop's (top-k of top-k(S) ∪ D = top-k(S ∪ D)), k the per-source
+      // depth; merging into an empty store bootstraps it
+      kind("curriculum", int("k", 1000))(c =>
+        Curriculum.curriculumIndexMerge(c.rel(0), c.rel(1), k = c.int("k"))))),
+    // the exact-delete curriculum path: index ∪ overflow survivors re-rank
+    // and trim to k, exactly the rebuild until a source loses more than the
+    // (k, k+pad] overflow buffer holds, which raises eagerly; k must be the
+    // index's build k
+    fn("graft_curriculum_delete_buffered", Seq("index", "revoked", "overflow"), int("k", 1000))(c =>
+      Curriculum.curriculumIndexDelete(c.rel(0), c.rel(1), overflow = Some(c.rel(2)), k = c.int("k"))),
+    // frequency-gated secret redaction (t27): digit-run tokens of at least
+    // `run` digits found in fewer than k documents mask as `<secret>` →
+    // (doc_id, n_tokens, n_secrets, n_redacted, clean_text)
+    fn("graft_secret_scrub", Seq("docs"), int("k", 3), int("run", 4))(c =>
+      Privacy.secretScrub(c.rel(0), k = c.int("k"), minDigitRun = c.int("run"))),
+    // the persisted (tok, nd) candidate index, delete/merge-capable
+    fn("graft_secret_frequencies", Seq("docs"), int("run", 4))(c =>
+      Privacy.secretFrequencies(c.rel(0), minDigitRun = c.int("run"))),
+    // a drop scrubbed against that index, base and within-drop evidence
+    // combined against k: graft_secret_scrub_incremental(drop,
+    // graft_secret_frequencies(base))
+    fn("graft_secret_scrub_incremental", Seq("drop", "index"), int("k", 3), int("run", 4))(c =>
+      Privacy.secretScrubAgainstIndex(c.rel(0), c.rel(1), k = c.int("k"), minDigitRun = c.int("run"))),
+    // the scheduled delete's input (x23): docs (with source, ingest_day)
+    // whose age at day as_of reached their source's retention_days in
+    // policy, with age_days/retention_days; a source with no policy row
+    // never expires. Day 0 is an ingest day. The output is the revoked shape
+    // graft_index_delete / graft_components_delete consume
+    fn("graft_retention_expiry", Seq("docs", "policy"), int("as_of", 359, ">= 0"))(c =>
+      Privacy.retentionExpiry(c.rel(0), c.rel(1), asOfDay = c.int("as_of").toLong)),
+    // the eight-store takedown audit (x25): one (store, n_before, n_after,
+    // n_changed) row per lifecycle index, from the delete paths on the stale
+    // stores. revoked takes full doc rows, so graft_retention_expiry feeds
+    // it; n is the span length (charspan stays at 40 chars), run the digit run
+    fn("graft_takedown_audit", Seq("docs", "revoked", "members", "revoked_vecs"), int("n", 8), int("run", 4))(c =>
+      Audit.takedownAudit(c.rel(0), c.rel(1), c.rel(2), c.rel(3), spanN = c.int("n"), minDigitRun = c.int("run")))
+  ).map(f => f.name -> f).toMap
+
+  private def isTableFunction(name: Seq[String]): Boolean =
+    name.size == 1 && tableFunctions.contains(name.head.toLowerCase)
 
   /** Replace every table-function call in the parsed tree — FROM items,
     * subquery expressions and CTE definitions alike — by the analyzed plan
@@ -565,21 +846,57 @@ class GraftEngine(val spark: SparkSession) {
         })
     }
 
-  /** One table-function call → its DataFrame. Arguments decode once from
-    * the parse tree: each `name => value` becomes option text (a literal's
-    * or foldable expression's value, or a bare name's text), the form the
-    * option readers parse and validate; positional arguments stay
-    * expressions until a body resolves them ([[relationArg]]).
+  /** One table-function call → its DataFrame, checked against its
+    * declaration in [[tableFunctions]] in this order: repeated option keys,
+    * unknown keys (naming the accepted ones), the number of positional
+    * arguments, the kind, then each option's type and range. All of it runs
+    * before any relation resolves, so a bad call reads as what it is, not
+    * as a failed path or table lookup. Each `name => value` decodes once
+    * from the parse tree to text (a literal's or foldable expression's
+    * value, or a bare name); positional arguments stay expressions until
+    * the body asks for them.
     */
-  private def tableFunction(fn: String, args: Seq[Expression]): DataFrame = {
+  private def tableFunction(name: String, args: Seq[Expression]): DataFrame = {
+    val f = tableFunctions(name)
     val (named, pos) = args.partitionMap {
-      case NamedArgumentExpression(k, v) => Left(k.toLowerCase -> optionText(fn, k, v))
+      case NamedArgumentExpression(k, v) => Left(k.toLowerCase -> optionText(name, k, v))
       case e => Right(e)
     }
-    SourceFunctions.get(fn) match {
-      case Some(body) => body(pos, named)
-      case None => graftTvf(fn.stripPrefix("graft_"), pos, named)
+    val keys = named.map(_._1)
+    val repeated = keys.diff(keys.distinct).distinct
+    require(repeated.isEmpty, s"$name: duplicate option(s) ${repeated.mkString(", ")}")
+    val unknown = keys.filterNot(f.accepted.contains)
+    require(unknown.isEmpty,
+      s"$name: unknown option(s) ${unknown.mkString(", ")}; accepted: ${f.accepted.mkString(", ")}")
+    require(pos.size == f.relations.size, s"$name needs ${f.relations.size} " + (
+      if (f.readsPath) "quoted path argument"
+      else if (f.relations.isEmpty) "arguments"
+      else s"relation argument(s) (${f.relations.mkString(", ")} — each a quoted parquet path, a " +
+        "table name or a nested call)") + s", got ${pos.size}")
+    val given = named.toMap
+    val k = given.get("kind").fold(f.kinds.head.name)(_.toLowerCase)
+    val kind = f.kinds.find(_.name == k).getOrElse(throw new IllegalArgumentException(
+      s"$name: kind must be one of ${f.kinds.map(_.name).mkString(", ")} — got '$k'"))
+    val own = kind.options.map(_.key).sorted
+    val stray = keys.filterNot(key => key == "kind" || own.contains(key)).sorted
+    require(stray.isEmpty, s"$name: option(s) ${stray.mkString(", ")} do not apply to kind '$k'" +
+      (if (own.isEmpty) "" else s" (accepted for '$k': ${own.mkString(", ")})"))
+    kind.body(new Call(name, pos, kind.options.map(o => o.key -> o.value(name, given.get(o.key))).toMap))
+  }
+
+  /** A validated call: every option of its kind, given or defaulted, and
+    * its positional arguments, each resolved when the body asks for it.
+    */
+  private final class Call(val fn: String, pos: Seq[Expression], options: Map[String, Any]) {
+    def rel(i: Int): DataFrame = relationArg(fn, pos(i))
+    def path: String = pos.head match {
+      case Literal(p: UTF8String, _) => p.toString
+      case other => throw new IllegalArgumentException(s"$fn: the path is a quoted string, got ${other.sql}")
     }
+    def int(key: String): Int = options(key).asInstanceOf[Int]
+    def number(key: String): Double = options(key).asInstanceOf[Double]
+    def bool(key: String): Boolean = options(key).asInstanceOf[Boolean]
+    def string(key: String): String = options(key).asInstanceOf[String]
   }
 
   private def optionText(fn: String, key: String, v: Expression): String = v match {
@@ -587,12 +904,6 @@ class GraftEngine(val spark: SparkSession) {
     case e if e.foldable => String.valueOf(e.eval())
     case other => throw new IllegalArgumentException(
       s"$fn: option $key needs a literal or a name, got ${other.sql}")
-  }
-
-  private def pathArg(fn: String, pos: Seq[Expression]): String = pos match {
-    case Seq(Literal(p: UTF8String, _)) => p.toString
-    case _ => throw new IllegalArgumentException(
-      s"$fn needs exactly one quoted path argument")
   }
 
   /** A relation argument: a quoted parquet path, a catalog table name, or
@@ -609,773 +920,65 @@ class GraftEngine(val spark: SparkSession) {
         s"a table-function call, got ${other.sql}")
   }
 
-  /** One graft_* serving-TVF call → the operator's DataFrame.
-    * Relation arguments are a single-quoted parquet path
-    * (`'/data/docs.parquet'`), a bare table/view name from this engine's
-    * catalog, or a nested table-function call; scalar options use the
-    * `name => value` TVF convention read_csv already follows.
-    *
-    *  - `graft_topk(corpus, queries, k => 10)` — exact cosine top-k
-    *    over (vec_id, embedding) relations → (query_id, neighbor_id,
-    *    sim, rank), served by the bounded-heap TopKPerKey operator.
-    *  - `graft_dedup_pairs(docs, threshold => 0.8)` — MinHash-LSH
-    *    near-duplicate pairs over (doc_id, text), exact-Jaccard
-    *    verified → (i, j).
-    *  - `graft_decontaminate(corpus, eval, n => 8)` — eval-set n-gram
-    *    contamination flags over (doc_id, text) → (doc_id, n_shared).
-    *  - `graft_pagerank(pairs, iters => 3, damping => 0.85,
-    *    dangling => false)` — PageRank over a (doc_a, doc_b) pair
-    *    relation; vertices are the pairs' distinct endpoints →
-    *    (doc_id, r).
-    *  - `graft_hits(pairs, iters => 2)` — integer-exact unnormalized
-    *    HITS over a directed (doc_a, doc_b) pair relation; vertices are
-    *    the pairs' distinct endpoints → (doc_id, auth, hub).
-    *  - `graft_bpe_merges(docs, rounds => 2)` — distributed BPE merge
-    *    learning over (doc_id, text) → (round, a, b, cnt, n_syms).
-    *  - `graft_radius(corpus, queries, tau => 0.3)` — radius (range)
-    *    retrieval over (vec_id, embedding) relations: every corpus
-    *    vector within cosine ≥ tau of each query → (query_id,
-    *    neighbor_id, sim); no heap — the output is radius-bounded.
-    *    Self-pairs (equal vec_id) are excluded, the graft_topk
-    *    convention — re-key one side when probing with a distinct
-    *    query relation whose id space overlaps the corpus.
-    *  - `graft_louvain(pairs)` — one Louvain-style greedy merge round
-    *    over a (doc_a, doc_b) pair relation; vertices are the pairs'
-    *    distinct endpoints → (doc_id, comm, gain_num).
-    *  - `graft_louvain_levels(pairs, levels => 2)` — FULL multi-level
-    *    Louvain over a (doc_a, doc_b) pair relation: per-level mutual
-    *    best-pair coarsening with the exact integer ΔQ score →
-    *    (lvl, n_comms, l_in, q_ppm), one row per level including the
-    *    all-singletons level 0. Runs its per-level checkpoint rounds
-    *    when executed (the g9 fixpoint posture); levels is capped at 4
-    *    by the operator.
-    *  - `graft_incremental_dedup(base, probe, num => 4, den => 5)` —
-    *    snapshot-probe dedup over (doc_id, text, lang) relations: per
-    *    probe doc, how many base docs it near-duplicates at word
-    *    Jaccard ≥ num/den → (doc_id, n_dups, first_dup, is_new); the
-    *    base never self-joins.
-    *  - `graft_incremental_minhash(base, probe, num => 4, den => 5)` —
-    *    the same snapshot-probe contract in the SHINGLE domain over
-    *    (doc_id, text) relations: a MinHash band index is built from
-    *    the base (persist the base index via the Scala
-    *    `Dedup.minhashIndex` for repeated serving), the probe joins it
-    *    on (band, bucket), and the exact integer verify decides →
-    *    (doc_id, n_dups, first_dup, is_new).
-    *  - `graft_unigram_lm(docs, vocab => 2048)` — SentencePiece-style
-    *    unigram-LM tokenizer TRAINING over a (doc_id, text) relation
-    *    (Kudo ACL'18, the u6 operator): substring-seeded vocabulary,
-    *    relational Viterbi E-step, usage-pruned M-step → (piece,
-    *    n_uses), single chars always kept. Runs its per-round
-    *    checkpoint jobs when executed (the louvain_levels posture —
-    *    a trainer, not a serving query).
-    *  - `graft_byte_bpe_merges(docs, rounds => 2)` — distributed
-    *    BYTE-level BPE merge learning over a (doc_id, text) relation
-    *    (the u11 operator: GPT-2 byte→printable remap, per-round
-    *    pair-count aggregate + one-row argmax + fold) →
-    *    (round, a, b, cnt, n_syms). Runs its per-round persisted jobs
-    *    when executed (a trainer, not a serving query).
-    *  - `graft_byte_encode(docs, merges)` — byte-level BPE APPLICATION
-    *    (the u10 operator): rank-greedy segment every doc under the
-    *    FIXED (round, a, b) merge relation (round = BPE rank) →
-    *    (doc_id, n_words, n_bytes, n_subwords, spw_ppm, bps_ppm); the
-    *    table collects driver-side (bounded), the corpus pass is
-    *    map-only. Composes: graft_byte_encode(docs,
-    *    graft_byte_bpe_merges(docs, rounds => 3)).
-    *  - `graft_unigram_encode(docs, pieces, char_cost => 6145)` —
-    *    unigram-LM tokenizer APPLICATION (the u7 operator): Viterbi-
-    *    segment every doc of a (doc_id, text) relation under the FIXED
-    *    piece table given by the (piece, cost) relation, single
-    *    characters always available at char_cost → (doc_id, n_words,
-    *    n_pieces, ppw_ppm); docs with no words are omitted. The piece
-    *    table collects driver-side (bounded — the codegen reference-
-    *    object discipline), so the corpus pass is map-only.
-    *  - `graft_components(docs, n => 1, threshold => 0.95)` — the d8
-    *    near-dup closure as a front door: exact-duplicate clique
-    *    collapse, exact n-gram-Jaccard pairs within a language, min-label
-    *    connected components; returns `(doc_id, rep)` — the component
-    *    map the governance TVFs consume.
-    *  - `graft_license_propagation(comp, docs, rank => class_col)` —
-    *    most-restrictive-class-governs over components: `(doc_id, rep,
-    *    own_rank, comp_rank, n_members, upgraded)`.
-    *  - `graft_split_leakage(comp, split)` — near-dup components
-    *    straddling train/val/test: every member of a multi-split
-    *    component is flagged.
-    *  - `graft_span_excise(docs, n => 8, keep_one => false)` —
-    *    duplicated-span surgery: cross-document n-token spans excise
-    *    from every document (keep_one => true keeps the canonical
-    *    (doc_id, pos)-minimum occurrence — the ACL'22 all-but-one
-    *    rule); documents are KEPT, returning `(doc_id, n_tokens,
-    *    n_removed, clean_text)`.
-    *  - `graft_index_delete(index, revoked, kind => 'span', n => 8)` —
-    *    TAKEDOWN across the persisted serving indexes (the d23
-    *    compliance family): removes a revoked-document set's
-    *    contribution from a persisted index relation without a
-    *    rebuild. kind: 'span' (counted span-hash index; revoked
-    *    carries doc_id + text), 'postings' (unbanded tf-idf postings),
-    *    'minhash' (uncapped band index), 'prefix' (streaming prefix
-    *    index), 'ivf' (member table keyed by vec_id), 'secrets' (the
-    *    t27 candidate-frequency index; revoked carries doc_id + text,
-    *    run => the digit-run length), 'components' (the near-dup graph
-    *    store from graft_components_index; revoked is (doc_id) —
-    *    clique relabel + edge splice + affected-component re-closure,
-    *    all index-only), 'curriculum' (the s16 ranking store; revoked
-    *    carries (doc_id, source) — anti join + in-place re-rank +
-    *    count decrement, rank-for-rank the rebuild's prefix). Delete
-    *    cost is proportional to the takedown set, never the corpus.
-    *  - `graft_components_index(docs, n => 1, threshold => 0.95)` —
-    *    the d26 near-dup graph STORE build: member rows `(doc_id,
-    *    rep0, rep, lang, fp, tsz, toks)` (the clique map, the closed
-    *    component label, and the rep's hashed shingle evidence) plus
-    *    edge rows `(doc_id, dst)` (the verified rep-level pairs). The
-    *    serving map is `... WHERE dst IS NULL` → (doc_id, rep); the
-    *    store feeds graft_index_delete/merge kind => 'components'.
-    *  - `graft_components_delete(components, docs, revoked, n => 1,
-    *    threshold => 0.95)` — takedown on the near-dup component map:
-    *    untouched components pass through, affected components'
-    *    survivors re-close component-locally (splits included) —
-    *    bit-identical to rebuilding the closure over the survivors.
-    *  - `graft_index_merge(index, drop, kind => 'span', n => 8)` —
-    *    COMPACTION, the append half of graft_index_delete: folds an
-    *    arriving drop's contribution into a persisted index (kind
-    *    'span', 'postings', 'minhash', 'prefix', 'secrets',
-    *    'charspan', or 'components') by delta arithmetic or per-doc
-    *    row union — the base corpus is never re-read, and the result
-    *    is bit-identical to rebuilding over base ∪ drop (disjoint
-    *    doc_ids; 'prefix' promises served-answer equality under its
-    *    frozen df order, the d19 contract; 'components' verifies only
-    *    NEW cross pairs — drop carries doc_id + lang + text, and
-    *    n/threshold are its shingle knobs; 'curriculum' re-heaps index
-    *    rows ∪ the drop's hashed rows — k is the ranking depth, and
-    *    merging into an EMPTY store relation bootstraps it, the SQL
-    *    build path). IVF member appends go through graft_ivf_append.
-    *  - `graft_secret_scrub(docs, k => 3, run => 4)` — frequency-gated
-    *    secret redaction (the t27 k-anonymity scrub): digit-run tokens
-    *    in fewer than k distinct documents corpus-wide mask as
-    *    `<secret>`; returns `(doc_id, n_tokens, n_secrets, n_redacted,
-    *    clean_text)`. `graft_secret_frequencies(docs, run => 4)` emits
-    *    the persisted (tok, nd) candidate index, and
-    *    `graft_secret_scrub_incremental(drop, index, k => 3, run => 4)`
-    *    scrubs an arriving drop against it, combining base and
-    *    within-drop evidence against k — the calls compose as nested
-    *    calls.
-    *  - `graft_retention_expiry(docs, policy, as_of => 359)` — the
-    *    scheduled delete's input (the x23 retention family): rows of
-    *    docs (which must carry `source` and `ingest_day`) whose age at
-    *    as_of reached their source's `retention_days` in the policy
-    *    relation, annotated with `age_days`/`retention_days`; a source
-    *    with no policy row never expires. The output is the
-    *    revoked-set shape graft_index_delete / graft_components_delete
-    *    consume — scheduled and request-driven deletion share one
-    *    lifecycle.
-    *  - `graft_takedown_audit(docs, revoked, members, revoked_vecs,
-    *    n => 8, run => 4)` — the unified EIGHT-store takedown audit
-    *    (x25): one `(store, n_before, n_after, n_changed)` row per
-    *    lifecycle index (span, charspan, postings, minhash, prefix,
-    *    secrets, components, ivf_members), every number from the
-    *    delete paths on the stale stores. `revoked` takes full doc
-    *    rows — `graft_retention_expiry`'s output feeds it directly,
-    *    closing the retention → takedown → audit loop in one SQL
-    *    statement.
-    *  - `graft_unigram_em(docs, pieces, char_cost => 6145)` — one
-    *    unigram-LM EM re-estimation round (u13) under the fixed
-    *    `(piece, cost)` relation; returns `(piece, n_uses, cost)`,
-    *    itself a valid pieces relation, so the call self-composes and
-    *    feeds graft_unigram_encode directly.
-    *  - `graft_hyperball(pairs, dist => 4, m => 256)` — HyperBall
-    *    harmonic-centrality/ball-size estimation over the pair
-    *    relation's endpoints (g15's serving face);
-    *    `graft_harmonic(pairs, dist => 4)` is the exact integer-ppm
-    *    ground truth (g15p) for graphs whose reach allows it.
-    *  - `graft_ivf_append(index, drop)` — incremental IVF maintenance
-    *    (the a9 operator): assign-only append of a (vec_id, embedding)
-    *    drop against a PERSISTED (centroid_id, centroid) index
-    *    relation → per cell (cell, n_new, cos), where cos is the
-    *    drift cosine between the stored centroid and the drop members'
-    *    mean (null when the drop left the cell empty). Map-only
-    *    assignment; no job ever touches the base corpus.
-    *
-    * Lifecycle: the dedup/BPE operators persist tracked scratch frames
-    * their plans reuse within one execution; a long-lived serving
-    * session should issue the `graft_release` statement between serving
-    * batches to release them (Spark recomputes if a released plan is
-    * re-executed, so it is always safe).
+  /** `op` over a (doc_a, doc_b) pair relation and its vertices, the pairs'
+    * distinct endpoints: a table function sees one relation, so isolated
+    * vertices are out of its view.
     */
-  /** Per-KIND option subsets for the kind-dispatched lifecycle TVFs
-    * (graft_index_delete / graft_index_merge): the TVF-level option set
-    * is the union over kinds, so a kind-mismatched option (`n => 8`
-    * with kind => 'secrets', `run => 5` with kind => 'span') would
-    * otherwise be accepted and silently IGNORED — the default applies
-    * and the caller's typo is masked. Validated after kind resolution,
-    * before dispatch; an unknown kind falls through to the dispatch
-    * error (which names the valid kinds).
-    */
-  private val IndexKindOptions: Map[String, Set[String]] = Map(
-    "span" -> Set("n"),
-    "charspan" -> Set("n"),
-    "secrets" -> Set("run"),
-    "postings" -> Set.empty,
-    "minhash" -> Set.empty,
-    "prefix" -> Set.empty,
-    "ivf" -> Set.empty)
+  private def onGraph(pairs: DataFrame)(op: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    op(pairs.select(col("doc_a").as("doc_id")).union(pairs.select(col("doc_b").as("doc_id"))).distinct(), pairs)
 
-  private def requireKindOptions(
-      fn: String, kind: String, given: Set[String]): Unit = {
-    // 'components' is the one kind whose delete and merge halves differ:
-    // delete is pure index arithmetic (no options), merge verifies new
-    // cross pairs and owns the shingle/threshold knobs
-    val allowedOpt = kind match {
-      case "components" =>
-        Some(if (fn == "index_merge") Set("n", "threshold") else Set.empty[String])
-      case "curriculum" =>
-        Some(if (fn == "index_merge") Set("k") else Set.empty[String])
-      case k => IndexKindOptions.get(k)
-    }
-    allowedOpt.foreach { allowed =>
-      val bad = given - "kind" -- allowed
-      require(bad.isEmpty,
-        s"graft_$fn: option(s) ${bad.toSeq.sorted.mkString(", ")} do not " +
-          s"apply to kind '$kind'" + (if (allowed.isEmpty) ""
-          else s" (accepted for '$kind': ${allowed.toSeq.sorted.mkString(", ")})"))
-    }
+  /** The incremental dedup threshold num/den, at most 1. */
+  private def fraction(c: Call): (Int, Int) = {
+    val (num, den) = (c.int("num"), c.int("den"))
+    require(num <= den, s"${c.fn}: threshold num/den must be <= 1, got $num/$den")
+    (num, den)
   }
 
-  /** Every graft_* TVF, declared once: name (without the prefix) →
-    * (the relation arguments it requires, the option keys it accepts).
-    * Arity is checked BEFORE any relation resolves, so a missing argument
-    * errors as an argument-count problem, not as a failed path/table
-    * lookup; an unknown option key is a caller typo (`treshold => 0.9`)
-    * and must error, not silently default.
+  /** A (piece, cost) model relation, collected to ship as a codegen
+    * reference object (the u4/u7 fixed-model discipline). The collect is
+    * capped, so a corpus-sized relation in the model slot fails fast
+    * instead of filling the driver; a piece listed with several costs takes
+    * the least, in piece order, so the model is a function of the relation.
     */
-  private val GraftTvfs: Map[String, (Seq[String], Set[String])] = Map(
-    "topk" -> (Seq("corpus", "queries"), Set("k")),
-    "dedup_pairs" -> (Seq("docs"), Set("threshold")),
-    "decontaminate" -> (Seq("corpus", "eval"), Set("n")),
-    "pagerank" -> (Seq("pairs"), Set("iters", "damping", "dangling")),
-    "hits" -> (Seq("pairs"), Set("iters")),
-    "bpe_merges" -> (Seq("docs"), Set("rounds")),
-    "radius" -> (Seq("corpus", "queries"), Set("tau")),
-    "louvain" -> (Seq("pairs"), Set.empty),
-    "louvain_levels" -> (Seq("pairs"), Set("levels", "moves")),
-    "incremental_dedup" -> (Seq("base", "probe"), Set("num", "den")),
-    "incremental_minhash" -> (Seq("base", "probe"), Set("num", "den")),
-    "knn_label" -> (Seq("corpus", "queries"), Set("k")),
-    "semantic_decon" -> (Seq("corpus", "eval"), Set("tau")),
-    "asof" -> (Seq("left", "right"), Set("key", "ord", "payload", "forward")),
-    "unigram_lm" -> (Seq("docs"), Set("vocab")),
-    "unigram_encode" -> (Seq("docs", "pieces"), Set("char_cost")),
-    "ivf_append" -> (Seq("index", "drop"), Set.empty),
-    "components" -> (Seq("docs"), Set("n", "threshold")),
-    "components_index" -> (Seq("docs"), Set("n", "threshold")),
-    "license_propagation" -> (Seq("comp", "docs"), Set("rank")),
-    "split_leakage" -> (Seq("comp", "split"), Set.empty),
-    "span_excise" -> (Seq("docs"), Set("n", "keep_one")),
-    "index_delete" -> (Seq("index", "revoked"), Set("kind", "n", "run")),
-    "index_merge" -> (Seq("index", "drop"), Set("kind", "n", "run", "threshold", "k")),
-    "components_delete" -> (Seq("components", "docs", "revoked"), Set("n", "threshold")),
-    "byte_bpe_merges" -> (Seq("docs"), Set("rounds")),
-    "byte_encode" -> (Seq("docs", "merges"), Set.empty),
-    "secret_scrub" -> (Seq("docs"), Set("k", "run")),
-    "secret_frequencies" -> (Seq("docs"), Set("run")),
-    "secret_scrub_incremental" -> (Seq("drop", "index"), Set("k", "run")),
-    "retention_expiry" -> (Seq("docs", "policy"), Set("as_of")),
-    "unigram_em" -> (Seq("docs", "pieces"), Set("char_cost")),
-    "hyperball" -> (Seq("pairs"), Set("dist", "m")),
-    "harmonic" -> (Seq("pairs"), Set("dist")),
-    "takedown_audit" -> (Seq("docs", "revoked", "members", "revoked_vecs"), Set("n", "run")),
-    "curriculum_delete_buffered" -> (Seq("index", "revoked", "overflow"), Set("k")))
+  private def pieceTable(fn: String, pieces: DataFrame): Seq[(String, Long)] = {
+    val rows = pieces
+      .select(col("piece").cast("string"), col("cost").cast("long"))
+      .where(col("piece").isNotNull && col("cost").isNotNull)
+      .groupBy(col("piece")).agg(min(col("cost")).as("cost"))
+      .orderBy(col("piece"))
+      .limit(65537).collect()
+    require(rows.length <= 65536,
+      s"$fn: pieces relation exceeds 65536 rows — a piece table is model state, not a corpus")
+    rows.map(r => (r.getString(0), r.getLong(1))).toSeq
+  }
 
-  private def graftTvf(
-      fn: String, pos: Seq[Expression], namedPairs: Seq[(String, String)]): DataFrame = {
-    val named = namedPairs.toMap
-    require(named.size == namedPairs.size,
-      s"graft_$fn: duplicate option(s) " +
-        namedPairs.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
-          .mkString(", "))
-    val (wantRels, allowed) = GraftTvfs(fn)
-    val unknown = named.keySet -- allowed
-    require(unknown.isEmpty,
-      s"graft_$fn: unknown option(s) ${unknown.mkString(", ")}; " +
-        s"accepted: ${allowed.toSeq.sorted.mkString(", ")}")
-    require(pos.length == wantRels.length,
-      s"graft_$fn needs ${wantRels.length} relation argument(s) " +
-        s"(${wantRels.mkString(", ")} — each a quoted parquet path, a " +
-        s"table name or a nested call), got ${pos.length}")
-    def rel(i: Int): DataFrame = relationArg(s"graft_$fn", pos(i))
-    def badValue(key: String, v: String, want: String): Nothing =
-      throw new IllegalArgumentException(
-        s"graft_$fn: option $key needs $want, got '$v'")
-    def intOpt(key: String, default: Int): Int = {
-      val v = named.get(key).map { raw =>
-        try raw.toInt catch { case _: NumberFormatException =>
-          badValue(key, raw, "an integer") }
-      }.getOrElse(default)
-      require(v >= 1, s"graft_$fn: $key must be >= 1, got $v")
-      v
-    }
-    def doubleOpt(key: String, default: Double): Double =
-      named.get(key).map { raw =>
-        try raw.toDouble catch { case _: NumberFormatException =>
-          badValue(key, raw, "a number") }
-      }.getOrElse(default)
-    def boolOpt(key: String): Boolean =
-      named.get(key).exists { raw =>
-        try raw.toBoolean catch { case _: IllegalArgumentException =>
-          badValue(key, raw, "true or false") }
-      }
-    // column-name options (the asof posture): consumed through the
-    // DataFrame API (col(...)), never re-parsed as SQL text; a bare name
-    // and a quoted one decode to the same text
-    def strOpt(key: String): String = {
-      val v = named.getOrElse(key, throw new IllegalArgumentException(
-        s"graft_$fn: option $key is required (a column name)"))
-      require(v.nonEmpty, s"graft_$fn: option $key is empty")
-      v
-    }
-    // the (piece, cost) model relation of unigram_encode / unigram_em
-    // ships as a codegen reference object (the u4/u7 fixed-model
-    // discipline) — cap the collect so a caller pointing a corpus-sized
-    // relation at the model slot fails fast instead of OOMing the driver.
-    // Duplicate piece rows with CONFLICTING costs would otherwise resolve
-    // in plan-dependent order (an unordered limit+collect) — take the min
-    // cost per piece and a canonical piece order so the shipped model is
-    // a deterministic function of the relation.
-    def pieceTable(pieces: DataFrame): Seq[(String, Long)] = {
-      val rows = pieces
-        .select(col("piece").cast("string"), col("cost").cast("long"))
-        .where(col("piece").isNotNull && col("cost").isNotNull)
-        .groupBy(col("piece")).agg(min(col("cost")).as("cost"))
-        .orderBy(col("piece"))
-        .limit(65537).collect()
-      require(rows.length <= 65536,
-        s"graft_$fn: pieces relation exceeds 65536 rows — " +
-          "a piece table is model state, not a corpus")
-      rows.map(r => (r.getString(0), r.getLong(1))).toSeq
-    }
-    // graph TVFs share one vertex convention: the pair table's distinct
-    // endpoints (a TVF has one relation argument; isolated vertices are
-    // out of its view)
-    def endpointVerts(pairs: DataFrame): DataFrame =
-      pairs.select(col("doc_a").as("doc_id"))
-        .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // options parse BEFORE relations resolve in every branch, so a bad
-    // option value reads as an option error even when a relation is also
-    // missing
-    fn match {
-      case "topk" =>
-        val k = intOpt("k", 10)
-        graft.operators.Similarity.bruteForceTopK(rel(0), rel(1), k = k)
-      case "dedup_pairs" =>
-        val threshold = doubleOpt("threshold", 0.8)
-        require(threshold > 0.0 && threshold <= 1.0,
-          s"graft_dedup_pairs: threshold must be in (0,1], got $threshold")
-        graft.operators.Dedup.minhashLshPairs(rel(0), threshold = threshold)
-      case "decontaminate" =>
-        val n = intOpt("n", 8)
-        graft.operators.Decontaminate.ngramOverlap(rel(0), rel(1), n = n)
-      case "pagerank" =>
-        // Served through the LAZY unrolled form so the rewrite itself
-        // (and EXPLAIN over it) runs zero jobs; iters is therefore
-        // CAPPED — the unrolled plan grows linearly per round (and would
-        // double per round with dangling, capped tighter by the operator
-        // itself). Deep fixpoints belong on the Scala
-        // `Graph.pageRankConverged` API, whose checkpointed rounds the
-        // g9 gate pins bit-equal to this form.
-        val iters = intOpt("iters", 3)
-        val damping = doubleOpt("damping", 0.85)
-        val dangling = boolOpt("dangling")
-        val cap = if (dangling) 8 else 20
-        require(iters <= cap,
-          s"graft_pagerank: iters > $cap unrolls too deep a plan — use " +
-            "Graph.pageRankConverged for deep fixpoints")
-        val pairs = rel(0)
-        graft.operators.Graph.pageRank(endpointVerts(pairs), pairs,
-          iters = iters, damping = damping, dangling = dangling)
-      case "hits" =>
-        // Graph.hits itself caps iters at 4 (the int64 score-overflow
-        // bound), so the TVF only floors it.
-        val iters = intOpt("iters", 2)
-        val pairs = rel(0)
-        graft.operators.Graph.hits(endpointVerts(pairs), pairs,
-          iters = iters)
-      case "bpe_merges" =>
-        val rounds = intOpt("rounds", 2)
-        graft.operators.Tokenizer.distributedMergeRounds(rel(0),
-          rounds = rounds)
-      case "byte_bpe_merges" =>
-        // u11's distributed BYTE-level trainer (GPT-2 remap symbols —
-        // Radford et al. 2019): per-round pair-count aggregate, one-row
-        // argmax, HOF fold. Runs its per-round persisted jobs when
-        // executed (the louvain_levels trainer posture). Output
-        // (round, a, b, cnt, n_syms) — feed it straight into
-        // graft_byte_encode (nested calls compose).
-        val rounds = intOpt("rounds", 2)
-        graft.operators.Tokenizer.distributedByteMergeRounds(rel(0),
-          rounds = rounds)
-      case "byte_encode" =>
-        // u10's byte-level BPE APPLICATION: segment every doc of a
-        // (doc_id, text) relation under the FIXED merge table given by
-        // the (round, a, b) relation — merge ORDER is the round column
-        // (BPE ranks are positional). The table ships as a codegen
-        // reference object (the unigram_encode bounded-collect
-        // discipline); the corpus pass is map-only. Output mirrors the
-        // u10 gate: (doc_id, n_words, n_bytes, n_subwords, spw_ppm,
-        // bps_ppm), docs with no words omitted.
-        val docs = rel(0)
-        val mergeRows = rel(1)
-          .select(col("round").cast("long").as("round"),
-            col("a").cast("string"), col("b").cast("string"))
-          .where(col("round").isNotNull && col("a").isNotNull
-            && col("b").isNotNull)
-          // exact duplicate rows collapse harmlessly; what must NOT
-          // pass is two DIFFERENT merges sharing one round — ranks are
-          // positional, so they'd apply in plan-dependent order (the
-          // unigram_encode min-cost discipline, applied to merges:
-          // the shipped model must be a deterministic function of the
-          // relation, and an ambiguous one is a caller error)
-          .distinct()
-          .orderBy(col("round"))
-          .limit(65537).collect()
-        require(mergeRows.length <= 65536,
-          "graft_byte_encode: merges relation exceeds 65536 rows — " +
-            "a merge table is model state, not a corpus")
-        val dupRounds = mergeRows.groupBy(_.getLong(0))
-          .collect { case (r, g) if g.length > 1 => r }.toSeq.sorted
-        require(dupRounds.isEmpty,
-          "graft_byte_encode: merge rounds must be unique (BPE ranks " +
-            "are positional) — conflicting merges at round(s) " +
-            dupRounds.take(5).mkString(", "))
-        val merges = mergeRows.map(r => (r.getString(1), r.getString(2))).toSeq
-        val toks = graft.functions.TextFunctions.tokens(col("text"))
-        docs.select(col("doc_id"),
-            size(toks).cast("long").as("n_words"),
-            aggregate(toks, lit(0L), (acc, x) => acc + octet_length(x))
-              .as("n_bytes"),
-            size(graft.operators.Tokenizer.byteSegment(col("text"), merges))
-              .cast("long").as("n_subwords"))
-          .filter(col("n_words") > 0)
-          .withColumn("spw_ppm", expr("(1000000 * n_subwords) div n_words"))
-          .withColumn("bps_ppm", expr("(1000000 * n_bytes) div n_subwords"))
-      case "secret_scrub" =>
-        // t27's frequency-gated secret redaction (k-anonymity scrub):
-        // digit-run tokens rarer than k distinct docs corpus-wide mask
-        // as <secret>; frequent codes survive. run = minimum digit-run
-        // length that makes a token a candidate.
-        val k = intOpt("k", 3)
-        val run = intOpt("run", 4)
-        graft.operators.Privacy.secretScrub(rel(0), k = k, minDigitRun = run)
-      case "secret_frequencies" =>
-        // the persisted index shape for the incremental scrub: one row
-        // per candidate token with its distinct-doc count (counted rows
-        // — delete/merge-capable with the d23/d25 delta arithmetic)
-        val run = intOpt("run", 4)
-        graft.operators.Privacy.secretFrequencies(rel(0), minDigitRun = run)
-      case "secret_scrub_incremental" =>
-        // the daily-drop posture: the drop scrubs against a persisted
-        // graft_secret_frequencies index; base + within-drop evidence
-        // combine against k (the calls COMPOSE:
-        // graft_secret_scrub_incremental(drop, graft_secret_frequencies(base)))
-        val k = intOpt("k", 3)
-        val run = intOpt("run", 4)
-        graft.operators.Privacy.secretScrubAgainstIndex(rel(0), rel(1),
-          k = k, minDigitRun = run)
-      case "retention_expiry" =>
-        // the scheduled delete's input: docs past their source's
-        // retention as of the audit day. docs must carry (source,
-        // ingest_day, ...); policy is (source, retention_days). The
-        // output is the revoked-set shape graft_index_delete /
-        // graft_components_delete consume — the calls compose.
-        val asOf = intOpt("as_of", 359)
-        graft.operators.Privacy.retentionExpiry(rel(0), rel(1),
-          asOfDay = asOf.toLong)
-      case "radius" =>
-        val tau = doubleOpt("tau", 0.3)
-        require(tau >= -1.0 && tau <= 1.0,
-          s"graft_radius: tau is a cosine bound in [-1, 1], got $tau")
-        graft.operators.Similarity.radiusSearch(rel(0), rel(1), tau = tau)
-      case "louvain" =>
-        val pairs = rel(0)
-        graft.operators.Graph.louvainMove(endpointVerts(pairs), pairs)
-      case "louvain_levels" =>
-        // Graph.louvainLevels caps levels and moves at 4 each (every
-        // move is an eager checkpoint round); the TVF only floors them
-        val levels = intOpt("levels", 2)
-        val moves = intOpt("moves", 1)
-        val pairs = rel(0)
-        graft.operators.Graph.louvainLevels(endpointVerts(pairs), pairs,
-          levels = levels, movesPerLevel = moves)
-      case "incremental_dedup" =>
-        // the rational-threshold contract (num/den, default 4/5) keeps
-        // the PPJoin prefix bound integer-exact — see
-        // Dedup.incrementalDedup for why a double threshold is unsafe
-        val num = intOpt("num", 4)
-        val den = intOpt("den", 5)
-        require(num <= den,
-          s"graft_incremental_dedup: threshold num/den must be <= 1, " +
-            s"got $num/$den")
-        graft.operators.Dedup.incrementalDedup(rel(0), rel(1),
-          num = num, den = den)
-      case "incremental_minhash" =>
-        val num = intOpt("num", 4)
-        val den = intOpt("den", 5)
-        require(num <= den,
-          s"graft_incremental_minhash: threshold num/den must be <= 1, " +
-            s"got $num/$den")
-        graft.operators.Dedup.incrementalMinhash(
-          graft.operators.Dedup.minhashIndex(rel(0)), rel(1),
-          num = num, den = den)
-      case "unigram_lm" =>
-        val vocab = intOpt("vocab", 2048)
-        graft.operators.Tokenizer.unigramLm(rel(0), vocabTarget = vocab)
-      case "unigram_encode" =>
-        val charCost = intOpt("char_cost", 6145).toLong
-        val docs = rel(0)
-        val pieces = pieceTable(rel(1))
-        docs.select(col("doc_id"),
-            size(graft.functions.TextFunctions.tokens(col("text")))
-              .cast("long").as("n_words"),
-            size(graft.operators.Tokenizer.unigramSegment(
-              col("text"), pieces, charCost)).cast("long").as("n_pieces"))
-          .filter(col("n_words") > 0)
-          .withColumn("ppw_ppm", expr("(1000000 * n_pieces) div n_words"))
-      case "unigram_em" =>
-        // u13's EM re-estimation round: E-step Viterbi usage under the
-        // FIXED (piece, cost) relation, M-step exact bit-length
-        // re-costing. Output (piece, n_uses, cost) is itself a valid
-        // pieces relation, so the call SELF-composes —
-        // graft_unigram_em(docs, graft_unigram_em(docs, pieces_t)) is
-        // two EM rounds — and feeds graft_unigram_encode directly.
-        val charCost = intOpt("char_cost", 6145).toLong
-        val docs = rel(0)
-        graft.operators.Tokenizer.unigramEmStep(docs, pieceTable(rel(1)), charCost)
-      case "hyperball" =>
-        // g15's HyperBall estimator face: per endpoint vertex the
-        // HLL-estimated harmonic centrality and ball size within
-        // `dist` hops (the register-digest gate face is g15; the
-        // estimator is the serving face a SQL user wants). Runs its
-        // per-round persisted jobs when executed (trainer posture).
-        val dist = intOpt("dist", 4)
-        require(dist <= 8, s"graft_hyperball: dist must be <= 8, got $dist")
-        val m = intOpt("m", 256)
-        require(m >= 16 && m <= (1 << 16),
-          s"graft_hyperball: m must be in [16, 65536], got $m")
-        val pairs = rel(0)
-        graft.operators.Graph.harmonicCentralityHll(
-          endpointVerts(pairs), pairs, maxDist = dist, m = m)
-      case "harmonic" =>
-        // g15p's exact bounded-radius harmonic centrality (integer
-        // ppm) over the pair relation's endpoint vertices — the ground
-        // truth graft_hyperball approximates; O(V·reach) distance
-        // table, the documented reason the sketch face exists.
-        val dist = intOpt("dist", 4)
-        require(dist <= 8, s"graft_harmonic: dist must be <= 8, got $dist")
-        val pairs = rel(0)
-        graft.operators.Graph.harmonicCentralityExact(
-          endpointVerts(pairs), pairs, maxDist = dist)
-      case "ivf_append" =>
-        graft.operators.Similarity.ivfDrift(rel(0), rel(1))
-      case "components" =>
-        // the d8 near-dup closure as a front door: (doc_id, rep) over
-        // any (doc_id, lang, text) relation — the component map the
-        // governance TVFs below consume
-        val n = intOpt("n", 1)
-        val threshold = doubleOpt("threshold", 0.95)
-        require(threshold > 0.0 && threshold <= 1.0,
-          s"graft_components: threshold must be in (0,1], got $threshold")
-        graft.operators.Dedup.nearDupComponents(rel(0), n = n,
-          threshold = threshold)
-      case "components_index" =>
-        // the d26 near-dup graph STORE build (member + edge rows) —
-        // the eighth lifecycle index: feed it to graft_index_delete /
-        // graft_index_merge with kind => 'components'; project the
-        // serving map with `... WHERE dst IS NULL` (doc_id, rep)
-        val n = intOpt("n", 1)
-        val threshold = doubleOpt("threshold", 0.95)
-        require(threshold > 0.0 && threshold <= 1.0,
-          s"graft_components_index: threshold must be in (0,1], got $threshold")
-        graft.operators.Dedup.componentsIndex(rel(0), n = n,
-          threshold = threshold)
-      case "license_propagation" =>
-        // rank is a COLUMN NAME in `docs` (an integer restrictiveness
-        // class — the license-registry lookup of a production pipeline)
-        val rank = strOpt("rank")
-        graft.operators.Dedup.licensePropagation(rel(0), rel(1), col(rank))
-      case "split_leakage" =>
-        graft.operators.Dedup.crossSplitLeakage(rel(0), rel(1))
-      case "span_excise" =>
-        // keep_one => true selects the ACL'22 all-but-one rule
-        // (spanExciseKeepOne); default is the remove-every-copy
-        // template variant (spanExcise). Callers rewriting at corpus
-        // scale should point `docs` at a doc_id-bucketed table so the
-        // cover join-back exchanges only the int cover side (the d20
-        // posture).
-        val n = intOpt("n", 8)
-        require(n >= 2, s"graft_span_excise: n must be >= 2, got $n")
-        if (boolOpt("keep_one"))
-          graft.operators.Dedup.spanExciseKeepOne(rel(0), n = n)
-        else graft.operators.Dedup.spanExcise(rel(0), n = n)
-      case "index_delete" =>
-        // TAKEDOWN across the persisted serving indexes (the d23
-        // compliance family): remove a revoked-document set's
-        // contribution from a persisted index WITHOUT a rebuild.
-        // kind selects the store: 'span' (counted span-hash index —
-        // revoked must carry doc_id AND text; n is the span length),
-        // 'postings' (unbanded tf-idf postings — revoked is (doc_id)),
-        // 'minhash' (uncapped band index — revoked is (doc_id)),
-        // 'prefix' (streaming prefix index — revoked is (doc_id)),
-        // 'ivf' (IVF member table — revoked is (vec_id)).
-        val kind = named.getOrElse("kind", "span").toLowerCase
-        requireKindOptions("index_delete", kind, named.keySet)
-        kind match {
-          case "span" =>
-            val n = intOpt("n", 8)
-            require(n >= 2, s"graft_index_delete: n must be >= 2, got $n")
-            graft.operators.Dedup.spanIndexDelete(rel(0), rel(1), n = n)
-          case "postings" =>
-            graft.operators.Dedup.postingsDelete(rel(0), rel(1))
-          case "minhash" =>
-            graft.operators.Dedup.minhashIndexDelete(rel(0), rel(1))
-          case "prefix" =>
-            graft.operators.Dedup.prefixIndexDelete(rel(0), rel(1))
-          case "ivf" =>
-            graft.operators.Similarity.ivfMembersDelete(rel(0), rel(1))
-          case "secrets" =>
-            // t27's (tok, nd) candidate-frequency index — revoked
-            // carries doc_id + text; decrements from the revoked docs
-            // alone, tokens reaching nd = 0 drop
-            graft.operators.Privacy.secretIndexDelete(rel(0), rel(1),
-              minDigitRun = intOpt("run", 4))
-          case "charspan" =>
-            // d27's counted char-window index (gh, nd) — revoked
-            // carries doc_id + text; n is the window length in CHARS
-            val n = intOpt("n", 40)
-            require(n >= 2, s"graft_index_delete: n must be >= 2, got $n")
-            graft.operators.Dedup.spanIndexCharsDelete(rel(0), rel(1), n = n)
-          case "components" =>
-            // d26's near-dup graph store (member + edge rows) — revoked
-            // is (doc_id); the repair is pure index arithmetic (clique
-            // relabel + edge splice + affected-component re-closure),
-            // no text is read, so no shingle options apply
-            graft.operators.Dedup.componentsIndexDelete(rel(0), rel(1))
-          case "curriculum" =>
-            // s16's ranking store — revoked carries (doc_id, source);
-            // anti join + in-place re-rank + count decrement (the
-            // prefix contract: rank-for-rank the rebuild's prefix)
-            graft.operators.Curriculum.curriculumIndexDelete(rel(0), rel(1))
-          case other => throw new IllegalArgumentException(
-            s"graft_index_delete: kind must be one of span, postings, " +
-              s"minhash, prefix, ivf, secrets, charspan, components, " +
-              s"curriculum — got '$other'")
-        }
-      case "components_delete" =>
-        // TAKEDOWN on the near-dup component map — the graph store's
-        // delete, where revocation can SPLIT a component: untouched
-        // components pass through, affected components' survivors
-        // re-close over their own text (the d26 operator). Relations:
-        // the persisted (doc_id, rep) map, the corpus it was built
-        // from, and the revoked (doc_id) set.
-        val n = intOpt("n", 1)
-        val threshold = doubleOpt("threshold", 0.95)
-        require(threshold > 0.0 && threshold <= 1.0,
-          s"graft_components_delete: threshold must be in (0,1], got $threshold")
-        graft.operators.Dedup.componentsDelete(rel(0), rel(1), rel(2),
-          n = n, threshold = threshold)
-      case "index_merge" =>
-        // COMPACTION across the persisted serving indexes — the append
-        // half of graft_index_delete (same kind dispatch): fold an
-        // arriving drop's contribution into a persisted index without
-        // re-reading the base corpus. kind: 'span' (counted span-hash
-        // index — drop carries doc_id + text; n is the span length),
-        // 'postings' (unbanded tf-idf postings — drop carries doc_id +
-        // text). Drop doc_ids must be disjoint from the base's (the
-        // snapshot contract).
-        val kind = named.getOrElse("kind", "span").toLowerCase
-        requireKindOptions("index_merge", kind, named.keySet)
-        kind match {
-          case "span" =>
-            val n = intOpt("n", 8)
-            require(n >= 2, s"graft_index_merge: n must be >= 2, got $n")
-            graft.operators.Dedup.spanIndexMerge(rel(0), rel(1), n = n)
-          case "postings" =>
-            graft.operators.Dedup.postingsMerge(rel(0), rel(1))
-          case "minhash" =>
-            graft.operators.Dedup.minhashIndexMerge(rel(0), rel(1))
-          case "prefix" =>
-            graft.operators.Dedup.prefixIndexMerge(rel(0), rel(1))
-          case "secrets" =>
-            // t27's (tok, nd) candidate-frequency index — drop carries
-            // doc_id + text; run is the candidate digit-run length
-            graft.operators.Privacy.secretIndexMerge(rel(0), rel(1),
-              minDigitRun = intOpt("run", 4))
-          case "charspan" =>
-            // d27's counted char-window index — drop carries doc_id +
-            // text; n is the window length in CHARS
-            val n2c = intOpt("n", 40)
-            require(n2c >= 2, s"graft_index_merge: n must be >= 2, got $n2c")
-            graft.operators.Dedup.spanIndexCharsMerge(rel(0), rel(1), n = n2c)
-          case "components" =>
-            // d26's near-dup graph store — drop carries doc_id + lang +
-            // text; n/threshold are the shingle length and Jaccard bound
-            // for verifying NEW cross pairs (old×old never re-verifies —
-            // the stored edge set is already complete)
-            val nc = intOpt("n", 1)
-            val tc = doubleOpt("threshold", 0.95)
-            require(tc > 0.0 && tc <= 1.0,
-              s"graft_index_merge: threshold must be in (0,1], got $tc")
-            graft.operators.Dedup.componentsIndexMerge(rel(0), rel(1),
-              n = nc, threshold = tc)
-          case "curriculum" =>
-            // s16's ranking store — drop carries (doc_id, source); the
-            // heap re-runs over index rows ∪ the drop's hashed rows
-            // (top-k of top-k(S) ∪ D = top-k(S ∪ D) — exact), counts
-            // fold per source; k is the per-source ranking depth
-            graft.operators.Curriculum.curriculumIndexMerge(rel(0), rel(1),
-              k = intOpt("k", 1000))
-          case other => throw new IllegalArgumentException(
-            s"graft_index_merge: kind must be one of span, postings, " +
-              s"minhash, prefix, secrets, charspan, components, " +
-              s"curriculum — got '$other' (IVF appends go through graft_ivf_append — the " +
-              "member merge needs the centroid relation)")
-        }
-      case "curriculum_delete_buffered" =>
-        // the exact-delete curriculum path (r18): index ∪ overflow
-        // survivors re-rank and trim to k — EXACTLY the rebuild until a
-        // saturated source loses more than the buffer's pad, raising
-        // EAGERLY beyond (r19: the violation count is its own action at
-        // rewrite time — an in-plan assert is prunable under pushed
-        // predicates). `overflow` is the persisted (k, k+pad] buffer
-        // (graft-side: curriculumOverflow); k MUST match the index's
-        // build k (the snapshot contract).
-        graft.operators.Curriculum.curriculumIndexDelete(rel(0), rel(1),
-          overflow = Some(rel(2)), k = intOpt("k", 1000))
-      case "takedown_audit" =>
-        // the unified 8-store audit (x25): docs (doc_id, lang, text),
-        // revoked (full doc rows — graft_retention_expiry's output
-        // shape composes directly), the persisted IVF member table,
-        // and its revoked vec_ids. n => span length (tokens; charspan
-        // is fixed at its 40-char default), run => secret digit-run.
-        graft.operators.Audit.takedownAudit(rel(0), rel(1), rel(2), rel(3),
-          spanN = intOpt("n", 8), minDigitRun = intOpt("run", 4))
-      case "knn_label" =>
-        val k = intOpt("k", 5)
-        graft.operators.Similarity.knnLabel(rel(0), rel(1), k = k)
-      case "semantic_decon" =>
-        val tau = doubleOpt("tau", 0.9)
-        require(tau >= -1.0 && tau <= 1.0,
-          s"graft_semantic_decon: tau is a cosine bound in [-1, 1], got $tau")
-        graft.operators.Decontaminate.semanticFlags(rel(0), rel(1), tau = tau)
-      case "asof" =>
-        // key/ord/payload are COLUMN NAMES (strOpt above). `payload`
-        // accepts a quoted comma list ('value,props').
-        val key = strOpt("key")
-        val ord = strOpt("ord")
-        val payload = strOpt("payload").split(",").map(_.trim)
-          .filter(_.nonEmpty).toSeq
-        require(payload.nonEmpty, "graft_asof: payload names no columns")
-        if (boolOpt("forward"))
-          graft.operators.AsofJoin.forward(rel(0), rel(1), key, ord, payload)
-        else
-          graft.operators.AsofJoin.backward(rel(0), rel(1), key, ord, payload)
-    }
+  /** graft_byte_encode's body: the (round, a, b) merge table ships as a
+    * codegen reference object under the same bounded collect as
+    * [[pieceTable]], ranks in round order, and the corpus pass is map-only.
+    * Exact duplicate rows collapse; two different merges at one round would
+    * apply in plan-dependent order, so they are an error.
+    */
+  private def byteEncode(fn: String, docs: DataFrame, mergeRel: DataFrame): DataFrame = {
+    val mergeRows = mergeRel
+      .select(col("round").cast("long").as("round"), col("a").cast("string"), col("b").cast("string"))
+      .where(col("round").isNotNull && col("a").isNotNull && col("b").isNotNull)
+      .distinct()
+      .orderBy(col("round"))
+      .limit(65537).collect()
+    require(mergeRows.length <= 65536,
+      s"$fn: merges relation exceeds 65536 rows — a merge table is model state, not a corpus")
+    val dupRounds = mergeRows.groupBy(_.getLong(0)).collect { case (r, g) if g.length > 1 => r }.toSeq.sorted
+    require(dupRounds.isEmpty, s"$fn: merge rounds must be unique (BPE ranks are positional) — " +
+      s"conflicting merges at round(s) ${dupRounds.take(5).mkString(", ")}")
+    val merges = mergeRows.map(r => (r.getString(1), r.getString(2))).toSeq
+    val toks = graft.functions.TextFunctions.tokens(col("text"))
+    docs.select(col("doc_id"),
+        size(toks).cast("long").as("n_words"),
+        aggregate(toks, lit(0L), (acc, x) => acc + octet_length(x)).as("n_bytes"),
+        size(Tokenizer.byteSegment(col("text"), merges)).cast("long").as("n_subwords"))
+      .filter(col("n_words") > 0)
+      .withColumn("spw_ppm", expr("(1000000 * n_subwords) div n_words"))
+      .withColumn("bps_ppm", expr("(1000000 * n_bytes) div n_subwords"))
   }
 
   /** Reference error semantics: `select 'abc' > 10` must fail to bind — the
@@ -1852,6 +1455,34 @@ class GraftEngine(val spark: SparkSession) {
 }
 
 object GraftEngine {
+
+  /** A table-function option: its key, the type its text must parse as
+    * (`want` names it in errors), its default (none: the option is
+    * required) and, for a number, its allowed range.
+    */
+  private[engine] final case class Opt(key: String, want: String, parse: String => Option[Any],
+      default: Option[Any] = None, range: Option[Bound] = None) {
+    /** The option's value in a call to `fn`: its text parsed and checked, or the default. */
+    def value(fn: String, raw: Option[String]): Any = raw match {
+      case None => default.getOrElse(throw new IllegalArgumentException(s"$fn: option $key is required ($want)"))
+      case Some(text) =>
+        val v = parse(text).getOrElse(throw new IllegalArgumentException(s"$fn: option $key needs $want, got '$text'"))
+        range.foreach(r => require(r.holds(text.toDouble), s"$fn: $key must be ${r.phrase}, got $v"))
+        v
+    }
+  }
+
+  /** A numeric option's allowed range, written as its errors show it:
+    * `>= n`, or an interval such as `[16, 65536]` or `(0,1]`.
+    */
+  private[engine] final case class Bound(text: String) {
+    private val (lo, hi) =
+      if (text.startsWith(">=")) (text.drop(2).trim.toDouble, Double.PositiveInfinity)
+      else text.slice(1, text.length - 1).split(',').map(_.trim.toDouble) match { case Array(a, b) => (a, b) }
+    def holds(v: Double): Boolean =
+      (if (text.head == '(') v > lo else v >= lo) && (if (text.last == ')') v < hi else v <= hi)
+    def phrase: String = if (text.startsWith(">=")) text else s"in $text"
+  }
 
   /** A statement, or part of one, as the visible tokens of Spark's SQL
     * lexer: whitespace and comments are hidden, and a literal, quoted

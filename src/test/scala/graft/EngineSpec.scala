@@ -1838,4 +1838,43 @@ class EngineSpec extends AnyFunSuite {
     assert(got.head == java.time.Duration.ofDays(2))
     assert(got(1) == java.time.Period.ofMonths(3))
   }
+
+  test("source table functions reject unknown options, bad values and a wrong arity") {
+    val dir = java.nio.file.Files.createTempDirectory("src_opts")
+    val csv = dir.resolve("s.csv")
+    java.nio.file.Files.writeString(csv, "a|b\n1|2\n")
+    val pq = dir.resolve("s.parquet").toString
+    spark.range(1).toDF("a").write.parquet(pq)
+    def error(sql: String): String =
+      intercept[IllegalArgumentException](engine.run(sql).collect()).getMessage
+    // a misspelled key no longer reads with the default delimiter
+    val e1 = error(s"select * from read_csv('$csv', delimiter => '|')")
+    assert(e1.contains("unknown option(s) delimiter") && e1.contains("accepted: delim, header"), e1)
+    // a header value that is no boolean no longer turns the header off
+    val e2 = error(s"select * from read_csv('$csv', header => 'yes')")
+    assert(e2.contains("header needs true or false") && e2.contains("'yes'"), e2)
+    val e3 = error(s"select * from read_parquet('$pq', x => 1)")
+    assert(e3.contains("unknown option(s) x; accepted: "), e3)
+    val e4 = error("select * from sqlrs_tables(1)")
+    assert(e4.contains("sqlrs_tables needs 0 arguments, got 1"), e4)
+    val e5 = error("select * from read_json()")
+    assert(e5.contains("read_json needs 1 quoted path argument, got 0"), e5)
+    // the accepted spellings still read
+    assert(rows(s"select b from read_csv('$csv', delim => '|', header => 'TRUE')") == Seq(Seq(2)))
+  }
+
+  test("graft_retention_expiry: as_of => 0 is an ingest day; a negative day errors") {
+    engine.run("create table ret0_docs_t(doc_id bigint, source varchar, ingest_day bigint)")
+    engine.run("insert into ret0_docs_t values (1, 'web', 0), (2, 'web', 5)")
+    engine.run("create table ret0_policy_t(source varchar, retention_days bigint)")
+    engine.run("insert into ret0_policy_t values ('web', 0)")
+    // ingest_day = doc_id % 360 puts documents on day 0; with zero
+    // retention a day-0 document expires on day 0, a later one does not
+    assert(rows("select doc_id, age_days from " +
+      "graft_retention_expiry(ret0_docs_t, ret0_policy_t, as_of => 0)") == Seq(Seq(1L, 0L)))
+    val e = intercept[IllegalArgumentException] {
+      engine.run("select * from graft_retention_expiry(ret0_docs_t, ret0_policy_t, as_of => -1)")
+    }
+    assert(e.getMessage.contains("as_of must be >= 0, got -1"), e.getMessage)
+  }
 }
