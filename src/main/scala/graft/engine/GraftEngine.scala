@@ -21,6 +21,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{AsofJoin, Audit, Curriculum, Decontaminate, Dedup, Graph, Privacy, Similarity, Tokenizer}
+import graft.plans.OneTask
 
 import GraftEngine.{Bound, Opt, Tokens}
 
@@ -63,9 +64,12 @@ import GraftEngine.{Bound, Opt, Tokens}
   * validator ([[tableFunction]]) checks every call against it. A SELECT is
   * parsed once by Spark's parser, each table-function call in the tree is
   * replaced by the analyzed plan of the DataFrame its body builds, and the
-  * expanded tree goes through Catalyst untouched — the engine adds
-  * statement routing, never its own execution path, so plans stay fully
-  * optimizable and distributed.
+  * expanded tree goes through Catalyst — the engine adds statement routing,
+  * never its own execution path, so plans stay fully optimizable and
+  * distributed. One rewrite sits between analysis and optimization: a
+  * statement whose every input Spark reads as one partition, and which
+  * would plan an exchange, is planned as one task ([[graft.plans.OneTask]]),
+  * as the reference runs every query as one in-process pipeline.
   */
 class GraftEngine(val spark: SparkSession) {
 
@@ -461,8 +465,12 @@ class GraftEngine(val spark: SparkSession) {
     * ([[expandTableFunctions]]); and the expanded tree is analyzed under
     * the same tracker. An unresolved-column failure retries once on the
     * same expanded tree with select-list aliases substituted into WHERE, so
-    * no table-function body runs twice. With `relation`, `s` is a relation
-    * read whole, as `select * from <s>` (COPY TO's source).
+    * no table-function body runs twice. The analyzed plan then goes through
+    * [[graft.plans.OneTask]], which plans a statement over one-partition
+    * inputs as one task (no exchange, no broadcast), and the DataFrame is
+    * built once over the result, without analyzing it again. With
+    * `relation`, `s` is a relation read whole, as `select * from <s>` (COPY
+    * TO's source).
     */
   private def runSelect(s: Tokens, relation: Boolean = false): DataFrame = {
     val sql = selectText(s, relation)
@@ -472,16 +480,16 @@ class GraftEngine(val spark: SparkSession) {
     }
     requireFromSubqueryAlias(parsed)
     val expanded = expandTableFunctions(parsed)
-    val df =
-      try GraftSqlBridge.ofRows(spark, expanded, tracker)
+    val analyzed =
+      try GraftSqlBridge.analyze(spark, expanded, tracker)
       catch {
         case e: AnalysisException if e.getMessage.contains("UNRESOLVED_COLUMN") =>
           val repaired = aliasesIntoWhere(expanded)
           if (repaired fastEquals expanded) throw e
-          GraftSqlBridge.ofRows(spark, repaired, tracker)
+          GraftSqlBridge.analyze(spark, repaired, tracker)
       }
-    rejectVarcharNumericComparison(df)
-    df
+    rejectVarcharNumericComparison(analyzed)
+    GraftSqlBridge.ofAnalyzed(spark, OneTask(spark, analyzed), tracker)
   }
 
   /** `s`'s text for Spark's parser: `OFFSET m LIMIT n`, which sqlparser-rs
@@ -990,9 +998,8 @@ class GraftEngine(val spark: SparkSession) {
     * BEFORE Catalyst's implicit casts. Explicit user-written CASTs are
     * tagged by the parser (Cast.USER_SPECIFIED_CAST) and stay allowed.
     */
-  private def rejectVarcharNumericComparison(df: DataFrame): Unit = {
+  private def rejectVarcharNumericComparison(analyzed: LogicalPlan): Unit = {
     import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Cast, Expression, SubqueryExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     def origType(e: Expression): DataType = e match {
       case c: Cast if c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty => origType(c.child)
       case other => other.dataType
@@ -1014,7 +1021,7 @@ class GraftEngine(val spark: SparkSession) {
         }
       }
     }
-    checkPlan(df.queryExecution.analyzed)
+    checkPlan(analyzed)
   }
 
   /** Reference error semantics: a subquery in FROM must carry an alias

@@ -31,7 +31,10 @@ import org.apache.spark.sql.internal.SQLConf
   *    materialized query stage or a relation with a row count, and no
   *    generator (whose fan-out the estimate ignores) lies between.
   * An ORDER BY … LIMIT is a limit over the sort and plans as
-  * `TakeOrderedAndProject`, which has no exchange to remove.
+  * `TakeOrderedAndProject`, which has no exchange to remove. A statement
+  * whose every input is one partition, run through
+  * [[graft.engine.GraftEngine]], is planned as one task with no exchange
+  * at all ([[OneTask]]), so no stage runs for this rule to see.
   *
   * Injected with `injectRuntimeOptimizerRule` (see [[graft.GraftSession]]).
   */

@@ -24,13 +24,34 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** [[ofRows]] under a caller's planning tracker — the one `spark.sql`
-    * itself uses — so phases measured before analysis (a parse) land in
-    * the DataFrame's `queryExecution.tracker` beside the later ones.
+  /** `plan` analyzed and checked under a caller's planning tracker, as
+    * `QueryExecution` analyzes it, for a caller that rewrites the analyzed
+    * plan before building its DataFrame with [[ofAnalyzed]].
     */
-  def ofRows(spark: SparkSession, plan: LogicalPlan,
-      tracker: QueryPlanningTracker): DataFrame =
+  def analyze(spark: SparkSession, plan: LogicalPlan, tracker: QueryPlanningTracker): LogicalPlan = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.withActive(tracker.measurePhase(QueryPlanningTracker.ANALYSIS)(
+      session.sessionState.analyzer.executeAndCheck(plan, tracker)))
+  }
+
+  /** [[ofRows]] over a plan from [[analyze]], rewritten or not, under the
+    * same tracker — the one `spark.sql` itself uses — so phases measured
+    * before analysis (a parse) land in the DataFrame's
+    * `queryExecution.tracker` beside the later ones. The plan is marked
+    * analyzed, so the analyzer does not run over it again.
+    */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan, tracker: QueryPlanningTracker): DataFrame = {
+    plan.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan, tracker)
+  }
+
+  /** `plan` with each subtree the cache manager holds replaced by its
+    * persisted frame, as `QueryExecution` substitutes them.
+    */
+  def withCachedData(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    val cache = spark.sharedState.cacheManager
+    if (cache.isEmpty) plan else cache.useCachedData(plan)
+  }
 
   /** Eagerly convert a public Column to its Catalyst expression through the
     * session's converter (`ExpressionUtils.expression` would wrap it in a

@@ -30,9 +30,19 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val schema = StructType(Seq(
     StructField("k", IntegerType), StructField("g", IntegerType), StructField("v", IntegerType)))
 
+  /** The rows as a parquet table of two files. A one-partition table would
+    * run as one task with no exchange at all (`graft.plans.OneTask`), and
+    * the sort would have no stage to follow.
+    */
+  private lazy val twoFiles: String = {
+    val dir = Files.createTempDirectory("small_sort_t").resolve("t").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema).write.parquet(dir)
+    dir
+  }
+
   private def engineOn(s: org.apache.spark.sql.SparkSession): GraftEngine = {
     val e = new GraftEngine(s)
-    e.createTable("small_sort_t", schema, rows)
+    e.createParquetTable("small_sort_t", twoFiles)
     e
   }
 
