@@ -11,11 +11,11 @@ import org.apache.spark.sql.SparkSession
   * One warm-up pass amortizes JIT/codegen so numbers reflect steady-state
   * throughput, which is what extrapolates to a cluster run.
   *
-  * Artifact discipline (learned in round 5, where a reps=3 default blew
-  * the harness capture window and the round recorded no numbers at all):
-  *   - reps defaults to 1 so a full pass fits the driver's wall-clock
-  *     budget; min-of-N (`SPARK_GRAFT_BENCH_REPS=3`) is the documented
-  *     local opt-in for shedding container CPU-starvation noise.
+  * Artifact discipline (learned in round 5, where three timed passes per
+  * query blew the harness capture window and the round recorded no
+  * numbers at all):
+  *   - each query is timed once, so a full pass fits the driver's
+  *     wall-clock budget.
   *   - a `{"query":...,"sec":...}` line is printed AS EACH QUERY
   *     COMPLETES, so even a timed-out run leaves per-query numbers
   *     behind instead of nothing.
@@ -27,11 +27,11 @@ import org.apache.spark.sql.SparkSession
   *     it — the driver's parser then recorded nothing (r6 `parsed:
   *     null`). The fast queries it drops are all in the incremental
   *     per-query lines; `n_queries` carries the true count.
-  *   - with reps=1 the single warm-up only covers the first query's
-  *     JIT/codegen; other queries' sole pass includes their own cold
-  *     Catalyst/codegen compile (~0.3-0.5 s floor). Steady-state numbers
-  *     need the min-of-N opt-in — or the `steady` field (below), which
-  *     covers the queries that matter for the perf read.
+  *   - the single warm-up only covers the first query's JIT/codegen;
+  *     other queries' sole pass includes their own cold Catalyst/codegen
+  *     compile (~0.3-0.5 s floor). The `steady` field (below) carries
+  *     the steady-state numbers of the queries that matter for the perf
+  *     read.
   *   - the summary line is emitted on BOTH stdout and stderr: under sbt
   *     the stdout copy is wrapped in a `[info] ` prefix that defeats a
   *     parser expecting a line starting with `{`; stderr passes through
@@ -46,13 +46,17 @@ import org.apache.spark.sql.SparkSession
   *
   * == The three-signal read (wall / cpu / gc), plus `steady` ==
   *
-  * Every per-query line carries `cpu` and `gc` next to `sec`:
+  * Every per-query line is the query's [[QueryProfile]]: `cpu` and `gc`
+  * next to `sec`, then the task, spill, memory and JIT columns and the
+  * query's `jobs`:
   *   - `cpu`: PROCESS CPU seconds the query consumed (local[32] runs
-  *     executors in-process, so the delta of the JVM's process-CPU
-  *     counter is the exact task + codegen + GC cost, with none of the
-  *     async-listener races of per-task metrics).
-  *   - `gc`: stop-the-world COLLECTION seconds over the same interval
-  *     (sum of `GarbageCollectorMXBean.getCollectionTime` deltas).
+  *     executors in-process, so this is the task + codegen + GC cost).
+  *   - `gc`: stop-the-world COLLECTION seconds over the same interval.
+  *   - `jit`: JIT compilation seconds. 269 queries × fresh whole-stage-
+  *     codegen classes queue thousands of compilations; when the task
+  *     threads monopolize the cores the compiler backlog grows and later
+  *     queries run their hot loops interpreted — CPU multiplies, GC stays
+  *     flat, and a steady re-run lands back at the historical number.
   *
   * The read, in order:
   *   1. wall inflated, cpu flat ⇒ the box was CONTENDED — the query did
@@ -97,6 +101,14 @@ object Bench {
     */
   val SteadyCount = 10
 
+  /** Timed laps per steady re-run; the reported lap is the min-wall one.
+    * Three, not two (r15): the steady channel is the artifact's LOWER
+    * BOUND, and on 4-5 s queries two laps left ~±0.5 s of scheduler
+    * jitter unsheared — exactly the margin that made r14 steadies read
+    * ABOVE their own first-pass walls (g13 7.9 vs 6.9, d13 7.6 vs 4.9).
+    */
+  val SteadyReps = 3
+
   /** Env var with a same-name system-property override: lets an
     * in-process orchestrator (`tools.Rehearse`) parameterize a Bench
     * pass it invokes as a plain method call — a JVM cannot set its own
@@ -109,16 +121,8 @@ object Bench {
   private def envOrProp(key: String): Option[String] =
     sys.props.get(key).orElse(sys.env.get(key))
 
-  /** One query pass's measurements. wall/cpu/gc are the r18 three-signal
-    * read; the rest are the r20 memory-pressure columns (r19 verdict task
-    * 1c — the 631 s collapse could not be adjudicated from wall/cpu/gc
-    * alone): task-level spill bytes, peak per-task execution memory, task
-    * time/count/failures, and BlockManager storage used at query end.
-    */
-  final case class Pass(wall: Double, cpu: Double, gc: Double,
-      spillMem: Long = 0L, spillDisk: Long = 0L, peakExec: Long = 0L,
-      taskSec: Double = 0.0, tasks: Int = 0, taskFail: Int = 0,
-      storageUsed: Long = 0L, jit: Double = 0.0)
+  /** A query that failed: -1 wall, cpu and gc. */
+  private val Failed = QueryProfile(-1.0, -1.0, -1.0)
 
   def main(args: Array[String]): Unit = {
     val sfDir = envOrProp("SPARK_GRAFT_SF_DIR").getOrElse("/root/testdata/sf0.1")
@@ -127,8 +131,6 @@ object Bench {
     // count (guide §2; the r19 32-way-everything collapse) — see
     // Tables.adaptiveWidth
     Tables.applySessionWidth(spark, sfDir)
-    val metrics = new graft.tools.QueryMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
 
     // names are interpolated into JSON unescaped — enforce the safe set
     SparkEntry.queries.keys.foreach { n =>
@@ -136,88 +138,21 @@ object Bench {
         s"bench: query name '$n' must match [A-Za-z0-9_-]+ (it is emitted raw in JSON)")
     }
 
-    // process-CPU counter: in local mode every executor thread lives in
-    // THIS JVM, so the counter's delta across a query is exactly the CPU
-    // the query consumed (tasks + codegen + GC) — synchronous and exact,
-    // unlike task-metrics listeners whose events post asynchronously.
-    // Pattern-matched, not cast: on a JVM whose OperatingSystemMXBean
-    // does not implement the com.sun interface the channel degrades to
-    // -1 instead of a ClassCastException killing the whole run.
-    val osBean: Option[com.sun.management.OperatingSystemMXBean] =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => Some(b)
-        case _ => None
-      }
-    def cpuNow(): Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L) // ns
-
-    // stop-the-world GC milliseconds since JVM start, summed across
-    // collectors (young + old); a collector that doesn't expose the
-    // counter reports -1 and is skipped. The GarbageCollectorMXBean list
-    // can grow at runtime in exotic setups, but collectors never leave —
-    // re-enumerating per call keeps the delta monotone either way.
-    def gcNow(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-
-    // cumulative JIT compilation milliseconds (all compiler threads): the
-    // r20 fourth signal. 269 queries × fresh whole-stage-codegen classes
-    // per query queue thousands of compilations; when 32 task threads
-    // monopolize the cores the compiler backlog grows and later queries
-    // run their hot loops interpreted — CPU multiplies, GC stays flat,
-    // and a steady re-run (code compiled by then) lands back at the
-    // historical number. A per-query `jit` delta separates "the compiler
-    // was drowning" from "the query computed more".
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitNow(): Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime
-      else -1L
-
-    /** One timed pass: wall/cpu/gc plus the spill/peak-memory columns. */
+    /** One timed pass, profiled. */
     def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Pass = {
-      val s0 = metrics.snapshot(spark.sparkContext)
-      metrics.resetPeak()
-      val j0 = jitNow()
-      val c0 = cpuNow()
-      val g0 = gcNow()
-      val t0 = System.nanoTime()
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QueryProfile =
       // NonFatal only: an OOM/IE must kill the run — timings measured on
       // a broken JVM would silently poison every later query's number
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try QueryProfile(spark) {
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        finally graft.operators.Dedup.unpersistAll() // caches die with the query
+      }._2
       catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(
             s"bench: query $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          return Pass(-1.0, -1.0, -1.0)
+          Failed
       }
-      finally graft.operators.Dedup.unpersistAll() // caches die with the query
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = if (c0 < 0) -1.0 else (cpuNow() - c0) / 1e9
-      val gc = (gcNow() - g0) / 1e3
-      val s1 = metrics.snapshot(spark.sparkContext)
-      Pass(wall, cpu, gc,
-        spillMem = s1._1 - s0._1, spillDisk = s1._2 - s0._2,
-        peakExec = s1._3, taskSec = (s1._4 - s0._4) / 1e3,
-        tasks = s1._5 - s0._5, taskFail = s1._6 - s0._6,
-        storageUsed = metrics.storageUsed(spark.sparkContext),
-        jit = if (j0 < 0) -1.0 else (jitNow() - j0) / 1e3)
-    }
-
-    // min-of-N per query (opt-in): transient CPU-starvation episodes
-    // inflate single-pass timings 2-10× on random queries; the minimum of
-    // repeated passes is the steady-state number (a starved pass can only
-    // ADD time). Defaults to 1 — the driver's capture window can't afford
-    // three full passes. The reported cpu/gc are the min-wall rep's.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
-    def run(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Pass = {
-      val times = (1 to reps).map(_ => runOnce(name, fn))
-      if (times.exists(_.wall < 0)) Pass(-1.0, -1.0, -1.0)
-      else times.minBy(_.wall)
-    }
 
     // Between-query purge (r20): release the cache-side state a pass can
     // accumulate — CacheManager entries and tracked checkpoint blocks —
@@ -232,9 +167,8 @@ object Bench {
     //     269 full collections churn code-cache/class state for nothing.
     // So: clearCache + unpersistAll only — O(entries) bookkeeping, no
     // collection, keeps the "caches die with the query" contract airtight
-    // even against an untracked persist. PURGE=0 disables.
-    val purge = sys.env.getOrElse("SPARK_GRAFT_BENCH_PURGE", "1") != "0"
-    def purgeAccumulatedState(): Unit = if (purge) {
+    // even against an untracked persist.
+    def purgeAccumulatedState(): Unit = {
       spark.catalog.clearCache()
       graft.operators.Dedup.unpersistAll()
     }
@@ -305,13 +239,13 @@ object Bench {
     purgeAccumulatedState()
     val results = names.zipWithIndex.map { case ((name, fn), i) =>
       if (i == names.length / 2) probes += probeSec()
-      val p = run(name, fn)
+      val p = runOnce(name, fn)
       // incremental artifact: one line per completed query, flushed, so a
       // run killed mid-pass still leaves everything finished so far
       println(s"""{"query":"$name","sec":${p.wall},"cpu":${p.cpu},"gc":${r3(p.gc)},""" +
         s""""spill_mb":${mb(p.spillMem)},"spill_disk_mb":${mb(p.spillDisk)},""" +
         s""""peak_exec_mb":${mb(p.peakExec)},"task_sec":${r3(p.taskSec)},""" +
-        s""""tasks":${p.tasks},"task_fail":${p.taskFail},"storage_mb":${mb(p.storageUsed)},"jit":${r3(p.jit)}}""")
+        s""""tasks":${p.tasks},"task_fail":${p.taskFail},"storage_mb":${mb(p.storageUsed)},"jit":${r3(p.jit)},"jobs":${p.jobs}}""")
       Console.out.flush()
       purgeAccumulatedState()
       (name, p)
@@ -329,12 +263,6 @@ object Bench {
     val steadyTargets = results.filter(_._2.wall >= 0).sortBy(-_._2.wall)
       .take(SteadyCount).map(_._1)
     val fnByName = names.toMap
-    // min-of-3 by default (r15, up from 2): the steady channel is the
-    // artifact's LOWER BOUND, and on 4-5 s queries two reps leave
-    // ~±0.5 s of scheduler jitter unsheared — exactly the margin that
-    // made r14 steadies read ABOVE their own first-pass walls (g13
-    // 7.9 vs 6.9, d13 7.6 vs 4.9) and cost the read its tie-breaker.
-    val steadyReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_STEADY_REPS", "3").toInt
     // Before the loop: drop every cache the pass accumulated (model
     // PARQUETS are files on disk — clearing the CacheManager costs
     // nothing but stale pages) and collect the pass's garbage ONCE,
@@ -352,11 +280,11 @@ object Bench {
     // steady-inversion anomaly was unadjudicable because the steady
     // channel recorded wall alone — contention vs recompute needs the
     // same three-signal read as the first pass). Reported values are
-    // the min-WALL rep's, consistent with the first-pass convention.
-    val steady: Map[String, Pass] = steadyTargets.map { n =>
-      val laps = (1 to steadyReps).map(_ => runOnce(n, fnByName(n)))
+    // the min-WALL lap's.
+    val steady: Map[String, QueryProfile] = steadyTargets.map { n =>
+      val laps = (1 to SteadyReps).map(_ => runOnce(n, fnByName(n)))
         .filter(_.wall >= 0)
-      val best = laps.minByOption(_.wall).getOrElse(Pass(-1.0, -1.0, -1.0))
+      val best = laps.minByOption(_.wall).getOrElse(Failed)
       println(s"""{"query":"$n","steady":${r3(best.wall)},"steady_cpu":${r3(best.cpu)},"steady_gc":${r3(best.gc)}}""")
       Console.out.flush()
       n -> best
@@ -383,7 +311,7 @@ object Bench {
           ",\"tasks\":" + p.tasks +
           ",\"task_fail\":" + p.taskFail +
           ",\"storage_mb\":" + mb(p.storageUsed) +
-          ",\"jit\":" + r3(p.jit) + st + "}"
+          ",\"jit\":" + r3(p.jit) + st + ",\"jobs\":" + p.jobs + "}"
       }.mkString(
         s"""{"sf":"$sfDir","fit_sec":$fitSec,"fit":$fitJson,""" +
           s""""probe_sec":${probes.mkString("[", ",", "]")},"queries":{""",

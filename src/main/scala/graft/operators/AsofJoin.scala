@@ -38,7 +38,35 @@ object AsofJoin {
       right: DataFrame,
       key: String,
       ord: String,
-      payload: Seq[String]): DataFrame = {
+      payload: Seq[String]): DataFrame =
+    sweep(left, right, key, ord, payload, ahead = false)
+
+  /** Forward as-of join: attach the EARLIEST right row at-or-after each
+    * left row (smallest `ord` with right.ord >= left.ord) sharing the key —
+    * the "next event" lookup (next maintenance window, next price tick).
+    * Same one-shuffle union + linear-sweep construction as [[backward]],
+    * mirrored: the running carry is `first(_, ignoreNulls)` over the
+    * FOLLOWING frame, and rights sort AFTER lefts at equal ord so a
+    * same-ord right row matches inclusively (ASOF `>=` semantics).
+    */
+  def forward(
+      left: DataFrame,
+      right: DataFrame,
+      key: String,
+      ord: String,
+      payload: Seq[String]): DataFrame =
+    sweep(left, right, key, ord, payload, ahead = true)
+
+  /** The sweep both directions share: `ahead` carries the next right row
+    * back instead of the previous one forward.
+    */
+  private def sweep(
+      left: DataFrame,
+      right: DataFrame,
+      key: String,
+      ord: String,
+      payload: Seq[String],
+      ahead: Boolean): DataFrame = {
     val leftCols = left.columns.toSeq
     require(!leftCols.exists(payload.contains),
       s"payload columns ${payload.filter(leftCols.contains)} collide with left columns")
@@ -54,63 +82,25 @@ object AsofJoin {
     // SQL join semantics: a NULL key matches nothing. The window below
     // groups all null keys into ONE partition, so null-key right rows must
     // be dropped up front (null-key left rows then simply find no payload).
+    // A right row sorts next to a left row at the same ord on the side the
+    // carry comes from, so it matches inclusively either way.
     val r2 = right
       .filter(col(key).isNotNull)
       .select(
-        (Seq(col(key), col(ord), lit(0).as("__side"),
+        (Seq(col(key), col(ord), lit(if (ahead) 2 else 0).as("__side"),
           struct(payload.map(col): _*).as("__p")) ++
           leftCols.filterNot(c => c == key || c == ord)
             .map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
 
     val unioned = l2.unionByName(r2.select(l2.columns.map(col): _*))
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(ord), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ordered = Window.partitionBy(col(key)).orderBy(col(ord), col("__side"))
+    val carry =
+      if (ahead) first(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+      else last(col("__p"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     val carried = unioned
-      .withColumn("__match", last(col("__p"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-
-    val out = leftCols.map(col) ++ payload.map(p => col(s"__match.$p").as(p))
-    carried.select(out: _*)
-  }
-
-  /** Forward as-of join: attach the EARLIEST right row at-or-after each
-    * left row (smallest `ord` with right.ord >= left.ord) sharing the key —
-    * the "next event" lookup (next maintenance window, next price tick).
-    * Same one-shuffle union + linear-sweep construction as [[backward]],
-    * mirrored: the running carry is `first(_, ignoreNulls)` over the
-    * FOLLOWING frame, and rights sort AFTER lefts at equal ord so a
-    * same-ord right row matches inclusively (ASOF `>=` semantics).
-    */
-  def forward(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      ord: String,
-      payload: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    require(!leftCols.exists(payload.contains),
-      s"payload columns ${payload.filter(leftCols.contains)} collide with left columns")
-
-    val l2 = left
-      .withColumn("__side", lit(1))
-      .withColumn("__p", lit(null).cast(
-        org.apache.spark.sql.types.StructType(
-          right.select(payload.map(col): _*).schema.fields)))
-    val r2 = right
-      .filter(col(key).isNotNull)
-      .select(
-        (Seq(col(key), col(ord), lit(2).as("__side"),
-          struct(payload.map(col): _*).as("__p")) ++
-          leftCols.filterNot(c => c == key || c == ord)
-            .map(c => lit(null).cast(left.schema(c).dataType).as(c))): _*)
-
-    val unioned = l2.unionByName(r2.select(l2.columns.map(col): _*))
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(ord), col("__side"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val carried = unioned
-      .withColumn("__match", first(col("__p"), ignoreNulls = true).over(w))
+      .withColumn("__match", carry)
       .filter(col("__side") === 1)
 
     val out = leftCols.map(col) ++ payload.map(p => col(s"__match.$p").as(p))

@@ -91,23 +91,26 @@ object Store {
 
   /** Builds `stores` on a pool of 8 in [[schedule]] order and returns
     * each store's wall seconds inside the pooled pass (their sum exceeds
-    * the pass's wall under overlap). A build that throws a non-fatal
-    * error reports -1 against its own name (and on stderr) while its
-    * siblings keep building; its holder retries when a consumer first
+    * the pass's wall under overlap). A store's clock starts once its
+    * declared dependencies are built, so it does not count the time it
+    * waits on them. A build that throws a non-fatal error, its own or a
+    * dependency's, reports -1 against its own name (and on stderr) while
+    * its siblings keep building; its holder retries when a consumer first
     * reads it. An OOM still kills the run.
     */
   def prebuild(s: SparkSession, dir: String, stores: Seq[Store[_]]): Seq[(String, Double)] = {
-    def timed(st: Store[_]): (String, Double) = {
-      val t0 = System.nanoTime()
-      try st(s, dir)
-      catch {
+    def timed(st: Store[_]): (String, Double) =
+      try {
+        st.deps.foreach(_(s, dir))
+        val t0 = System.nanoTime()
+        st(s, dir)
+        st.name -> math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000
+      } catch {
         case NonFatal(e) =>
           System.err.println(s"bench: store build '${st.name}' FAILED " +
             s"(its consumers will fit inline): ${e.getClass.getName}: ${e.getMessage}")
-          return st.name -> -1.0
+          st.name -> -1.0
       }
-      st.name -> math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000
-    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)

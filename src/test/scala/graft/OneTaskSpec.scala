@@ -51,11 +51,11 @@ class OneTaskSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     */
   private def run(sql: String, s: Int): (Seq[Row], SparkPlan, Int) = {
     val e = engine
-    val ((rows, plan), jobs) = JobCount(spark) {
+    val ((rows, plan), profile) = QueryProfile(spark) {
       val df = e.run(sql.replace("{s}", s.toString))
       (df.collect().toSeq, df.queryExecution.executedPlan)
     }
-    (rows, plan, jobs)
+    (rows, plan, profile.jobs)
   }
 
   private def exchanges(p: SparkPlan): Int = collect(p) { case e: Exchange => e }.size

@@ -1166,7 +1166,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("a2's recall@10 at the gate SF holds its measured floor") {
     // pins the pruned-probe (nlist=16, nprobe=4) recall at the gate scale
     // factor so a centroid-quality regression breaks sbt test instead of
-    // only showing in a manual RecallProbe run. The floor is the measured
+    // only showing in a hand-run recall measurement. The floor is the measured
     // value (0.44 on sf0.01's uniform-random embeddings — there is no
     // cluster structure to exploit, so recall tracks the scanned fraction
     // plus top-k overlap luck) minus slack; a2p (full probe) pins

@@ -117,8 +117,9 @@ class SmallSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val sql = "SELECT k, count(*) AS n FROM small_sort_t GROUP BY k ORDER BY k"
     run(engine, sql)
     run(ranged, sql)
-    val ((got, _), jobs) = JobCount(spark)(run(engine, sql))
-    val ((want, _), rangedJobs) = JobCount(spark)(run(ranged, sql))
+    val ((got, _), oneTask) = QueryProfile(spark)(run(engine, sql))
+    val ((want, _), rangedSort) = QueryProfile(spark)(run(ranged, sql))
+    val (jobs, rangedJobs) = (oneTask.jobs, rangedSort.jobs)
     assert(got == want)
     assert(rangedJobs - jobs == 2, s"one task: $jobs jobs, range-partitioned: $rangedJobs")
   }

@@ -28,20 +28,22 @@ class SourceSchemaSpec extends AnyFunSuite {
     val engine = new GraftEngine(spark)
     val file = tmp("t.parquet")
     writeParquet(file, "SELECT id AS a FROM range(3)")
-    val (first, inferJobs) = JobCount(spark)(engine.readParquet(file.toString))
-    val (again, jobs) = JobCount(spark)(engine.readParquet(file.toString))
+    val (first, inferRead) = QueryProfile(spark)(engine.readParquet(file.toString))
+    val (again, againRead) = QueryProfile(spark)(engine.readParquet(file.toString))
+    val (inferJobs, jobs) = (inferRead.jobs, againRead.jobs)
     assert(inferJobs == 1 && jobs == 0, s"first read: $inferJobs jobs, second: $jobs")
     assert(first.columns.toSeq == Seq("a") && again.columns.toSeq == Seq("a"))
     assert(again.collect().map(_.getLong(0)).toSet == Set(0L, 1L, 2L))
 
     writeParquet(file, "SELECT id AS a, id * 10 AS b FROM range(4)")
-    val (rewritten, reinferJobs) = JobCount(spark)(engine.readParquet(file.toString))
+    val (rewritten, reinferRead) = QueryProfile(spark)(engine.readParquet(file.toString))
+    val reinferJobs = reinferRead.jobs
     assert(reinferJobs == 1)
     assert(rewritten.columns.toSeq == Seq("a", "b"))
     assert(rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       (0L until 4L).map(i => (i, i * 10)).toSet)
     // a path and its qualified spelling are one entry
-    val (_, qualified) = JobCount(spark)(engine.readParquet(s"file://$file"))
+    val qualified = QueryProfile(spark)(engine.readParquet(s"file://$file"))._2.jobs
     assert(qualified == 0)
   }
 
@@ -50,7 +52,7 @@ class SourceSchemaSpec extends AnyFunSuite {
     val dir = Files.createDirectories(tmp("events"))
     Files.writeString(dir.resolve("a.json"), "{\"x\": 1}\n{\"x\": 2}\n")
     assert(engine.readJson(dir.toString).columns.toSeq == Seq("x"))
-    val (_, jobs) = JobCount(spark)(engine.readJson(dir.toString))
+    val jobs = QueryProfile(spark)(engine.readJson(dir.toString))._2.jobs
     assert(jobs == 0)
     Files.writeString(dir.resolve("b.json"), "{\"x\": 3, \"y\": \"q\"}\n")
     val grown = engine.readJson(dir.toString)
@@ -74,11 +76,12 @@ class SourceSchemaSpec extends AnyFunSuite {
     assert(bare.columns.toSeq == Seq("column_1", "column_2"))
     assert(bare.collect().toSeq == Seq(Row("a", "b"), Row("1", "2"), Row("3", "4")))
     // each option set was inferred once: reading any of them again runs no job
-    val (again, jobs) = JobCount(spark) {
+    val (again, reread) = QueryProfile(spark) {
       engine.readCsv(path, header = false, delim = ";")
       engine.readCsv(path, header = true, delim = ",")
       engine.readCsv(path, header = true, delim = ";")
     }
+    val jobs = reread.jobs
     assert(jobs == 0)
     assert(again.collect().toSeq == Seq(Row(1, 2), Row(3, 4)))
   }

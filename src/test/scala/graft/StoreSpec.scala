@@ -82,6 +82,16 @@ class StoreSpec extends AnyFunSuite {
     assert(flaky(spark, dir) == 2 && failing.get() == 2, "a built store is memoized")
   }
 
+  test("prebuild does not charge a store the time it waits on its dependencies") {
+    val dir = s"store-spec-${java.util.UUID.randomUUID()}"
+    val slow = Store.value("slow") { (_, _) => Thread.sleep(500); 1 }
+    val quick = Store.value("quick", slow)((s, d) => slow(s, d) + 1)
+    val got = Store.prebuild(spark, dir, Seq(quick, slow)).toMap
+    assert(got("slow") >= 0.5, got.toString)
+    assert(got("quick") >= 0.0 && got("quick") < 0.25, got.toString)
+    assert(quick(spark, dir) == 2)
+  }
+
   test("the real table: acyclic, each store once, longest chain first") {
     val table = Pipeline.stores
     // every dependency sits earlier in the table: a topological order,
